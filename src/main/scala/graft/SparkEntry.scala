@@ -39,8 +39,7 @@ object SparkEntry {
     * outlier re-time pass can rebuild it with first-pass semantics —
     * dependencies built earlier in [[cacheBuilds]] order stay cached. */
   def dropCacheEntry(name: String, s: SparkSession, dir: String): Boolean =
-    if (name == "gx_graphx") GxQueries.dropUnionGxCache(s, dir)
-    else graft.sources.Tables.dropDerived(name, s, dir)
+    CacheScope.drop(name, s, dir)
 
   def oracleSql: Map[String, String] =
     GraphQueries.oracles ++ AnalyticsQueries.oracles ++ PipelineQueries.oracles ++

@@ -26,12 +26,6 @@ object TextFunctions {
   def tokenCountSql(c: String): String =
     s"CAST(CASE WHEN length(trim($c)) = 0 THEN 0 ELSE len(${tokensSql(c)}) END AS INT)"
 
-  /** BPE-ish subword proxy: count of non-overlapping word/number/punct
-    * matches — a deterministic stand-in for a real tokenizer's token count.
-    * Implemented by stripping everything that is NOT a match boundary. */
-  def regexTokenCount(c: Column): Column =
-    size(filter(split(c, "(?=[^a-zA-Z0-9])|(?<=[^a-zA-Z0-9])"), x => length(x) > 0))
-
   /** Normalized fingerprint: md5 of lowercased, whitespace-collapsed text
     * (rolling-hash-style document identity). */
   def fingerprint(c: Column): Column =

@@ -16,27 +16,6 @@ import graft.KinGraph
   * power-law graphs at scale. */
 object GraphXBridge {
 
-  /** Build a GraphX graph keyed by dense ids; vertex attr = key. */
-  private val graphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Graph[String, Int]]()
-
-  /** Memoized graph build keyed by an explicit cache key (e.g. dataset
-    * path): the vertex-id assignment + id joins + edge partitioning run
-    * once per dataset per session, shared by all algorithm calls. */
-  def toGraphXCached(g: KinGraph, key: String): Graph[String, Int] =
-    graphCache.computeIfAbsent(key, _ => {
-      val gx = toGraphX(g)
-      gx.cache()
-      gx
-    })
-
-  /** Drop one memoized graph (unpersist vertex+edge RDDs + forget) — used
-    * by Bench's outlier re-time pass to rebuild the cache entry cold. */
-  def dropCached(key: String): Boolean = {
-    val g = graphCache.remove(key)
-    if (g != null) { g.unpersist(blocking = true); true } else false
-  }
-
   /** Above this node count the xxhash64 id assignment switches to
     * collision-safe dense ids: birthday-bound collision probability is
     * ~n²/2⁶⁵, which crosses ~3% at 10⁹ keys — real at 100 TB scale.

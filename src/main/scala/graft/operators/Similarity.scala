@@ -215,23 +215,6 @@ object Similarity {
       .select("query_id", "vec_id", "neg_label", "cos_micro", "rank")
   }
 
-  /** Near-duplicate vector pairs: cosine >= threshold, candidates from
-    * shared LSH buckets in any table (no all-pairs product). */
-  def cosineNearDupPairs(corpus: DataFrame, threshold: Double): DataFrame = {
-    val bucketed = lshBucketed(corpus.select(col("id"), col("vec")), inferDim(corpus))
-    val a = bucketed.select(col("table"), col("bucket"), col("id").as("a"), col("vec").as("va"))
-    val b = bucketed.select(col("table"), col("bucket"), col("id").as("b"), col("vec").as("vb"))
-    val pairIds = a.select(col("table"), col("bucket"), col("a"))
-      .join(b.select(col("table"), col("bucket"), col("b")), Seq("table", "bucket"))
-      .filter(col("a") < col("b"))
-      .select("a", "b").distinct()
-    pairIds
-      .join(corpus.select(col("id").as("a"), col("vec").as("va")), "a")
-      .join(corpus.select(col("id").as("b"), col("vec").as("vb")), "b")
-      .select(col("a"), col("b"), round(cosine(col("va"), col("vb")), 4).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
   /** Cross-corpus banded similarity join — BOTH sides corpus-sized,
     * NEITHER broadcast (the new-crawl × existing-corpus shape; every
     * other retrieval op here broadcasts its small query side). Both
@@ -287,13 +270,10 @@ object Similarity {
     def release(): Unit = assigned.unpersist(false)
   }
 
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfIndex]()
-
   /** Fit the KMeans coarse quantizer and assign every corpus vector to its
-    * cell. `cacheKey` memoizes the built index session-wide (like
-    * `Tables.cached`) so repeated query batches reuse it instead of
-    * re-clustering the corpus per call. */
+    * cell. `cacheKey` memoizes the built index session-wide (a
+    * `CacheScope.sessionOf` entry) so repeated query batches reuse it
+    * instead of re-clustering the corpus per call. */
   def ivfBuild(corpus: DataFrame, nlist: Int = 16,
                cacheKey: Option[String] = None): IvfIndex = {
     // un-memoized indexes are operator-local: route the persist through
@@ -320,11 +300,8 @@ object Similarity {
       IvfIndex(assigned, centroids, nlist)
     }
     cacheKey match {
-      // session identity in the key: a memoized index bound to a stopped
-      // SparkSession must not be served to its successor
-      case Some(key) => ivfIndexCache.computeIfAbsent(
-        s"$key|$nlist|${System.identityHashCode(corpus.sparkSession)}",
-        _ => build(scoped = false))
+      case Some(key) => graft.CacheScope.sessionOf(s"ivf|$nlist", corpus.sparkSession, key)(
+        build(scoped = false))((index, blocking) => index.assigned.unpersist(blocking))
       case None => build(scoped = true)
     }
   }
@@ -1434,14 +1411,6 @@ object Similarity {
     df.select(col("id"),
       array((0 until outDims).map(d =>
         dot(col("vec"), array(planes(d).map(lit): _*))): _*).as("vec"))
-  }
-
-  /** Top-k by floor-micro cosine in the JL-projected space. */
-  def jlTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-             outDims: Int): DataFrame = {
-    val dim = inferDim(queries)
-    exactTopKMicro(jlProject(corpus, dim, outDims),
-      jlProject(queries, dim, outDims), k)
   }
 
   // --------------------------------------------- graph-navigation ANN

@@ -290,7 +290,11 @@ object GraphOps {
     * label state is referenced once per iteration (the no-message fallback
     * is the INITIAL key, not the previous label — isolated nodes get no
     * messages in any iteration, so the two are equivalent), keeping
-    * lineage a chain; checkpoints only bound plan depth. */
+    * lineage a chain; checkpoints only bound plan depth.
+    *
+    * @param canonFrom when given, MUST be the distinct `u < v`,
+    *   non-self-loop pairs `(u, v)` of `g.edges` (`cache:gx_und` for the
+    *   union graph; GraphOpsSpec pins that). It is trusted unchecked. */
   def labelPropagationSync(g: KinGraph, iters: Int,
                            checkpointEvery: Int = 3,
                            broadcastNodeLimit: Long = 5000000L,
@@ -780,7 +784,11 @@ object GraphOps {
     * reused narrow by the degree aggregation, the per-w term join and
     * BOTH sides of the self-join; the only new shuffle is the final
     * (a,b) aggregation, and the top-k is a TakeOrdered, never a global
-    * sort. */
+    * sort.
+    *
+    * @param canonFrom when given, MUST be the distinct `u < v`,
+    *   non-self-loop pairs `(u, v)` of `g.edges` (`cache:gx_und` for the
+    *   union graph; GraphOpsSpec pins that). It is trusted unchecked. */
   def adamicAdar(g: KinGraph, k: Int,
                  hubCapPercentile: Double = 1.0,
                  canonFrom: Option[DataFrame] = None): DataFrame = {
@@ -847,7 +855,11 @@ object GraphOps {
     * join costs Σ deg(w)² over SURVIVING middles only, and the cap is
     * data-adaptive (a percentile, not a constant that goes vacuous across
     * SFs). Degrees join back on the node key (node-sized, shuffle join);
-    * the top-k is a TakeOrdered, never a global sort. */
+    * the top-k is a TakeOrdered, never a global sort.
+    *
+    * @param canonFrom when given, MUST be the distinct `u < v`,
+    *   non-self-loop pairs `(u, v)` of `g.edges` (`cache:gx_und` for the
+    *   union graph; GraphOpsSpec pins that). It is trusted unchecked. */
   def jaccardPairs(g: KinGraph, k: Int,
                    hubCapPercentile: Double = 0.9,
                    canonFrom: Option[DataFrame] = None): DataFrame = {
@@ -951,7 +963,11 @@ object GraphOps {
     * (null = unreached within `rounds`). Returned with the landmark keys
     * so callers can label per-landmark outputs; shared via a session
     * cache by the query layer (gx_closeness and gx_diameter read the
-    * same frame). */
+    * same frame).
+    *
+    * @param canonFrom when given, MUST be the distinct `u < v`,
+    *   non-self-loop pairs `(u, v)` of `g.edges` (`cache:gx_und` for the
+    *   union graph; GraphOpsSpec pins that). It is trusted unchecked. */
   def landmarkBfsState(g: KinGraph, nLandmarks: Int = 4, rounds: Int = 4,
                        checkpointEvery: Int = 2,
                        broadcastNodeLimit: Long = 5000000L,
@@ -1336,7 +1352,8 @@ object GraphOps {
     * contributes 2w to its own node (it appears once in the edge list but
     * twice in the stub count). Exposed unpersisted so callers with a
     * session-shared `wund` can lift this frame into their own shared cache
-    * (gx_louvain_w rides Tables.cached; per-call forms use CacheScope). */
+    * (gx_louvain_w rides CacheScope.session; per-call forms use
+    * CacheScope.cached). */
   def louvainWeightedDeg(wund: DataFrame): DataFrame = {
     val noloop = wund.filter(col("u") =!= col("v"))
     noloop.select(col("u").as("key"), col("w"))
@@ -1822,7 +1839,11 @@ object GraphOps {
     * hash-partitioned ON dst — the per-round min-priority aggregation
     * reuses that partitioning; the node-sized active/MIS/removed frames
     * broadcast under `broadcastNodeLimit` and fall back to shuffle joins
-    * beyond it. Expected O(log n) rounds to empty the active set. */
+    * beyond it. Expected O(log n) rounds to empty the active set.
+    *
+    * @param canonFrom when given, MUST be the distinct `u < v`,
+    *   non-self-loop pairs `(u, v)` of `g.edges` (`cache:gx_und` for the
+    *   union graph; GraphOpsSpec pins that). It is trusted unchecked. */
   def lubyMis(g: KinGraph, rounds: Int,
               checkpointEvery: Int = 1,
               broadcastNodeLimit: Long = 5000000L,
@@ -2057,7 +2078,11 @@ object GraphOps {
     * Scale (the lubyMis pattern): per round two map-side-combinable
     * min-priority aggregations (one per endpoint) + broadcast semi-joins
     * under the node limit; the active edge set only shrinks. Expected
-    * O(log m) rounds. */
+    * O(log m) rounds.
+    *
+    * @param canonFrom when given, MUST be the distinct `u < v`,
+    *   non-self-loop pairs `(u, v)` of `g.edges` (`cache:gx_und` for the
+    *   union graph; GraphOpsSpec pins that). It is trusted unchecked. */
   def greedyMatching(g: KinGraph, rounds: Int,
                      broadcastNodeLimit: Long = 5000000L,
                      canonFrom: Option[DataFrame] = None): DataFrame = {
@@ -2202,7 +2227,11 @@ object GraphOps {
     * over the cached dst-partitioned edge set, one colored-neighbor
     * join, and a Σ(deg+1)-row mex explode over READY nodes only;
     * node-sized frames broadcast under `broadcastNodeLimit`. Expected
-    * O(log n) rounds on random priorities. */
+    * O(log n) rounds on random priorities.
+    *
+    * @param canonFrom when given, MUST be the distinct `u < v`,
+    *   non-self-loop pairs `(u, v)` of `g.edges` (`cache:gx_und` for the
+    *   union graph; GraphOpsSpec pins that). It is trusted unchecked. */
   def jpColoring(g: KinGraph, rounds: Int,
                  broadcastNodeLimit: Long = 5000000L,
                  canonFrom: Option[DataFrame] = None): DataFrame = {
@@ -2452,24 +2481,6 @@ object GraphOps {
     wa.join(wb, col("y2") === col("y")).select(col("x"), col("y"), col("z"))
   }
 
-  /** Triangles `(x, y, z)` in (degree, key) orientation order, one row per
-    * triangle: the wedge x -> y -> z closed by the oriented edge x -> z
-    * (a total order orients every triangle transitively, so the closing
-    * edge is stored exactly as x -> z). The triangle SET is identical to
-    * lexical enumeration — only the join's work distribution changes —
-    * so kTruss hashes are unchanged and the DuckDB twin (kTrussSql)
-    * keeps the simpler lexical form. */
-  private[graft] def degreeOrientedTriangles(e: DataFrame): DataFrame = {
-    // materialize the oriented view once — it is scanned three times
-    // (both wedge roles + the closing edge); without this the degree
-    // broadcast + attach would re-run per scan
-    val eo = degreeOriented(e).localCheckpoint(true)
-    val wc = eo.select(col("a").as("x3"), col("b").as("z3"))
-    orientedWedgesOf(eo)
-      .join(wc, col("x") === col("x3") && col("z") === col("z3"))
-      .select("x", "y", "z")
-  }
-
   /** Edge-EMBEDDEDNESS histogram (Granovetter weak ties): for every
     * undirected edge, its embeddedness = triangle support = |N(u)∩N(v)|,
     * reduced to `(support, n_edges)` — the support-0 row counts the graph's
@@ -2663,12 +2674,16 @@ object GraphOps {
     * the join work itself re-executes per reference.) */
   private def doublingState(succ: DataFrame, rounds: Int,
                             probeFrom: Int = 4): DataFrame = {
-    // probeFrom > rounds disables probing entirely (r19): stability needs
-    // every cycle length to DIVIDE 2^(k-1), so inputs whose cycles are not
-    // powers of two (the planted ρ-map: random ~√n-length cycles) can
-    // structurally never fire a probe — callers that know this skip the
-    // probe jobs AND the __jprev rider column each checkpoint carries
-    val probing = probeFrom <= rounds
+    // probe every 4th round from probeFrom on: a per-round probe job costs
+    // about as much as the skipped self-join on small frames, so checking
+    // at 4/8/12 keeps the fast-converging case (Boruvka partner graphs, ~3
+    // rounds) at one probe while bounding the slow case's overhead. With
+    // no probe round below `rounds` the __jprev rider column goes too:
+    // stability needs every cycle length to DIVIDE 2^(k-1), so callers
+    // whose cycles are not powers of two (the planted ρ-map: random
+    // ~√n-length cycles) pass probeFrom >= rounds
+    def probesAt(r: Int): Boolean = r % 4 == 0 && r >= probeFrom && r < rounds
+    val probing = (1 until rounds).exists(probesAt)
     var t = statsReset(succ.select(col("node"), col("succ").as("jump"),
       col("succ").as("mn")).localCheckpoint(true))
     var stable = false
@@ -2686,11 +2701,7 @@ object GraphOps {
             least(col("mn"), col("m2")).as("mn"))
         ).localCheckpoint(true))
       r += 1
-      // probe every 4th round: a per-round probe job costs about as much
-      // as the skipped self-join on small frames, so checking at 4/8/12
-      // keeps the fast-converging case (Boruvka partner graphs, ~3
-      // rounds) at one probe while bounding the slow case's overhead
-      if (probing && r % 4 == 0 && r >= probeFrom && r < rounds)
+      if (probesAt(r))
         stable = nxt.filter(col("jump") =!= col("__jprev")).isEmpty
       t = if (probing) nxt.drop("__jprev") else nxt
     }

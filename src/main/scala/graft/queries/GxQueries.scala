@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.KinGraph
+import graft.{CacheScope, KinGraph}
 import graft.gx.GraphXBridge
 import graft.ops.GraphOps
 import graft.sources.Tables
@@ -24,27 +24,26 @@ object GxQueries {
     // geoEdges rows are unique per source table, and the three edge shapes
     // are mutually disjoint by key prefix (S->C vs C/S->N vs N->R) — the
     // dedup shuffle over the full union would remove nothing.
-    Tables.cached("trade", s, dir)(Tables.tradeEdges(s, dir)).select("src", "dst")
+    CacheScope.session("trade", s, dir)(Tables.tradeEdges(s, dir)).select("src", "dst")
       .union(Tables.geoEdges(s, dir).select("src", "dst"))
       .withColumn("etype", lit(0))
 
   private def unionGraph(s: SparkSession, dir: String): KinGraph =
-    KinGraph.fromEdges(Tables.cached("gx_union", s, dir)(unionEdges(s, dir)))
+    KinGraph.fromEdges(CacheScope.session("gx_union", s, dir)(unionEdges(s, dir)))
 
+  /** Session-shared GraphX union graph, registered under its cache-build
+    * name: the vertex-id assignment + edge conversion run once per dataset
+    * per session, shared by all algorithm calls. */
   private def unionGx(s: SparkSession, dir: String): Graph[String, Int] =
-    GraphXBridge.toGraphXCached(unionGraph(s, dir),
-      s"union|$dir|${System.identityHashCode(s)}")
-
-  /** Drop the memoized GraphX union graph (Bench outlier re-time pass). */
-  private[graft] def dropUnionGxCache(s: SparkSession, dir: String): Boolean =
-    GraphXBridge.dropCached(s"union|$dir|${System.identityHashCode(s)}")
+    CacheScope.sessionOf("gx_graphx", s, dir)(
+      GraphXBridge.toGraphX(unionGraph(s, dir)).cache())(_.unpersist(_))
 
   /** Session-shared DISTINCT lexical undirected edge set of the union
     * graph — the frame the whole community family (modularity, coarsen,
     * all four louvain gates) derives from. */
   private def sharedUnd(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("gx_und", s, dir) {
-      Tables.cached("gx_union", s, dir)(unionEdges(s, dir))
+    CacheScope.session("gx_und", s, dir) {
+      CacheScope.session("gx_union", s, dir)(unionEdges(s, dir))
         .select("src", "dst")
         .filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("u"),
@@ -93,7 +92,7 @@ object GxQueries {
     * weight family on the canonical lexical pair) — pure function of
     * cache:gx_und, the input of the weighted-Louvain gates. */
   private def sharedWund(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("gx_wund", s, dir) {
+    CacheScope.session("gx_wund", s, dir) {
       sharedUnd(s, dir).withColumn("w",
         pmod(graft.functions.TextFunctions.hash60(
           concat(col("u"), lit("|"), col("v"))), lit(100L)) + 1L)
@@ -104,11 +103,11 @@ object GxQueries {
     * cache:gx_wund and cache:lpa5, so gx_louvain_w's per-call cost is the
     * node-sized move pass alone, not an adjacency re-aggregation. */
   private def sharedWDeg(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("louvw_deg", s, dir)(
+    CacheScope.session("louvw_deg", s, dir)(
       GraphOps.louvainWeightedDeg(sharedWund(s, dir)))
 
   private def sharedWLic(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("louvw_lic", s, dir)(
+    CacheScope.session("louvw_lic", s, dir)(
       GraphOps.louvainWeightedLic(sharedLpa(s, dir), sharedWund(s, dir)))
 
   /** Session-shared round-1 WL structural classes — the partition both
@@ -116,7 +115,7 @@ object GxQueries {
     * adjacency join + checkpoint runs once per session. statsReset per
     * the checkpoint discipline (two consumers join it). */
   private def sharedWl1(s: SparkSession, dir: String): DataFrame =
-    GraphOps.statsReset(Tables.cached("wl1", s, dir)(
+    GraphOps.statsReset(CacheScope.session("wl1", s, dir)(
       GraphOps.wlRefine(sharedUnd(s, dir), rounds = 1)))
 
   /** Session-shared one-level Louvain refinement — gx_louvain1 emits it,
@@ -127,7 +126,7 @@ object GxQueries {
     * (louvain2's contraction) square it into the documented
     * BigInt-planning hang (270s observed, execution itself ~1s). */
   private def sharedLouvain1(s: SparkSession, dir: String): DataFrame =
-    GraphOps.statsReset(Tables.cached("louvain1", s, dir)(
+    GraphOps.statsReset(CacheScope.session("louvain1", s, dir)(
       GraphOps.louvainOneLevel(sharedLpa(s, dir), sharedUnd(s, dir))))
 
   /** Session-shared 3-level Louvain loop output — gx_louvain_n emits it,
@@ -135,7 +134,7 @@ object GxQueries {
     * actions + per-level checkpoints) runs once per session. statsReset
     * for the same reason as louvain1. */
   private def sharedLouvainN(s: SparkSession, dir: String): DataFrame =
-    GraphOps.statsReset(Tables.cached("louvain_n", s, dir)(
+    GraphOps.statsReset(CacheScope.session("louvain_n", s, dir)(
       GraphOps.louvainMultiLevel(sharedLpa(s, dir), sharedUnd(s, dir),
         maxLevels = 3, level1 = Some(sharedLouvain1(s, dir)))))
 
@@ -144,7 +143,7 @@ object GxQueries {
     * 4-step iterative pass runs once per session. statsReset: the pair
     * query SELF-JOINS this frame (the checkpoint-squaring discipline). */
   private def sharedWalks(s: SparkSession, dir: String): DataFrame =
-    GraphOps.statsReset(Tables.cached("n2v_walks", s, dir) {
+    GraphOps.statsReset(CacheScope.session("n2v_walks", s, dir) {
       val g = unionGraph(s, dir)
       GraphOps.node2vecWalks(g.edges.select(col("src"), col("dst")),
         g.nodes.filter(col("key").startsWith("S")).select(col("key")), 4)
@@ -154,7 +153,7 @@ object GxQueries {
     * them directly and gx_modularity grades their community quality; the
     * 5-round iterative pass builds once per session. */
   private def sharedLpa(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("lpa5", s, dir)(
+    CacheScope.session("lpa5", s, dir)(
       // canonFrom (r19): ride cache:gx_und (built earlier in cacheBuilds
       // order) instead of re-deriving union+distinct inside this build
       GraphOps.labelPropagationSync(unionGraph(s, dir), iters = 5,
@@ -174,7 +173,7 @@ object GxQueries {
       : (Array[String], org.apache.spark.sql.DataFrame) = {
     val g = unionGraph(s, dir)
     val lm = GraphOps.landmarkKeys(g, 4)
-    (lm, Tables.cached("lm_bfs_4x4", s, dir)(GraphOps.statsReset(
+    (lm, CacheScope.session("lm_bfs_4x4", s, dir)(GraphOps.statsReset(
       GraphOps.landmarkBfsState(g, nLandmarks = 4, rounds = 4,
           canonFrom = Some(sharedUnd(s, dir)))._2
         .localCheckpoint(true))))
@@ -198,11 +197,11 @@ object GxQueries {
     * forensics (gx_assort, d_auc, d_dedup_incr) traced to exactly that. */
   private[graft] val sharedCacheBuilds: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "trade" -> ((s: SparkSession, d: String) =>
-      Tables.cached("trade", s, d)(Tables.tradeEdges(s, d))),
+      CacheScope.session("trade", s, d)(Tables.tradeEdges(s, d))),
     "gx_union" -> ((s: SparkSession, d: String) =>
-      Tables.cached("gx_union", s, d)(unionEdges(s, d))),
+      CacheScope.session("gx_union", s, d)(unionEdges(s, d))),
     "part" -> ((s: SparkSession, d: String) =>
-      Tables.cached("part", s, d)(Tables.partEdges(s, d))),
+      CacheScope.session("part", s, d)(Tables.partEdges(s, d))),
     "gx_graphx" -> ((s: SparkSession, d: String) => materializeUnionGx(s, d)),
     // gx_und precedes lpa5/lm_bfs_4x4 since r19: both builds now derive
     // their undirected view from it (canonFrom), so dependency order keeps
@@ -556,7 +555,7 @@ object GxQueries {
     // engines, the gx_assort discipline
     "gx_modularity" -> ((s, dir) => {
       val labels = sharedLpa(s, dir)
-      val e0 = Tables.cached("gx_union", s, dir)(unionEdges(s, dir))
+      val e0 = CacheScope.session("gx_union", s, dir)(unionEdges(s, dir))
         .select("src", "dst")
       val und = e0.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("u"),
@@ -864,7 +863,7 @@ object GxQueries {
 
     "gx_kcore" -> ((s, dir) =>
       GraphOps.kCoreAdaptive(
-        KinGraph.fromEdges(Tables.cached("part", s, dir)(Tables.partEdges(s, dir))),
+        KinGraph.fromEdges(CacheScope.session("part", s, dir)(Tables.partEdges(s, dir))),
         kOffset = 2, rounds = 3).orderBy("key")),
 
     // landmark betweenness (stress form): shortest landmark-pair paths
@@ -912,7 +911,7 @@ object GxQueries {
     "gx_bipartite" -> ((s, dir) => {
       val (lm, st) = sharedLmBfs(s, dir)
       val dCols = st.columns.filter(_.startsWith("d")).toSeq
-      val und = Tables.cached("gx_union", s, dir)(unionEdges(s, dir))
+      val und = CacheScope.session("gx_union", s, dir)(unionEdges(s, dir))
         .select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("u"),
@@ -941,7 +940,7 @@ object GxQueries {
     // budget every hub-sensitive operator reads first. log2 is exact at
     // integer inputs (the d_len_hist discipline)
     "gx_degree_hist" -> ((s, dir) => {
-      val e = Tables.cached("gx_union", s, dir)(unionEdges(s, dir))
+      val e = CacheScope.session("gx_union", s, dir)(unionEdges(s, dir))
         .select(col("src"), col("dst"))
       def hist(c: String, dirName: String) =
         e.groupBy(col(c).as("n")).agg(count(lit(1)).as("d"))
@@ -962,7 +961,7 @@ object GxQueries {
     // cut frame is 3 broadcast rows, edges carry their endpoint degrees
     // once
     "gx_rich_club" -> ((s, dir) => {
-      val e = Tables.cached("gx_union", s, dir)(unionEdges(s, dir))
+      val e = CacheScope.session("gx_union", s, dir)(unionEdges(s, dir))
         .select(col("src"), col("dst"))
       val und = e.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("u"),
@@ -1004,7 +1003,7 @@ object GxQueries {
     // oracle; wedges = Σ d(d−1)/2 over undirected degrees; the ratio is
     // one integer division in milli
     "gx_transitivity" -> ((s, dir) => {
-      val e = Tables.cached("gx_union", s, dir)(unionEdges(s, dir))
+      val e = CacheScope.session("gx_union", s, dir)(unionEdges(s, dir))
         .select(col("src"), col("dst"))
       val und = e.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("u"),
@@ -1144,7 +1143,7 @@ object GxQueries {
     // the same correctly-rounded *,−,/,sqrt ops to identical integers —
     // floor() is IEEE-exact, unlike round() — so the hash is stable.
     "gx_assort" -> ((s, dir) => {
-      val e = Tables.cached("gx_union", s, dir)(unionEdges(s, dir))
+      val e = CacheScope.session("gx_union", s, dir)(unionEdges(s, dir))
         .select("src", "dst")
       val od = e.groupBy(col("src").as("k1")).agg(count(lit(1)).as("x"))
       val id = e.groupBy(col("dst").as("k2")).agg(count(lit(1)).as("y"))
@@ -1209,7 +1208,7 @@ object GxQueries {
     // parameter, realized on the part graph (value = total quantity)
     "g_adjacency_weighted" -> ((s, dir) =>
       GraphOps.weightedAdjacencyCoo(
-        KinGraph.fromEdges(Tables.cached("part", s, dir)(Tables.partEdges(s, dir))),
+        KinGraph.fromEdges(CacheScope.session("part", s, dir)(Tables.partEdges(s, dir))),
         "quantity")
         .orderBy("row_id", "col_id"))
   )

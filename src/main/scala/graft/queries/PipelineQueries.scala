@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.CacheScope
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import graft.operators.{Chunking, Classify, Collocations, Dedup, Multimodal, Sampling, Similarity, Sketches}
@@ -114,22 +115,15 @@ object PipelineQueries {
   }
 
   /** d_bpe and d_bpe_apply both need the 3-round merge loop (driver-side
-    * argmax actions — not expressible as one lazy plan, so not
-    * `Tables.cached`-able); memoize the (merges, final state) pair per
-    * (session, dir) so the loop runs once. The state is already
-    * checkpointed; the merge table is a local literal frame. */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame, Seq[(String, String)])]()
+    * argmax actions — not expressible as one lazy plan, so not a
+    * `CacheScope.session` frame); memoize the (merges, final state) pair
+    * per (session, dir) so the loop runs once. Nothing to unpersist: the
+    * state is checkpointed (its blocks go with the dropped reference) and
+    * the merge table is a local literal frame. */
   private def bpeShared(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, Seq[(String, String)]) = {
-    val sid = System.identityHashCode(s)
-    // entries pin checkpoint blocks of THEIR session — drop entries from
-    // replaced sessions so a long-lived JVM (sbt test suites) does not
-    // accumulate dead sessions' block-manager state
-    bpeCache.keySet.removeIf(k => !k.endsWith(s"|$sid"))
-    bpeCache.computeIfAbsent(s"$dir|$sid",
-      _ => Collocations.mergeRoundsFull(docs(s, dir), "doc_id", "text", 3))
-  }
+      : (DataFrame, DataFrame, Seq[(String, String)]) =
+    CacheScope.sessionOf("bpe", s, dir)(
+      Collocations.mergeRoundsFull(docs(s, dir), "doc_id", "text", 3))((_, _) => ())
 
   /** Session-shared trainless ANN index parts: the IVF cells/assignment
     * and PQ codebooks/codes are each consumed by 2-3 queries
@@ -137,18 +131,18 @@ object PipelineQueries {
     * corpus-sized encode/assign work builds once per session, like the
     * minhash family above. */
   private def sharedIvfCells(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("ivf_cells", s, dir)(
+    CacheScope.session("ivf_cells", s, dir)(
       Similarity.ivfSampledCells(embDouble(s, dir)))
   private def sharedIvfAssign(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("ivf_assign", s, dir)(
+    CacheScope.session("ivf_assign", s, dir)(
       Similarity.ivfSampledAssign(embDouble(s, dir), sharedIvfCells(s, dir)))
   private def sharedPqCodebooks(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("pq_codebooks", s, dir) {
+    CacheScope.session("pq_codebooks", s, dir) {
       val c = embDouble(s, dir)
       Similarity.pqCodebooks(c, Similarity.inferDim(c))
     }
   private def sharedPqCodes(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("pq_codes", s, dir) {
+    CacheScope.session("pq_codes", s, dir) {
       val c = embDouble(s, dir)
       Similarity.pqEncode(c, sharedPqCodebooks(s, dir), Similarity.inferDim(c))
     }
@@ -156,7 +150,7 @@ object PipelineQueries {
   /** Session-scoped shared minhash intermediates: d_minhash_lsh,
     * d_minhash_est and d_dedup_pipeline all consume the same shingle
     * explode and LSH candidate table over the full documents corpus —
-    * route both through `Tables.cached` (like the gx union graph) so the
+    * route both through `CacheScope.session` (like the gx union graph) so the
     * build runs once per session, not once per query. */
   /** Little-endian hex of the low `nBytes` of a long column (the shared
     * binary-payload building block of the m_* construction oracles). */
@@ -367,7 +361,7 @@ object PipelineQueries {
     * re-runs the corpus decode per micro-batch (the s_stream_boilerplate
     * discipline). */
   private def sharedPhashIndex(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("phash_index", s, dir) {
+    CacheScope.session("phash_index", s, dir) {
       val d = col("doc_id")
       val base = docs(s, dir).filter(pmod(d, lit(2)) === 0)
         .select(d.as("media_id"),
@@ -393,17 +387,17 @@ object PipelineQueries {
     * (with its bounded per-round score-map collects) runs once per
     * (session, dir). */
   private def sharedUnigramVocab(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("unigram_vocab", s, dir)(
+    CacheScope.session("unigram_vocab", s, dir)(
       Collocations.unigramVocab(docs(s, dir), "doc_id", "text"))
 
   /** Session-shared Naive Bayes scoring — d_nb_classifier, d_nb_eval and
     * d_auc all read the one train+score pass; build the per-(doc, class)
     * log-posterior frame once and hang the argmax off it. */
   private def sharedNbScored(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("nb_scored_all", s, dir)(
+    CacheScope.session("nb_scored_all", s, dir)(
       Classify.naiveBayesScored(docs(s, dir), "doc_id", "text", "lang"))
   private def sharedNb(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("nb_scored", s, dir)(
+    CacheScope.session("nb_scored", s, dir)(
       Classify.naiveBayesFromScored(docs(s, dir), sharedNbScored(s, dir),
         "doc_id", "lang"))
 
@@ -411,27 +405,27 @@ object PipelineQueries {
     * e_knn_cluster emits them and d_cluster_topics labels them; the n²
     * edge build + GraphX CC run once per session. */
   private def sharedKnnClusters(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("knn_clusters", s, dir)(
+    CacheScope.session("knn_clusters", s, dir)(
       Similarity.knnComponents(
         embDouble(s, dir).filter(col("id") % 10 === 0), 3))
 
   private def sharedShingles(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("minhash_shingles", s, dir)(
+    CacheScope.session("minhash_shingles", s, dir)(
       Dedup.shingleRows(docs(s, dir), "doc_id", "text"))
   private def sharedSpanRows(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("span_rows", s, dir)(
+    CacheScope.session("span_rows", s, dir)(
       Dedup.spanRowsOf(docs(s, dir), "doc_id", "text"))
   private def docBase(s: SparkSession, dir: String): DataFrame =
     docs(s, dir).select(col("doc_id"), col("text"))
   private def sharedMinhashCands(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("minhash_cands", s, dir)(
+    CacheScope.session("minhash_cands", s, dir)(
       Dedup.minhashCandidatesFrom(sharedShingles(s, dir)))
 
   /** The fixed 3-term retrieval rankings (top-50 by micro score) —
     * d_search / d_bm25 emit them directly and d_rrf fuses them; cached so
     * the three queries share one token-explode + rank pass per session. */
   private def tfidfTop50(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("tfidf_top50", s, dir)(tfidfTop50Build(s, dir))
+    CacheScope.session("tfidf_top50", s, dir)(tfidfTop50Build(s, dir))
 
   private def tfidfTop50Build(s: SparkSession, dir: String): DataFrame = {
     val terms = Seq("spark", "query", "vector")
@@ -452,7 +446,7 @@ object PipelineQueries {
   }
 
   private def bm25Top50(s: SparkSession, dir: String): DataFrame =
-    Tables.cached("bm25_top50", s, dir)(bm25Top50Build(s, dir))
+    CacheScope.session("bm25_top50", s, dir)(bm25Top50Build(s, dir))
 
   private def bm25Top50Build(s: SparkSession, dir: String): DataFrame = {
     val terms = Seq("spark", "query", "vector")

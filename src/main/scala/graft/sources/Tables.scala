@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.KinGraph
 
 /** Readers for the driver-generated parquet fixtures (TESTDATA.md) and the
@@ -64,42 +63,9 @@ object Tables {
       .withColumn("etype", lit(0))
   }
 
-  /** Session-scoped cache of derived edge tables: the same derived graph
-    * is queried by many operators in one driver run; materializing it once
-    * (MEMORY_AND_DISK) is what any user would do, and at cluster scale the
-    * equivalent is a persisted/bucketed intermediate table. */
-  private val derivedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** get/putIfAbsent rather than computeIfAbsent: derived builds NEST
-    * (the gx union graph builds on the cached trade edges), and a nested
-    * computeIfAbsent on the same map throws "Recursive update". The race
-    * (two threads building the same entry) is benign — the loser's copy is
-    * unpersisted and discarded. */
-  private[graft] def cached(name: String, spark: SparkSession, dir: String)
-                           (build: => DataFrame): DataFrame = {
-    val key = s"$name|$dir|${System.identityHashCode(spark)}"
-    val existing = derivedCache.get(key)
-    if (existing != null) existing
-    else {
-      val built = build.persist(StorageLevel.MEMORY_AND_DISK)
-      val prev = derivedCache.putIfAbsent(key, built)
-      if (prev != null) { built.unpersist(false); prev } else built
-    }
-  }
-
-  /** Drop one derived-cache entry (unpersist + forget) so Bench's outlier
-    * re-time pass can rebuild it cold with first-pass semantics — nested
-    * dependencies stay cached, exactly as in the original timed build.
-    * Dependents holding their own persisted copies are unaffected. */
-  private[graft] def dropDerived(name: String, spark: SparkSession, dir: String): Boolean = {
-    val key = s"$name|$dir|${System.identityHashCode(spark)}"
-    val df = derivedCache.remove(key)
-    if (df != null) { df.unpersist(blocking = true); true } else false
-  }
-
   def tradeGraph(spark: SparkSession, dir: String): KinGraph =
-    KinGraph.fromEdges(cached("trade", spark, dir)(tradeEdges(spark, dir)))
+    KinGraph.fromEdges(
+      graft.CacheScope.session("trade", spark, dir)(tradeEdges(spark, dir)))
 
   /** Part graph: supplier -> part edges with aggregated attrs
     * {quantity, extendedprice} (FIXTURES.md derived graphs). */
@@ -121,9 +87,6 @@ object Tables {
         col("quantity"), col("extendedprice"))
       .withColumn("etype", lit(0))
 
-  def partGraph(spark: SparkSession, dir: String): KinGraph =
-    KinGraph.fromEdges(partEdges(spark, dir))
-
   /** Geo graph: customer/supplier -> nation -> region membership edges. */
   def geoEdges(spark: SparkSession, dir: String): DataFrame = {
     val c = customer(spark, dir).select(
@@ -137,9 +100,6 @@ object Tables {
       concat(lit("R"), col("n_regionkey")).as("dst"))
     c.union(s).union(n).withColumn("etype", lit(0))
   }
-
-  def geoGraph(spark: SparkSession, dir: String): KinGraph =
-    KinGraph.fromEdges(geoEdges(spark, dir))
 
   /** The DuckDB-oracle CTE prefix that mirrors tradeEdges/fromEdges, shared
     * by every graph-operator oracle query so Spark and DuckDB agree on the

@@ -454,6 +454,20 @@ class GraphOpsSpec extends SparkSpec {
     assert(d4 == d5, "gx_wsssp's rounds=4 no longer converges at sf0.01")
   }
 
+  test("canonFrom contract: cache:gx_und is the distinct u < v pairs of the union graph") {
+    // the gx ops trust a canonFrom frame unchecked; GxQueries pairs the
+    // union graph with cache:gx_und, so that pairing must hold exactly
+    val und = SparkEntry.cacheBuilds.toMap.apply("gx_und")(spark, sf)
+      .select($"u", $"v")
+    val canon = KinGraph.fromEdges(graft.queries.GxQueries.unionEdges(spark, sf))
+      .edges.filter($"src" =!= $"dst")
+      .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
+      .distinct()
+    assert(und.count() == canon.count())
+    assert(und.except(canon).isEmpty, "gx_und holds pairs outside the union graph")
+    assert(canon.except(und).isEmpty, "gx_und misses pairs of the union graph")
+  }
+
   test("GraftExtensions injects SQL functions into a fresh session") {
     spark.sparkContext // ensure the shared context exists
     val prev = SparkSession.getDefaultSession
@@ -493,6 +507,15 @@ class GraphOpsSpec extends SparkSpec {
       // the label is the min ON THE CYCLE: tail node 10 cannot pollute it
       10L -> ((11L, 3L)), 11L -> ((11L, 3L)), 12L -> ((11L, 3L)))
     assert(out == exp, s"got $out")
+    // probeFrom only moves the probe rounds (multiples of 4 in
+    // [probeFrom, rounds)), never the labels: 4 probes at 4/8/12, 5 and 8
+    // at 8/12, 16 and 17 never (no rider column either)
+    Seq(4, 5, 8, 16, 17).foreach { pf =>
+      val got = GraphOps.pointerDoublingLabels(succ, probeFrom = pf)
+        .select("node", "cycle_rep", "basin_size")
+        .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+      assert(got == exp, s"probeFrom = $pf: got $got")
+    }
   }
 
   test("pointer doubling early fixpoint stop: long tail crosses probe rounds") {

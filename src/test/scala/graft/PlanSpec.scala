@@ -177,6 +177,53 @@ class PlanSpec extends SparkSpec {
       "releaseAll left the operator cache persisted")
   }
 
+  test("every session cache build registers under its name and drops cold") {
+    import org.apache.spark.graphx.Graph
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.storage.StorageLevel
+    val builds = SparkEntry.cacheBuilds
+    // a lookup that must hit: the build argument fails if it ever runs
+    def entry(name: String, s: org.apache.spark.sql.SparkSession = spark): AnyRef =
+      CacheScope.sessionOf[AnyRef](name, s, sf)(fail(s"$name is not registered"))((_, _) => ())
+    def levels(v: AnyRef): Seq[StorageLevel] = v match {
+      case df: org.apache.spark.sql.Dataset[_] => Seq(df.storageLevel)
+      case g: Graph[_, _] => Seq(g.vertices.getStorageLevel, g.edges.getStorageLevel)
+      case other => fail(s"unexpected session entry $other")
+    }
+    def build(name: String, s: org.apache.spark.sql.SparkSession = spark): Unit =
+      try builds.toMap.apply(name)(s, sf).count() finally CacheScope.releaseAll()
+    builds.foreach { case (name, _) => SparkEntry.dropCacheEntry(name, spark, sf) }
+    builds.foreach { case (name, _) =>
+      build(name)
+      val first = entry(name)
+      build(name)
+      assert(entry(name) eq first, s"$name: a second build replaced the entry")
+      assert(levels(first).forall(_ != StorageLevel.NONE), s"$name: not persisted")
+    }
+    val undRows = entry("gx_und").asInstanceOf[DataFrame].count()
+    builds.foreach { case (name, _) =>
+      val held = entry(name)
+      assert(SparkEntry.dropCacheEntry(name, spark, sf), s"$name: drop missed the entry")
+      assert(levels(held).forall(_ == StorageLevel.NONE), s"$name: still persisted")
+      assert(!SparkEntry.dropCacheEntry(name, spark, sf), s"$name: dropped twice")
+    }
+    // trade and gx_union are gone: gx_und rebuilds its nested inputs cold
+    build("gx_und")
+    assert(entry("gx_und").asInstanceOf[DataFrame].count() == undRows)
+    Seq("trade", "gx_union").foreach(entry(_)) // re-registered by the nesting
+    // another session of the same context never sees this session's
+    // entry: it builds and holds its own
+    val other = spark.newSession()
+    assert(!SparkEntry.dropCacheEntry("trade", other, sf))
+    build("trade", other)
+    assert(entry("trade", other) ne entry("trade"))
+    assert(entry("trade", other).asInstanceOf[DataFrame].sparkSession eq other)
+    Seq("trade", "gx_union", "gx_und").foreach { name =>
+      SparkEntry.dropCacheEntry(name, other, sf)
+      SparkEntry.dropCacheEntry(name, spark, sf)
+    }
+  }
+
   test("token chunking is map-only (no exchange) and codegen'd") {
     val chunks = graft.operators.Chunking.tokenChunks(
       Tables.documents(spark, sf), "doc_id", "text", 32, 24)
