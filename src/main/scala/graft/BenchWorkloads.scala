@@ -99,9 +99,12 @@ object BenchWorkloads {
     * 2×-over-linear core entry at 100×). Idempotent under the retimer:
     * re-applying a delta replaces the same triples at the same cost. */
   def bulkEdgeUpsertBucketed(spark: SparkSession): Long = {
-    val fs = new org.apache.hadoop.fs.Path(storePath + "/edges")
+    // isolated BENCH_ONLY runs, or a store left by a build without
+    // schema files
+    val fs = new org.apache.hadoop.fs.Path(
+      s"$storePath/edges/${graft.io.GraphStore.SchemaFile}")
     val hfs = fs.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(fs)) bulkEdgeStoreBuild(spark) // isolated BENCH_ONLY runs
+    if (!hfs.exists(fs)) bulkEdgeStoreBuild(spark)
     var b = 0
     while (b < 4) {
       val delta = spark.range(10000L * scale).select(

@@ -678,13 +678,10 @@ object PipelineQueries {
       val tmp = scratchDir("dyn", dir) + "/t"
       val d = docs(s, dir).select(col("doc_id"), col("source"), col("text"))
       d.write.partitionBy("source").parquet(tmp)
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.get(key, "STATIC")
-      s.conf.set(key, "dynamic")
-      try d.filter(col("source").isin("src0", "src1") &&
+      d.filter(col("source").isin("src0", "src1") &&
           pmod(expr("doc_id div 20"), lit(2)) === 0)
-        .write.mode("overwrite").partitionBy("source").parquet(tmp)
-      finally s.conf.set(key, prev)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("source").parquet(tmp)
       s.read.parquet(tmp).agg(
         count(lit(1)).as("n_result"),
         sum(when(col("source").isin("src0", "src1"), 1L).otherwise(0L))

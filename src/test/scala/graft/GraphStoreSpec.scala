@@ -1,16 +1,23 @@
 package graft
 
-import java.io.File
+import java.io.{File, FileNotFoundException}
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graftbridge.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.io.GraphStore
 
 /** The bucket-pruned persisted upsert: merge-content parity with
   * KinGraph.addEdges, and the on-disk pruning contract — buckets the delta
   * does not hash into keep their files byte-identical (same paths, sizes
-  * and modification times), which no SQL oracle can observe. */
+  * and modification times), which no SQL oracle can observe. Also pins
+  * the stored-schema read path and the upsert's Spark job count. */
 class GraphStoreSpec extends SparkSpec {
   import spark.implicits._
+
+  private val OverwriteMode = "spark.sql.sources.partitionOverwriteMode"
 
   private def freshDir(tag: String): String =
     Files.createTempDirectory(s"graft_store_$tag").toString + "/g"
@@ -28,24 +35,48 @@ class GraphStoreSpec extends SparkSpec {
       .toMap
   }
 
-  private def bucketDirOf(rel: String): String =
-    rel.split('/').find(_.startsWith("bucket=")).getOrElse(sys.error(rel))
+  /** Spark jobs `body` starts, counted once the listener bus has drained. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerDrain.drain(sc); jobs.get() }
+    finally sc.removeSparkListener(listener)
+  }
 
-  test("upsertEdges merge content matches KinGraph.addEdges exactly") {
-    val dir = freshDir("parity")
+  /** A weighted 4-edge store at 8 buckets, and a delta that replaces
+    * (a,b,0), inserts (e,f,0) with BOTH endpoints auto-created, and
+    * carries within-batch duplicate (a,c,0) rows where the LAST must win.
+    * Returns (dir, base edges, nodes, delta). */
+  private def mergeFixture(tag: String)
+      : (String, DataFrame, DataFrame, DataFrame) = {
+    val dir = freshDir(tag)
     val base = Seq(
       ("a", "b", 0, 10L), ("a", "c", 0, 11L),
       ("b", "c", 0, 12L), ("c", "d", 1, 13L)).toDF("src", "dst", "etype", "w")
     val nodes = Seq("a", "b", "c", "d").toDF("key")
     GraphStore.writeEdges(spark, dir, base, 8)
     GraphStore.writeNodes(spark, dir, nodes, 8)
-    // replaces (a,b,0), inserts (e,f,0) with BOTH endpoints auto-created,
-    // and within-batch duplicate (a,c,0) rows where the LAST must win
     val delta = Seq(
       ("a", "b", 0, 99L), ("e", "f", 0, 50L),
       ("a", "c", 0, 7L), ("a", "c", 0, 8L)).toDF("src", "dst", "etype", "w")
       .withColumn(KinGraph.BatchOrderCol, monotonically_increasing_id())
+    (dir, base, nodes, delta)
+  }
+
+  /** Upsert the merge fixture and compare with KinGraph.addEdges; the
+    * session's partition overwrite mode must read the same afterwards. */
+  private def checkMergeParity(tag: String): Unit = {
+    val (dir, base, nodes, delta) = mergeFixture(tag)
+    val modeBefore = spark.conf.getOption(OverwriteMode)
     GraphStore.upsertEdges(spark, dir, delta, 8)
+    assert(spark.conf.getOption(OverwriteMode) == modeBefore)
     val got = GraphStore.open(spark, dir)
 
     val want = KinGraph(nodes, base).addEdges(delta)
@@ -58,6 +89,20 @@ class GraphStoreSpec extends SparkSpec {
     val w = got.edges.filter(col("src") === "a" && col("dst") === "c")
       .select("w").as[Long].head()
     assert(w == 8L)
+  }
+
+  private def bucketDirOf(rel: String): String =
+    rel.split('/').find(_.startsWith("bucket=")).getOrElse(sys.error(rel))
+
+  test("upsertEdges merge content matches KinGraph.addEdges exactly") {
+    checkMergeParity("parity")
+  }
+
+  test("merge parity holds under a STATIC session overwrite mode, " +
+    "and the upsert leaves that mode as it was") {
+    spark.conf.set(OverwriteMode, "STATIC")
+    try checkMergeParity("static")
+    finally spark.conf.unset(OverwriteMode)
   }
 
   test("untouched buckets keep byte-identical files after an upsert") {
@@ -112,5 +157,50 @@ class GraphStoreSpec extends SparkSpec {
       s"expected only bucket=$newBucket to change, got $changed")
     assert(GraphStore.readNodes(spark, dir).as[String].collect().toSet ==
       Set("a", "b", "zz9"))
+  }
+
+  test("open runs no Spark job; an upsert runs at most 12") {
+    val (dir, _, _, delta) = mergeFixture("jobs")
+    // the fixture touches two edge buckets and creates two nodes, so both
+    // table rewrites run
+    assert(jobsOf(GraphStore.upsertEdges(spark, dir, delta, 8)) <= 12)
+    assert(jobsOf(GraphStore.open(spark, dir)) == 0)
+  }
+
+  test("stored schema equals the schema parquet inference gives") {
+    val dir = freshDir("schema")
+    GraphStore.writeEdges(spark, dir,
+      Seq(("a", "b", 0, 1.5, Seq(1, 2))).toDF("src", "dst", "etype", "w", "tags"),
+      4)
+    GraphStore.writeNodes(spark, dir,
+      Seq(("a", 3L), ("b", 4L)).toDF("key", "rank"), 4)
+    def fields(df: DataFrame) =
+      df.schema.fields.map(f => (f.name, f.dataType, f.nullable)).toSeq
+    val g = GraphStore.open(spark, dir)
+    for ((table, stored) <- Seq("edges" -> g.edges, "nodes" -> g.nodes)) {
+      val inferred = spark.read.parquet(s"$dir/$table").drop(GraphStore.BucketCol)
+      assert(fields(stored) == fields(inferred), table)
+    }
+  }
+
+  test("an empty delta leaves both tables' files untouched") {
+    val (dir, _, _, delta) = mergeFixture("empty")
+    val edges = fileState(dir + "/edges")
+    val nodes = fileState(dir + "/nodes")
+    GraphStore.upsertEdges(spark, dir, delta.limit(0), 8)
+    assert(fileState(dir + "/edges") == edges)
+    assert(fileState(dir + "/nodes") == nodes)
+  }
+
+  test("a table without a schema file fails loudly, naming the file") {
+    val (dir, _, _, delta) = mergeFixture("noschema")
+    val file = new File(s"$dir/edges/${GraphStore.SchemaFile}")
+    assert(file.delete())
+    for (call <- Seq[() => Any](() => GraphStore.open(spark, dir),
+        () => GraphStore.upsertEdges(spark, dir, delta, 8))) {
+      val e = intercept[FileNotFoundException](call())
+      assert(e.getMessage.contains(s"edges/${GraphStore.SchemaFile}"),
+        e.getMessage)
+    }
   }
 }
