@@ -92,6 +92,25 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
   def edgeLookup(src: String, dst: String, etype: Int = 0): DataFrame =
     edges.filter(col("src") === src && col("dst") === dst && col("etype") === etype)
 
+  /** The row behind a lookup-cache entry: the cached one, else one plain
+    * `collect` of `lookup` — a single-stage job over the pushed-down scan
+    * (a `limit(1)` plan runs a second job when the row is not in the first
+    * partition). A found row fills the cache; a miss is not cached and is
+    * re-probed on the next call. */
+  private def probe(ck: (Char, String, String, Int), lookup: => DataFrame)
+      : Option[Row] =
+    Option(lookupCache.get(ck)).orElse {
+      val row = lookup.collect().headOption
+      row.foreach(lookupCache.put(ck, _))
+      row
+    }
+
+  private def probeNode(key: String): Option[Row] =
+    probe(('n', key, "", 0), nodeLookup(key))
+
+  private def probeEdge(src: String, dst: String, etype: Int): Option[Row] =
+    probe(('e', src, dst, etype), edgeLookup(src, dst, etype))
+
   /** Point lookup by key; NodeNotFound on miss (reference: graph.py:999-1036
     * — cache probe first, graph.py:1018-1023, then the storage descent). */
   def node(key: String, maxKeyLen: Int = -1): Row = {
@@ -100,37 +119,21 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
     // permissive). An explicit non-negative argument overrides per-call.
     val lim = if (maxKeyLen >= 0) maxKeyLen else this.maxKeyLen
     if (key.length > lim) throw new KeyTooLong(key, lim)
-    val ck = ('n', key, "", 0)
-    Option(lookupCache.get(ck)).getOrElse {
-      val row = nodeLookup(key).limit(1).collect()
-        .headOption.getOrElse(throw new NodeNotFound(key))
-      lookupCache.put(ck, row)
-      row
-    }
+    probeNode(key).getOrElse(throw new NodeNotFound(key))
   }
 
   /** Point lookup of an edge triple (reference: graph.py:1038-1067). */
-  def edge(src: String, dst: String, etype: Int = 0): Row = {
-    val ck = ('e', src, dst, etype)
-    Option(lookupCache.get(ck)).getOrElse {
-      val row = edgeLookup(src, dst, etype).limit(1).collect().headOption
-        .getOrElse(throw new EdgeNotFound(src, dst, etype))
-      lookupCache.put(ck, row)
-      row
-    }
-  }
+  def edge(src: String, dst: String, etype: Int = 0): Row =
+    probeEdge(src, dst, etype).getOrElse(throw new EdgeNotFound(src, dst, etype))
 
-  /** reference: graph.py:1069-1082. A lookup-cache hit short-circuits
-    * the existence job (the reference's cache tier does the same,
-    * graph.py:1018-1023) — a cached Row proves existence on this
-    * immutable snapshot; a miss still probes the table. */
-  def hasNode(key: String): Boolean =
-    lookupCache.containsKey(('n', key, "", 0)) ||
-      !nodes.filter(col("key") === key).isEmpty
-  /** reference: graph.py:1084-1099 (same cache short-circuit). */
+  /** reference: graph.py:1069-1082. The same probe as [[node]]: a cached
+    * row answers without a job (the reference's cache tier,
+    * graph.py:1018-1023), and a found row fills the cache, so a later
+    * `node` or `neighbors` call on the key runs no probe. */
+  def hasNode(key: String): Boolean = probeNode(key).isDefined
+  /** reference: graph.py:1084-1099 (the same probe as [[edge]]). */
   def hasEdge(src: String, dst: String, etype: Int = 0): Boolean =
-    lookupCache.containsKey(('e', src, dst, etype)) ||
-      !edges.filter(col("src") === src && col("dst") === dst && col("etype") === etype).isEmpty
+    probeEdge(src, dst, etype).isDefined
 
   // ------------------------------------------------------------- adjacency
   /** Out-neighbors of `key` as a 1-column DataFrame (`key`). Raises
@@ -149,35 +152,43 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
 
   /** Eager existence check for a batch of queried keys — the reference's
     * per-key NodeNotFound raise (graph.py:865, hit inside neighbors_from's
-    * loop). One broadcast semi-join probe; the collected set is bounded by
-    * the query-key list, never the node table. */
+    * loop). One single-stage scan: the `key IN (...)` predicate pushes
+    * down to the parquet scan. The collected set is bounded by the
+    * query-key list, never the node table. */
   private def requireAllExist(keys: Seq[String]): Unit = {
-    val ks = strDF("key", keys.distinct)
-    val found = nodes.join(broadcast(ks), Seq("key"), "left_semi")
-      .select(col("key")).collect().map(_.getString(0)).toSet
+    val found = nodes.filter(col("key").isin(keys.distinct: _*)).select(col("key"))
+      .collect().map(_.getString(0)).toSet
     keys.find(!found.contains(_)).foreach(k => throw new NodeNotFound(k))
+  }
+
+  /** One row per distinct queried key with the sorted list of its `to`
+    * ends over edges whose `from` end is the key. The queried keys join the
+    * edge rows with a null `to`, which `collect_set` skips, so a key with
+    * no such edge still gets an empty list: one filter and one aggregation,
+    * no join. */
+  private def adjacencyFrom(keys: Seq[String], from: String, to: String,
+                            name: String): DataFrame = {
+    requireAllExist(keys)
+    val ks = keys.distinct
+    edges.filter(col(from).isin(ks: _*)).select(col(from).as("key"), col(to).as("v"))
+      .union(strDF("key", ks).select(col("key"), lit(null).cast("string").as("v")))
+      .groupBy(col("key"))
+      .agg(sort_array(collect_set(col("v"))).as(name))
   }
 
   /** Batch out-adjacency: one row per queried key with its sorted neighbor
     * list (reference: graph.py:928-940 loops node-at-a-time; here it is one
-    * semi-join + one aggregation — the set-oriented form the reference's
-    * `n_jobs` parameter gestures at but never implements, graph.py:954).
+    * pushed-down filter + one aggregation — the set-oriented form the
+    * reference's `n_jobs` parameter gestures at but never implements,
+    * graph.py:954).
     * Exact reference contract: every EXISTING queried key appears, a key
     * with no out-edges with an EMPTY list (graph.py:928-940 yields an empty
     * iterator for it); a missing key raises NodeNotFound (graph.py:865).
     * Deliberate relational divergence: DUPLICATE queried keys collapse to
     * one row (the reference's loop yields one iterator per occurrence) —
     * a keyed frame, not a positional zip. */
-  def neighborsFrom(keys: Seq[String]): DataFrame = {
-    requireAllExist(keys)
-    val ks = strDF("key", keys.distinct)
-    val adj = edges.join(broadcast(ks), edges("src") === ks("key"), "left_semi")
-      .groupBy(col("src").as("key"))
-      .agg(sort_array(collect_set(col("dst"))).as("neighbors"))
-    ks.join(adj, Seq("key"), "left")
-      .select(col("key"),
-        coalesce(col("neighbors"), lit(Array.empty[String])).as("neighbors"))
-  }
+  def neighborsFrom(keys: Seq[String]): DataFrame =
+    adjacencyFrom(keys, "src", "dst", "neighbors")
 
   /** POSITIONAL parity variant of [[neighborsFrom]] (reference
     * graph.py:928-940 yields one iterator PER INPUT OCCURRENCE,
@@ -201,16 +212,8 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
   }
 
   /** reference: graph.py:942-957 — same contract as [[neighborsFrom]]. */
-  def predecessorsFrom(keys: Seq[String]): DataFrame = {
-    requireAllExist(keys)
-    val ks = strDF("key", keys.distinct)
-    val adj = edges.join(broadcast(ks), edges("dst") === ks("key"), "left_semi")
-      .groupBy(col("dst").as("key"))
-      .agg(sort_array(collect_set(col("src"))).as("predecessors"))
-    ks.join(adj, Seq("key"), "left")
-      .select(col("key"),
-        coalesce(col("predecessors"), lit(Array.empty[String])).as("predecessors"))
-  }
+  def predecessorsFrom(keys: Seq[String]): DataFrame =
+    adjacencyFrom(keys, "dst", "src", "predecessors")
 
   /** reference: graph.py:959-970 — set(nbrs(u)) ∩ set(nbrs(v)). */
   def commonNeighbors(u: String, v: String): DataFrame =
@@ -228,13 +231,24 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
   def inDegrees: DataFrame =
     edges.groupBy(col("dst").as("key")).agg(count(lit(1)).as("in_degree"))
 
-  def outDegree(key: String): Long = {
-    if (!hasNode(key)) throw new NodeNotFound(key)
-    edges.filter(col("src") === key).count()
-  }
-  def inDegree(key: String): Long = {
-    if (!hasNode(key)) throw new NodeNotFound(key)
-    edges.filter(col("dst") === key).count()
+  def outDegree(key: String): Long = degreeOf(key, "src")
+  def inDegree(key: String): Long = degreeOf(key, "dst")
+
+  /** Edges whose `side` end is `key`; NodeNotFound when the node is
+    * missing (reference graph.py:865). The node row and the edge rows are
+    * tagged and tallied in one no-shuffle pass, so existence and degree
+    * cost one single-stage job, and a missing node (node tally 0) stays
+    * distinct from a node with no edges (edge tally 0). */
+  private def degreeOf(key: String, side: String): Long = {
+    val tagged = nodes.filter(col("key") === key).select(lit(true).as("isNode"))
+      .union(edges.filter(col(side) === key).select(lit(false).as("isNode")))
+    val tallies = tagged.rdd.mapPartitions { rows =>
+      var (ns, es) = (0L, 0L)
+      rows.foreach(r => if (r.getBoolean(0)) ns += 1 else es += 1)
+      Iterator.single((ns, es))
+    }.collect()
+    if (tallies.map(_._1).sum == 0) throw new NodeNotFound(key)
+    tallies.map(_._2).sum
   }
 
   // --------------------------------------------------------- key contract

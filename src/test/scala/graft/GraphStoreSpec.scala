@@ -2,9 +2,6 @@ package graft
 
 import java.io.{File, FileNotFoundException}
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.graftbridge.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.io.GraphStore
@@ -33,21 +30,6 @@ class GraphStoreSpec extends SparkSpec {
       .map(f => f.getAbsolutePath.stripPrefix(base.getAbsolutePath) ->
         (f.length(), f.lastModified()))
       .toMap
-  }
-
-  /** Spark jobs `body` starts, counted once the listener bus has drained. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    ListenerDrain.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerDrain.drain(sc); jobs.get() }
-    finally sc.removeSparkListener(listener)
   }
 
   /** A weighted 4-edge store at 8 buckets, and a delta that replaces

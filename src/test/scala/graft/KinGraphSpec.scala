@@ -74,15 +74,19 @@ class KinGraphSpec extends SparkSpec {
     assertThrows[NodeNotFound](g.neighborsFrom(Seq(allKeys.head, "missing_key")))
     assertThrows[NodeNotFound](g.predecessorsFrom(Seq("missing_key")))
     // explicit sink/source fixture (the dense random graph has none):
-    // b is a pure sink, a/c pure sources — each must appear with []
+    // b is a pure sink, a/c pure sources — each must appear with []; the
+    // parallel etype-1 edge a->b must not repeat b in either list
     val g2 = graphOf(Oracle(Set("a", "b", "c"),
-      Set(("a", "b", 0), ("c", "b", 0))))
+      Set(("a", "b", 0), ("a", "b", 1), ("c", "b", 0))))
     val nf2 = g2.neighborsFrom(Seq("a", "b", "c"))
       .as[(String, Seq[String])].collect().toMap
     assert(nf2 == Map("a" -> Seq("b"), "b" -> Seq.empty, "c" -> Seq("b")))
     val pf2 = g2.predecessorsFrom(Seq("a", "b", "c"))
       .as[(String, Seq[String])].collect().toMap
     assert(pf2 == Map("a" -> Seq.empty, "b" -> Seq("a", "c"), "c" -> Seq.empty))
+    // no queried keys: an empty frame, not an error
+    assert(g2.neighborsFrom(Seq.empty).collect().isEmpty)
+    assert(g2.predecessorsFrom(Seq.empty).collect().isEmpty)
   }
 
   test("neighborsFromSeq/predecessorsFromSeq: positional reference parity — " +
@@ -171,6 +175,47 @@ class KinGraphSpec extends SparkSpec {
         Thread.sleep(20)
       assert(jobs.get() > cold, "post-clear lookup must re-probe storage")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("cold point reads on a parquet-opened graph run one Spark job each, " +
+    "neighborsFrom at most 3, and a found hasNode serves node from the LRU") {
+    // in-memory fixtures fold into a LocalRelation, so pin the plans on a
+    // real parquet scan; each read gets a freshly opened graph (empty LRU)
+    val dir = java.nio.file.Files.createTempDirectory("graft_kin_jobs").toString + "/g"
+    io.GraphIO.save(g, dir)
+    def cold(read: KinGraph => Any): Int = {
+      val h = io.GraphIO.open(spark, dir, "r")
+      jobsOf { read(h); () }
+    }
+    val k = oracle.nodes.toSeq.sorted.head
+    val (s, d, t) = oracle.edges.head
+    val absent = oracle.nodes.find(x => !oracle.edges.contains((s, x, t))).get
+    assert(cold(_.node(k)) == 1, "node")
+    assert(cold(_.hasNode(k)) == 1, "hasNode")
+    assert(cold(_.hasNode("missing_key")) == 1, "hasNode(missing)")
+    assert(cold(_.hasEdge(s, d, t)) == 1, "hasEdge")
+    assert(cold(_.hasEdge(s, absent, t)) == 1, "hasEdge(absent)")
+    assert(cold(_.outDegree(k)) == 1, "outDegree")
+    assert(cold(_.inDegree(k)) == 1, "inDegree")
+    assert(cold(_.neighborsFrom(oracle.nodes.toSeq.take(16)).collect()) <= 3,
+      "neighborsFrom")
+    val h = io.GraphIO.open(spark, dir, "r")
+    assert(h.hasNode(k))
+    assert(jobsOf(h.node(k)) == 0, "node after a found hasNode")
+  }
+
+  test("outDegree/inDegree match the oracle for every key; 0L for an " +
+    "existing key with no edges on that side; NodeNotFound for a missing key") {
+    oracle.nodes.foreach { k =>
+      assert(g.outDegree(k) == oracle.edges.count(_._1 == k), s"outDegree($k)")
+      assert(g.inDegree(k) == oracle.edges.count(_._2 == k), s"inDegree($k)")
+    }
+    // a is a pure source, b a pure sink; the parallel edge counts twice
+    val g2 = graphOf(Oracle(Set("a", "b"), Set(("a", "b", 0), ("a", "b", 1))))
+    assert(g2.outDegree("a") == 2L && g2.inDegree("a") == 0L)
+    assert(g2.outDegree("b") == 0L && g2.inDegree("b") == 2L)
+    assertThrows[NodeNotFound](g2.outDegree("missing_key"))
+    assertThrows[NodeNotFound](g2.inDegree("missing_key"))
   }
 
   test("requireKeyLen enforces the KeyTooLong contract on batches") {
