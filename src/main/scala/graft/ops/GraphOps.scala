@@ -58,6 +58,48 @@ object GraphOps {
       .agg(sum(col(weightCol)).as("value"))
   }
 
+  /** Row limit under which a loop's node-sized state joins as an explicit
+    * broadcast (see `regime`). */
+  private val NodeLimit = 5000000L
+
+  /** The broadcast regime of one message-passing op. When `small`, the
+    * node-sized frames `bc` wraps join as explicit broadcasts, so a round
+    * is narrow over the op's cached, pre-partitioned edge set; otherwise
+    * both sides fall back to declarative joins — ranks/labels/distances
+    * shuffle-partition on key, the only correct plan once the state no
+    * longer fits on one executor. */
+  private final case class Regime(small: Boolean) {
+    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+  }
+
+  /** The one broadcast decision of the loops: small iff `frame` has at
+    * most `limit` rows and the session has not switched broadcast joins
+    * off (`spark.sql.autoBroadcastJoinThreshold` < 0, Spark's own off
+    * switch — no engine code sets it, so it only reaches the shuffle
+    * regime on request, e.g. from a test). The count always runs: on a
+    * freshly cached frame it is the materializing pass. */
+  private def regime(frame: DataFrame, limit: Long = NodeLimit): Regime = {
+    val n = frame.count()
+    Regime(n <= limit &&
+      frame.sparkSession.sessionState.conf.autoBroadcastJoinThreshold >= 0)
+  }
+
+  /** The round driver of the message-passing loops: `rounds` applications
+    * of `step` to the state, which is materialized (eager
+    * `localCheckpoint`) after every `checkpointEvery`-th round except the
+    * last. A state referenced once per round only needs that for plan
+    * depth; one referenced twice needs a short cadence so the branched
+    * lineage is not re-evaluated. */
+  private def iterate(init: DataFrame, rounds: Int, checkpointEvery: Int)
+                     (step: DataFrame => DataFrame): DataFrame = {
+    require(rounds >= 1, "rounds >= 1")
+    (1 to rounds).foldLeft(init) { (st, i) =>
+      val next = step(st)
+      if (i % checkpointEvery == 0 && i < rounds) next.localCheckpoint(true)
+      else next
+    }
+  }
+
   /** Fixed-point (integer) PageRank: ranks are maintained as 64-bit
     * integers in units of `1/scale`, so every arithmetic step — the
     * per-edge contribution `rank div out_degree`, the exact integer sum of
@@ -80,45 +122,35 @@ object GraphOps {
     *  - the node frame carries the out-degree, so there is no per-iteration
     *    degree re-join.
     *
-    * While the rank state fits in a broadcast (`nNodes <=
-    * broadcastNodeLimit`) the contribution side is explicitly broadcast and
-    * an iteration is a fully narrow stage; beyond the limit both sides fall
-    * back to declarative joins (ranks shuffle-partition on key — the only
-    * correct plan at 10^9 nodes, where ranks cannot fit on one executor).
+    * While the rank state fits in a broadcast (the `regime`) the
+    * contribution side is explicitly broadcast and an iteration is a fully
+    * narrow stage; beyond it both sides fall back to declarative joins.
     * The rank state is referenced exactly once per iteration, so lineage is
     * a chain (no branch recompute) and checkpointing is only for plan
-    * depth, every `checkpointEvery` iterations. `scale` must satisfy
+    * depth, every 4 iterations. `scale` must satisfy
     * n_nodes · scale · 100 < 2^63; the default 1e9 (nine fractional
     * digits) is safe to ~10^8 nodes. */
   def fixedPointPageRank(g: KinGraph, iters: Int,
-                         scale: Long = 1000000000L,
-                         checkpointEvery: Int = 4,
-                         broadcastNodeLimit: Long = 5000000L): DataFrame = {
-    require(iters >= 1, "iters >= 1")
-    require(checkpointEvery >= 1, "checkpointEvery >= 1")
+                         scale: Long = 1000000000L): DataFrame = {
     // (key, od) with od null for sink nodes — the one static node-side frame
     val nodesOd = CacheScope.cached(
       g.nodes.select(col("key")).join(
         g.edges.groupBy(col("src").as("key")).agg(count(lit(1)).as("od")),
         Seq("key"), "left"))
-    val small = nodesOd.count() <= broadcastNodeLimit
+    val rg = regime(nodesOd)
     val e = eagerCached(
       g.edges.select(col("src"), col("dst")).repartition(col("dst")))
     val base = (15L * scale) / 100L
-    var r = nodesOd.withColumn("r", lit(scale))
-    for (i <- 1 to iters) {
+    iterate(nodesOd.withColumn("r", lit(scale)), iters, 4) { r =>
       val contrib = r.filter(col("od").isNotNull)
         .select(col("key"), expr("r div od").as("c"))
-      val inc = e.join(if (small) broadcast(contrib) else contrib,
-          e("src") === contrib("key"))
+      val inc = e.join(rg.bc(contrib), e("src") === contrib("key"))
         .groupBy(e("dst").as("key")).agg(sum(col("c")).as("inc"))
-      r = nodesOd.join(if (small) broadcast(inc) else inc, Seq("key"), "left")
+      nodesOd.join(rg.bc(inc), Seq("key"), "left")
         .select(col("key"), col("od"),
           (lit(base) + expr("(85 * coalesce(inc, CAST(0 AS BIGINT))) div 100"))
             .as("r"))
-      if (i % checkpointEvery == 0 && i < iters) r = r.localCheckpoint(true)
-    }
-    r.select(col("key"), col("r"))
+    }.select(col("key"), col("r"))
   }
 
   /** DuckDB twin of [[fixedPointPageRank]]: CTE fragments (od, r0..rN)
@@ -156,12 +188,9 @@ object GraphOps {
     * subquery). Same iteration/broadcast shape as
     * [[fixedPointPageRank]]. */
   def fixedPointKatz(g: KinGraph, iters: Int,
-                     scale: Long = 1000000L,
-                     checkpointEvery: Int = 4,
-                     broadcastNodeLimit: Long = 5000000L): DataFrame = {
-    require(iters >= 1, "iters >= 1")
+                     scale: Long = 1000000L): DataFrame = {
     val nodes = CacheScope.cached(g.nodes.select(col("key")))
-    val small = nodes.count() <= broadcastNodeLimit
+    val rg = regime(nodes)
     val e = eagerCached(
       g.edges.select(col("src"), col("dst")).repartition(col("dst")))
     // max over an EMPTY degree frame is a NULL cell — an edgeless graph
@@ -171,19 +200,15 @@ object GraphOps {
       .agg(max(col("d"))).head()
     val dmax = if (dmaxRow.isNullAt(0)) 0L else dmaxRow.getLong(0)
     val kdiv = dmax + 1
-    var x = nodes.withColumn("x", lit(scale))
-    for (i <- 1 to iters) {
+    iterate(nodes.withColumn("x", lit(scale)), iters, 4) { x =>
       val xs = x.select(col("key"), col("x"))
-      val inc = e.join(if (small) broadcast(xs) else xs,
-          e("src") === xs("key"))
+      val inc = e.join(rg.bc(xs), e("src") === xs("key"))
         .groupBy(e("dst").as("key")).agg(sum(col("x")).as("inc"))
-      x = nodes.join(if (small) broadcast(inc) else inc, Seq("key"), "left")
+      nodes.join(rg.bc(inc), Seq("key"), "left")
         .select(col("key"),
           (lit(scale) +
             expr(s"coalesce(inc, CAST(0 AS BIGINT)) div $kdiv")).as("x"))
-      if (i % checkpointEvery == 0 && i < iters) x = x.localCheckpoint(true)
-    }
-    x.select(col("key"), col("x").as("katz"))
+    }.select(col("key"), col("x").as("katz"))
   }
 
   /** DuckDB twin of [[fixedPointKatz]]: kdiv scalar + unrolled x0..xN
@@ -221,32 +246,26 @@ object GraphOps {
     * far beyond these fixtures (shard the scale down past that). */
   def weightedFixedPointPageRank(edges: DataFrame, nodes: DataFrame,
                                  iters: Int,
-                                 scale: Long = 1000000000L,
-                                 checkpointEvery: Int = 4,
-                                 broadcastNodeLimit: Long = 5000000L): DataFrame = {
-    require(iters >= 1, "iters >= 1")
+                                 scale: Long = 1000000000L): DataFrame = {
     val nodesW = CacheScope.cached(
       nodes.select(col("key")).join(
         edges.groupBy(col("src").as("key")).agg(sum(col("w")).as("wout")),
         Seq("key"), "left"))
-    val small = nodesW.count() <= broadcastNodeLimit
+    val rg = regime(nodesW)
     val e = eagerCached(
       edges.select(col("src"), col("dst"), col("w")).repartition(col("dst")))
     val base = (15L * scale) / 100L
-    var r = nodesW.withColumn("r", lit(scale))
-    for (i <- 1 to iters) {
+    iterate(nodesW.withColumn("r", lit(scale)), iters, 4) { r =>
       val st = r.filter(col("wout").isNotNull)
         .select(col("key"), col("r"), col("wout"))
-      val inc = e.join(if (small) broadcast(st) else st, e("src") === st("key"))
+      val inc = e.join(rg.bc(st), e("src") === st("key"))
         .select(col("dst"), expr("(r * w) div wout").as("c"))
         .groupBy(col("dst").as("key")).agg(sum(col("c")).as("inc"))
-      r = nodesW.join(if (small) broadcast(inc) else inc, Seq("key"), "left")
+      nodesW.join(rg.bc(inc), Seq("key"), "left")
         .select(col("key"), col("wout"),
           (lit(base) + expr("(85 * coalesce(inc, CAST(0 AS BIGINT))) div 100"))
             .as("r"))
-      if (i % checkpointEvery == 0 && i < iters) r = r.localCheckpoint(true)
-    }
-    r.select(col("key"), col("r"))
+    }.select(col("key"), col("r"))
   }
 
   /** DuckDB twin of [[weightedFixedPointPageRank]]: CTE fragments
@@ -296,10 +315,7 @@ object GraphOps {
     *   non-self-loop pairs `(u, v)` of `g.edges` (`cache:gx_und` for the
     *   union graph; GraphOpsSpec pins that). It is trusted unchecked. */
   def labelPropagationSync(g: KinGraph, iters: Int,
-                           checkpointEvery: Int = 3,
-                           broadcastNodeLimit: Long = 5000000L,
                            canonFrom: Option[DataFrame] = None): DataFrame = {
-    require(iters >= 1, "iters >= 1")
     // cached hash-partitioned ON dst: the per-iteration (dst, label) count
     // and the per-dst window argmax both reuse this partitioning, so with
     // the label state broadcast an iteration is fully narrow over the edge
@@ -310,11 +326,9 @@ object GraphOps {
     val ud = canonFrom.map(undirectedFromCanon(_, Some(col("dst"))))
       .getOrElse(undirectedEdges(g, Some(col("dst"))))
     val nodes = CacheScope.cached(g.nodes.select(col("key")))
-    val small = nodes.count() <= broadcastNodeLimit
-    var labels = nodes.withColumn("label", col("key"))
-    for (i <- 1 to iters) {
-      val lsrc = labels.withColumnRenamed("key", "src")
-      val msgs = ud.join(if (small) broadcast(lsrc) else lsrc, "src")
+    val rg = regime(nodes)
+    iterate(nodes.withColumn("label", col("key")), iters, 3) { labels =>
+      val msgs = ud.join(rg.bc(labels.withColumnRenamed("key", "src")), "src")
         .groupBy(col("dst").as("key"), col("label"))
         .agg(count(lit(1)).as("cnt"))
       // deterministic argmax (max cnt, tie -> min label) as a struct-min
@@ -323,11 +337,9 @@ object GraphOps {
         .groupBy(col("key"))
         .agg(min(struct((-col("cnt")).as("nc"), col("label").as("label"))).as("m"))
         .select(col("key"), col("m.label").as("label"))
-      labels = nodes.join(if (small) broadcast(pick) else pick, Seq("key"), "left")
+      nodes.join(rg.bc(pick), Seq("key"), "left")
         .select(col("key"), coalesce(col("label"), col("key")).as("label"))
-      if (i % checkpointEvery == 0 && i < iters) labels = labels.localCheckpoint(true)
     }
-    labels
   }
 
   /** Bounded weighted single-source shortest paths — Bellman-Ford as
@@ -343,12 +355,11 @@ object GraphOps {
     * aggregation reuses that partitioning (HashPartitioning(dst) satisfies
     * the groupBy(dst) distribution — zero per-iteration edge shuffle), and
     * the reached set is explicitly broadcast into the relaxation join
-    * while the graph is under `broadcastNodeLimit` nodes (beyond it both
-    * fall back to declarative shuffle joins — the correct plan when the
-    * distance state itself no longer fits on one executor). The state is
-    * referenced twice per iteration (relax probe + carry-over), so it is
-    * checkpointed every `checkpointEvery` rounds to bound the branched
-    * recompute and hand AQE exact sizes.
+    * in the small `regime` (beyond it both fall back to declarative
+    * shuffle joins — the correct plan when the distance state itself no
+    * longer fits on one executor). The state is referenced twice per
+    * iteration (relax probe + carry-over), so it is checkpointed every 2
+    * rounds to bound the branched recompute and hand AQE exact sizes.
     *
     * The reached set is closed over `nodes` EVERY round (a key-only
     * broadcast semi-join, never the full node frame): an edge dst absent
@@ -357,32 +368,25 @@ object GraphOps {
     * the twin replays callers whose edge endpoints are NOT closed over
     * `nodes` bit-for-bit too. */
   def weightedSsspBounded(edges: DataFrame, nodes: DataFrame,
-                          source: String, iters: Int,
-                          checkpointEvery: Int = 2,
-                          broadcastNodeLimit: Long = 5000000L): DataFrame = {
-    require(iters >= 1, "iters >= 1")
-    require(checkpointEvery >= 1, "checkpointEvery >= 1")
+                          source: String, iters: Int): DataFrame = {
     val e = eagerCached(
       edges.select(col("src"), col("dst"), col("w")).repartition(col("dst")))
     val nk = CacheScope.cached(nodes.select(col("key")))
-    val small = nk.count() <= broadcastNodeLimit
+    val rg = regime(nk)
     // reached set only: starts as the single source row
-    var dist = nk.filter(col("key") === source)
+    val reached0 = nk.filter(col("key") === source)
       .select(col("key"), lit(0L).as("d"))
-    for (i <- 1 to iters) {
-      val dsrc = dist.withColumnRenamed("key", "src")
+    iterate(reached0, iters, 2) { dist =>
       // per-dst min over relaxed candidates — narrow over e's partitioning;
       // closed over nodes (key-only semi-join) so foreign dsts never enter
       // the reached set, matching the twin's per-round LEFT JOIN nodes
-      val relax = e.join(if (small) broadcast(dsrc) else dsrc, "src")
+      val relax = e.join(rg.bc(dist.withColumnRenamed("key", "src")), "src")
         .groupBy(col("dst").as("key")).agg(min(col("d") + col("w")).as("d"))
-        .join(if (small) broadcast(nk) else nk, Seq("key"), "left_semi")
+        .join(rg.bc(nk), Seq("key"), "left_semi")
       // combine with carry-over: one node-bounded (reached-set-sized) shuffle
-      dist = dist.unionByName(relax)
+      dist.unionByName(relax)
         .groupBy(col("key")).agg(min(col("d")).as("d"))
-      if (i % checkpointEvery == 0 && i < iters) dist = dist.localCheckpoint(true)
     }
-    dist
   }
 
   /** DuckDB twin of [[weightedSsspBounded]]: CTE fragments (d0..dN) over a
@@ -419,35 +423,28 @@ object GraphOps {
     * The out-degree frame is built once (cached); the edge set is cached
     * dst-partitioned so the per-iteration message sum reuses its
     * partitioning; the sparse rank state is broadcast into the edge join
-    * under `broadcastNodeLimit`. */
+    * in the small `regime`. */
   def personalizedPageRank(g: KinGraph, source: String, iters: Int,
-                           scale: Long = 1000000000L,
-                           checkpointEvery: Int = 2,
-                           broadcastNodeLimit: Long = 5000000L): DataFrame = {
-    require(iters >= 1, "iters >= 1")
-    require(checkpointEvery >= 1, "checkpointEvery >= 1")
+                           scale: Long = 1000000000L): DataFrame = {
     val od = CacheScope.cached(
       g.edges.groupBy(col("src").as("key")).agg(count(lit(1)).as("od")))
     val e = eagerCached(
       g.edges.select(col("src"), col("dst")).repartition(col("dst")))
-    val small = g.nodes.count() <= broadcastNodeLimit
+    val rg = regime(g.nodes)
     val base = (15L * scale) / 100L
     val start = g.nodes.filter(col("key") === source)
       .select(col("key"), lit(scale).as("r"))
     val baseRow = start.select(col("key"), lit(base).as("v"))
-    var r = start
-    for (i <- 1 to iters) {
+    iterate(start, iters, 2) { r =>
       // sinks contribute nothing (od inner join), same as fixedPointPageRank
-      val contrib = r.join(if (small) broadcast(od) else od, "key")
+      val contrib = r.join(rg.bc(od), "key")
         .select(col("key").as("src"), expr("r div od").as("c"))
-      val inc = e.join(if (small) broadcast(contrib) else contrib, "src")
+      val inc = e.join(rg.bc(contrib), "src")
         .groupBy(col("dst").as("key")).agg(sum(col("c")).as("inc"))
-      r = inc.select(col("key"), expr("(85 * inc) div 100").as("v"))
+      inc.select(col("key"), expr("(85 * inc) div 100").as("v"))
         .unionByName(baseRow)
         .groupBy(col("key")).agg(sum(col("v")).as("r"))
-      if (i % checkpointEvery == 0 && i < iters) r = r.localCheckpoint(true)
     }
-    r
   }
 
   /** DuckDB twin of [[personalizedPageRank]]: CTE fragments (od, p0..pN)
@@ -488,29 +485,27 @@ object GraphOps {
     * cached once per direction — dst-partitioned for the authority sum,
     * src-partitioned for the hub sum — so neither per-round aggregation
     * re-shuffles edges; the node-sized state is broadcast into the edge
-    * join under `broadcastNodeLimit`; each raw sum is eagerly checkpointed
+    * join in the small `regime`; each raw sum is eagerly checkpointed
     * (it is referenced twice: the max-rescale and the rescaled frame), so
     * lineage stays shallow and the per-round max is a cheap driver action
     * on materialized blocks — the kCore data-adaptive-parameter pattern. */
-  def hits(g: KinGraph, iters: Int, scale: Long = 1000000L,
-           broadcastNodeLimit: Long = 5000000L): DataFrame = {
+  def hits(g: KinGraph, iters: Int, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, "iters >= 1")
     val nodes = CacheScope.cached(g.nodes.select(col("key")))
-    val small = nodes.count() <= broadcastNodeLimit
+    val rg = regime(nodes)
     val ePair = g.edges.select(col("src"), col("dst"))
     val eDst = eagerCached(ePair.repartition(col("dst")))
     val eSrc = eagerCached(ePair.repartition(col("src")))
     def half(e: DataFrame, state: DataFrame, joinKey: String,
              groupKey: String): DataFrame = {
-      val st = state.withColumnRenamed("key", joinKey)
-      val raw = e.join(if (small) broadcast(st) else st, joinKey)
+      val raw = e.join(rg.bc(state.withColumnRenamed("key", joinKey)), joinKey)
         .groupBy(col(groupKey).as("key")).agg(sum(col("v")).as("raw"))
         .localCheckpoint(true)
       val mx = raw.agg(max(col("raw"))).head.get(0) match {
         case m: java.lang.Long => math.max(m.longValue / scale, 1L)
         case _ => 1L
       }
-      nodes.join(if (small) broadcast(raw) else raw, Seq("key"), "left")
+      nodes.join(rg.bc(raw), Seq("key"), "left")
         .select(col("key"),
           coalesce(expr(s"raw div $mx"), lit(0L)).as("v"))
     }
@@ -936,16 +931,14 @@ object GraphOps {
     * Scale shape: loop state is the reached (landmark, node, dist) set —
     * at most nLandmarks·n rows, usually far sparser; the edge set is
     * cached dst-partitioned once so each round's frontier expansion
-    * reuses its shuffle; the frontier broadcasts under the node limit.
+    * reuses its shuffle; the frontier broadcasts in the small `regime`.
     * The state is referenced twice per round (carry + expand) like
     * weightedSsspBounded; ReusedExchange shares the subplan in the
     * un-checkpointed rounds (verified in the executed plan — the
-    * d_bigram_lm escape hatch), so checkpointEvery stays 2. */
-  def landmarkCloseness(g: KinGraph, nLandmarks: Int = 4, rounds: Int = 4,
-                        checkpointEvery: Int = 2,
-                        broadcastNodeLimit: Long = 5000000L): DataFrame =
-    closenessFromState(landmarkBfsState(g, nLandmarks, rounds,
-      checkpointEvery, broadcastNodeLimit)._2)
+    * d_bigram_lm escape hatch), so a checkpoint every 2 rounds suffices. */
+  def landmarkCloseness(g: KinGraph, nLandmarks: Int = 4,
+                        rounds: Int = 4): DataFrame =
+    closenessFromState(landmarkBfsState(g, nLandmarks, rounds)._2)
 
   /** The deterministic landmark sample: the `nLandmarks` keys with the
     * smallest salted hash. The keys ride to the driver — nLandmarks is a
@@ -969,18 +962,15 @@ object GraphOps {
     *   non-self-loop pairs `(u, v)` of `g.edges` (`cache:gx_und` for the
     *   union graph; GraphOpsSpec pins that). It is trusted unchecked. */
   def landmarkBfsState(g: KinGraph, nLandmarks: Int = 4, rounds: Int = 4,
-                       checkpointEvery: Int = 2,
-                       broadcastNodeLimit: Long = 5000000L,
                        canonFrom: Option[DataFrame] = None)
       : (Array[String], DataFrame) = {
     require(nLandmarks >= 1, "nLandmarks >= 1")
-    require(rounds >= 1, "rounds >= 1")
     val sp = g.nodes.sparkSession
     // canonFrom (r19): ride the session-shared canonical undirected frame
     // when given — same set, skips the per-build union+distinct shuffle
     val ud = canonFrom.map(undirectedFromCanon(_, Some(col("dst"))))
       .getOrElse(undirectedEdges(g, Some(col("dst"))))
-    val small = g.nodes.count() <= broadcastNodeLimit
+    val rg = regime(g.nodes)
     val lm = landmarkKeys(g, nLandmarks)
     val L = lm.length
     val dCols = (0 until L).map(i => s"d$i")
@@ -998,24 +988,20 @@ object GraphOps {
       org.apache.spark.sql.Row.fromSeq(
         k +: (0 until L).map(j => if (i == j) 0L else null))
     }
-    var st = sp.createDataFrame(
+    val st0 = sp.createDataFrame(
       sp.sparkContext.parallelize(initRows.toSeq, 1), schema)
     def minAgg(of: String => Column) = {
       val aggs = dCols.map(c => of(c).as(c))
       (df: org.apache.spark.sql.RelationalGroupedDataset) =>
         df.agg(aggs.head, aggs.tail: _*)
     }
-    for (i <- 1 to rounds) {
-      val fr = st.withColumnRenamed("node", "src")
+    (lm, iterate(st0, rounds, 2) { st =>
       // min-then-+1 per landmark column == min of (d+1); min skips nulls
       val msgs = minAgg(c => min(col(c)) + 1L)(
-        ud.join(if (small) broadcast(fr) else fr, "src")
+        ud.join(rg.bc(st.withColumnRenamed("node", "src")), "src")
           .groupBy(col("dst").as("node")))
-      st = minAgg(c => min(col(c)))(
-        st.unionByName(msgs).groupBy(col("node")))
-      if (i % checkpointEvery == 0 && i < rounds) st = st.localCheckpoint(true)
-    }
-    (lm, st)
+      minAgg(c => min(col(c)))(st.unionByName(msgs).groupBy(col("node")))
+    })
   }
 
   /** Per-node harmonic closeness from a [[landmarkBfsState]] frame. */
@@ -1079,6 +1065,21 @@ object GraphOps {
     ) ++ its).mkString(",\n")
   }
 
+  /** One level-synchronous expansion: messages from the frontier's sigma
+    * along `edges`, summed per (tag, dst) at distance `k`. The frontier
+    * broadcasts only when `small` (the caller's `regime`) —
+    * package-visible so PlanSpec can pin that the large-graph path plans a
+    * shuffle join. */
+  private[graft] def expandFrontier(edges: DataFrame, frontier: DataFrame,
+                                    tag: String, small: Boolean,
+                                    k: Int): DataFrame = {
+    val fr = frontier.select(col(tag), col("node").as("src"), col("sigma"))
+    edges.join(Regime(small).bc(fr), "src")
+      .groupBy(col(tag), col("dst").as("node"))
+      .agg(sum(col("sigma")).as("sigma"))
+      .select(col(tag), col("node"), lit(k.toLong).as("d"), col("sigma"))
+  }
+
   /** Landmark betweenness (stress form): for every node v, the number of
     * landmark-pair shortest paths passing THROUGH v —
     * Σ over ordered landmark pairs (a, b) of σ(a→v)·σ(v→b) where
@@ -1094,9 +1095,9 @@ object GraphOps {
     * scale estimate.
     *
     * Scale shape: one sparse BFS per landmark per direction (states are
-    * reached-set-sized; the frontier broadcasts only under
-    * `broadcastNodeLimit`, like [[landmarkCloseness]] — above it the
-    * expansion is a shuffle join), then one join of the two state tables
+    * reached-set-sized; the frontier broadcasts only in the small
+    * `regime`, like [[landmarkCloseness]] — beyond it the expansion is
+    * a shuffle join), then one join of the two state tables
     * on node. The loop is PURE message passing: no per-round visited
     * anti-join. Level synchrony makes that sound — for any node v, every
     * in-neighbor contributing a message to v's round-dist(v) candidate
@@ -1109,23 +1110,8 @@ object GraphOps {
     * hubs, cap rounds (σ grows as Π degree per level); `sigmaLimit`
     * guards the final σ table at runtime (σ·σ products summed over
     * nLandmarks² pairs must stay under 2⁶³). */
-  /** One level-synchronous expansion: messages from the frontier's sigma
-    * along `edges`, summed per (tag, dst) at distance `k`. The frontier
-    * broadcasts only when `small` — package-visible so PlanSpec can pin
-    * that the large-graph path plans a shuffle join. */
-  private[graft] def expandFrontier(edges: DataFrame, frontier: DataFrame,
-                                    tag: String, small: Boolean,
-                                    k: Int): DataFrame = {
-    val fr = frontier.select(col(tag), col("node").as("src"), col("sigma"))
-    edges.join(if (small) broadcast(fr) else fr, "src")
-      .groupBy(col(tag), col("dst").as("node"))
-      .agg(sum(col("sigma")).as("sigma"))
-      .select(col(tag), col("node"), lit(k.toLong).as("d"), col("sigma"))
-  }
-
   def landmarkBetweenness(g: KinGraph, nLandmarks: Int = 3, rounds: Int = 3,
                           symmetric: Boolean = false,
-                          broadcastNodeLimit: Long = 5000000L,
                           sigmaLimit: Long = 1000000000L): DataFrame = {
     require(nLandmarks >= 2, "nLandmarks >= 2")
     require(rounds >= 1, "rounds >= 1")
@@ -1139,7 +1125,7 @@ object GraphOps {
     val nk = CacheScope.cached(
       e.select(col("src").as("key")).union(e.select(col("dst").as("key")))
         .distinct())
-    val small = nk.count() <= broadcastNodeLimit
+    val small = regime(nk).small
     val lms: Array[String] = nk
       .withColumn("h", graft.functions.TextFunctions.hash60(
         concat(col("key"), lit("lm"))))
@@ -1254,13 +1240,6 @@ object GraphOps {
     (chains ++ joins).mkString(",\n")
   }
 
-  /** Cached undirected edge view (edges + reversed, self-loops dropped),
-    * optionally pre-partitioned so downstream per-key aggregations reuse
-    * the shuffle. When pre-partitioning, the repartition runs BEFORE the
-    * distinct: HashPartitioning(dst) satisfies the (src, dst) dedup's
-    * clustered distribution (duplicate pairs share a dst), so the dedup
-    * reuses that one shuffle instead of adding its own — the build costs
-    * one edge shuffle, not two. */
   /** CacheScope.cached + an immediate materializing count (r19): under
     * AQE an UNmaterialized cached plan reports UnknownPartitioning to its
     * consumers (the adaptive final stage is not fixed at their planning
@@ -1281,6 +1260,13 @@ object GraphOps {
     c
   }
 
+  /** Cached undirected edge view (edges + reversed, self-loops dropped),
+    * optionally pre-partitioned so downstream per-key aggregations reuse
+    * the shuffle. When pre-partitioning, the repartition runs BEFORE the
+    * distinct: HashPartitioning(dst) satisfies the (src, dst) dedup's
+    * clustered distribution (duplicate pairs share a dst), so the dedup
+    * reuses that one shuffle instead of adding its own — the build costs
+    * one edge shuffle, not two. */
   private def undirectedEdges(g: KinGraph,
                               partitionOn: Option[Column]): DataFrame = {
     val e0 = g.edges.select(col("src"), col("dst"))
@@ -1446,14 +1432,10 @@ object GraphOps {
     * 2^cap units, so the float estimate αm·m²·2^cap / est_num is a
     * post-hoc division while the gate hashes integers. */
   def hyperAnf(und: DataFrame, rounds: Int, buckets: Int = 16,
-               rankCap: Int = 40,
-               broadcastNodeLimit: Long = 2000000L): DataFrame = {
+               rankCap: Int = 40): DataFrame = {
     require(rounds >= 1 && buckets >= 2)
     var st = CacheScope.cached(anfSeed(und, buckets, rankCap))
-    // wide state is ~(4·buckets + key) bytes/node — 2M nodes ≈ 150 MB
-    // broadcast, the guide §3.1 comfort zone; beyond it the merge falls
-    // back to the one-shuffle union shape
-    val small = st.count() <= broadcastNodeLimit
+    val small = regime(st, AnfStateLimit).small
     val adj = anfAdj(und)
     for (_ <- 1 to rounds) st = anfStep(adj, st, buckets, small)
     anfPerKey(st, buckets, rankCap)
@@ -1465,11 +1447,10 @@ object GraphOps {
     * shuffles, not the triangular 1+2+…+rounds of independent runs.
     * Output one row per round: (round, n_nodes, tot_reg, tot_est_num). */
   def hyperAnfTrace(und: DataFrame, rounds: Int, buckets: Int = 16,
-                    rankCap: Int = 40,
-                    broadcastNodeLimit: Long = 2000000L): DataFrame = {
+                    rankCap: Int = 40): DataFrame = {
     require(rounds >= 1 && buckets >= 2)
     var st = CacheScope.cached(anfSeed(und, buckets, rankCap))
-    val small = st.count() <= broadcastNodeLimit
+    val small = regime(st, AnfStateLimit).small
     val adj = anfAdj(und)
     val perRound = (1 to rounds).map { r =>
       st = anfStep(adj, st, buckets, small)
@@ -1481,6 +1462,12 @@ object GraphOps {
     }
     perRound.reduce(_ unionByName _)
   }
+
+  /** Broadcast limit on the HyperANF register state (rows): the wide
+    * state is ~(4·buckets + key) bytes/node — 2M nodes ≈ 150 MB
+    * broadcast, still a comfortable broadcast size; beyond it the merge
+    * falls back to the one-shuffle union shape. */
+  private val AnfStateLimit = 2000000L
 
   /** Doubled adjacency + one SELF-LOOP per node, cached hash-partitioned
     * ON `key` (the fixedPointPageRank layout): the per-round register
@@ -1838,22 +1825,20 @@ object GraphOps {
     * Scale (the labelPropagationSync pattern): the edge set is cached
     * hash-partitioned ON dst — the per-round min-priority aggregation
     * reuses that partitioning; the node-sized active/MIS/removed frames
-    * broadcast under `broadcastNodeLimit` and fall back to shuffle joins
-    * beyond it. Expected O(log n) rounds to empty the active set.
+    * broadcast in the small `regime` and fall back to shuffle joins
+    * beyond it. The active set is checkpointed after every round but the
+    * last. Expected O(log n) rounds to empty the active set.
     *
     * @param canonFrom when given, MUST be the distinct `u < v`,
     *   non-self-loop pairs `(u, v)` of `g.edges` (`cache:gx_und` for the
     *   union graph; GraphOpsSpec pins that). It is trusted unchecked. */
   def lubyMis(g: KinGraph, rounds: Int,
-              checkpointEvery: Int = 1,
-              broadcastNodeLimit: Long = 5000000L,
               canonFrom: Option[DataFrame] = None): DataFrame = {
     require(rounds >= 1, "rounds >= 1")
     val ud = canonFrom.map(undirectedFromCanon(_, Some(col("dst"))))
       .getOrElse(undirectedEdges(g, Some(col("dst"))))
     val nodes = CacheScope.cached(g.nodes.select(col("key")))
-    val small = nodes.count() <= broadcastNodeLimit
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val rg = regime(nodes)
     val prio = conv(substring(md5(concat(lit("mis_"), col("key"))), 1, 15),
       16, 10).cast("long")
     var active = nodes.select(col("key"), prio.as("p"))
@@ -1862,30 +1847,29 @@ object GraphOps {
       .filter(lit(false))
     for (r <- 1 to rounds) {
       val ae = ud
-        .join(bc(active.select(col("key").as("src"), col("p").as("psrc"))), "src")
-        .join(bc(active.select(col("key").as("dst"))), "dst")
+        .join(rg.bc(active.select(col("key").as("src"), col("p").as("psrc"))), "src")
+        .join(rg.bc(active.select(col("key").as("dst"))), "dst")
       val minNb = ae.groupBy(col("dst").as("key")).agg(min(col("psrc")).as("pmin"))
       // checkpointed: each round's winners feed the result AND the removal
-      val mis = statsReset(active.join(bc(minNb), Seq("key"), "left")
+      val mis = statsReset(active.join(rg.bc(minNb), Seq("key"), "left")
         .filter(col("pmin").isNull || col("p") < col("pmin"))
         .select("key").localCheckpoint(true))
       // referenced twice (result + anti-join): under the broadcast regime
       // both references re-evaluate two broadcast joins over CACHED
       // inputs — cheaper than a blocking localCheckpoint job per round;
       // at scale (shuffle joins) the materialization wins
-      val removedRaw = ae.join(bc(mis.withColumnRenamed("key", "src")), "src")
+      val removedRaw = ae.join(rg.bc(mis.withColumnRenamed("key", "src")), "src")
         .select(col("dst").as("key")).distinct()
       val removed =
-        if (small) removedRaw else statsReset(removedRaw.localCheckpoint(true))
+        if (rg.small) removedRaw else statsReset(removedRaw.localCheckpoint(true))
       result = result
         .unionByName(mis.select(col("key"), lit("mis").as("status"),
           lit(r).as("round")))
         .unionByName(removed.select(col("key"), lit("removed").as("status"),
           lit(r).as("round")))
-      active = active.join(bc(mis), Seq("key"), "left_anti")
-        .join(bc(removed), Seq("key"), "left_anti")
-      if (r % checkpointEvery == 0 && r < rounds)
-        active = statsReset(active.localCheckpoint(true))
+      active = active.join(rg.bc(mis), Seq("key"), "left_anti")
+        .join(rg.bc(removed), Seq("key"), "left_anti")
+      if (r < rounds) active = statsReset(active.localCheckpoint(true))
     }
     result.unionByName(
       active.select(col("key"), lit("active").as("status"), lit(0).as("round")))
@@ -1954,8 +1938,7 @@ object GraphOps {
     * The doubling depth (2^16 jumps) bounds partner-chain length — the
     * same documented contract as [[pointerDoublingLabels]]. */
   def boruvkaForest(g: KinGraph, rounds: Int = 4,
-                    weightsFrom: Option[DataFrame] = None,
-                    broadcastNodeLimit: Long = 5000000L): DataFrame = {
+                    weightsFrom: Option[DataFrame] = None): DataFrame = {
     require(rounds >= 1, "rounds >= 1")
     val e0 = g.edges.select(col("src"), col("dst"))
     val und = CacheScope.cached(weightsFrom.getOrElse {
@@ -1968,15 +1951,14 @@ object GraphOps {
             1, 15), 16, 10).cast("long"))
     })
     val nodes = CacheScope.cached(g.nodes.select(col("key")))
-    val small = nodes.count() <= broadcastNodeLimit
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val rg = regime(nodes)
     var labels = nodes.select(col("key"), col("key").as("comp"))
     var forest = und.select(col("u"), col("v"), col("w"), lit(0).as("round"))
       .filter(lit(false))
     for (r <- 1 to rounds) {
       val cross = und
-        .join(bc(labels.select(col("key").as("u"), col("comp").as("cu"))), "u")
-        .join(bc(labels.select(col("key").as("v"), col("comp").as("cv"))), "v")
+        .join(rg.bc(labels.select(col("key").as("u"), col("comp").as("cu"))), "u")
+        .join(rg.bc(labels.select(col("key").as("v"), col("comp").as("cv"))), "v")
         .filter(col("cu") =!= col("cv"))
       val pick = struct(col("w"), col("u"), col("v"), col("cu"), col("cv"))
       val picks = cross
@@ -1999,7 +1981,7 @@ object GraphOps {
         .select(col("comp").as("node"), coalesce(col("succ0"), col("comp")).as("succ"))
       val relabel = pointerDoublingLabels(pg)
         .select(col("node").as("comp"), col("cycle_rep"))
-      labels = statsReset(labels.join(bc(relabel), "comp")
+      labels = statsReset(labels.join(rg.bc(relabel), "comp")
         .select(col("key"), col("cycle_rep").as("comp"))
         .localCheckpoint(true))
     }
@@ -2077,14 +2059,13 @@ object GraphOps {
     *
     * Scale (the lubyMis pattern): per round two map-side-combinable
     * min-priority aggregations (one per endpoint) + broadcast semi-joins
-    * under the node limit; the active edge set only shrinks. Expected
+    * in the small `regime`; the active edge set only shrinks. Expected
     * O(log m) rounds.
     *
     * @param canonFrom when given, MUST be the distinct `u < v`,
     *   non-self-loop pairs `(u, v)` of `g.edges` (`cache:gx_und` for the
     *   union graph; GraphOpsSpec pins that). It is trusted unchecked. */
   def greedyMatching(g: KinGraph, rounds: Int,
-                     broadcastNodeLimit: Long = 5000000L,
                      canonFrom: Option[DataFrame] = None): DataFrame = {
     require(rounds >= 1, "rounds >= 1")
     val e0 = g.edges.select(col("src"), col("dst"))
@@ -2097,8 +2078,7 @@ object GraphOps {
       base.withColumn("p",
         conv(substring(md5(concat(lit("mat_"), col("u"), lit("|"), col("v"))),
           1, 15), 16, 10).cast("long")))
-    val small = canon.count() <= broadcastNodeLimit
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val rg = regime(canon)
     var active = canon
     var result = canon.select(col("u"), col("v"), lit("").as("status"),
       lit(0).as("round")).filter(lit(false))
@@ -2108,8 +2088,8 @@ object GraphOps {
       val dupAt = byEnd.groupBy("n", "p").agg(count(lit(1)).as("c"))
         .filter(col("c") > 1).select(col("n"), col("p"))
       val won = active
-        .join(bc(minAt.select(col("n").as("u"), col("pmin").as("pu"))), "u")
-        .join(bc(minAt.select(col("n").as("v"), col("pmin").as("pv"))), "v")
+        .join(rg.bc(minAt.select(col("n").as("u"), col("pmin").as("pu"))), "u")
+        .join(rg.bc(minAt.select(col("n").as("v"), col("pmin").as("pv"))), "v")
         .filter(col("p") === col("pu") && col("p") === col("pv"))
         // a priority TIE at an endpoint lets two adjacent edges both
         // "equal the min" — require strict uniqueness by excluding an
@@ -2117,9 +2097,9 @@ object GraphOps {
         // (endpoint, priority) pairs: a same-priority collision elsewhere
         // in the graph must not disqualify an unrelated edge (the old
         // global-p exclusion did exactly that)
-        .join(bc(dupAt.select(col("n").as("u"), col("p"))),
+        .join(rg.bc(dupAt.select(col("n").as("u"), col("p"))),
           Seq("u", "p"), "left_anti")
-        .join(bc(dupAt.select(col("n").as("v"), col("p"))),
+        .join(rg.bc(dupAt.select(col("n").as("v"), col("p"))),
           Seq("v", "p"), "left_anti")
         .select("u", "v").localCheckpoint(true)
         .transform(statsReset)
@@ -2127,10 +2107,10 @@ object GraphOps {
         won.select(explode(array(col("u"), col("v"))).as("n"))
           .distinct().localCheckpoint(true))
       val blocked = active.join(won, Seq("u", "v"), "left_anti")
-        .join(bc(matchedNodes.withColumnRenamed("n", "u")), Seq("u"), "left_semi")
+        .join(rg.bc(matchedNodes.withColumnRenamed("n", "u")), Seq("u"), "left_semi")
         .select("u", "v")
         .unionByName(active.join(won, Seq("u", "v"), "left_anti")
-          .join(bc(matchedNodes.withColumnRenamed("n", "v")), Seq("v"), "left_semi")
+          .join(rg.bc(matchedNodes.withColumnRenamed("n", "v")), Seq("v"), "left_semi")
           .select("u", "v"))
         .distinct().localCheckpoint(true)
         .transform(statsReset)
@@ -2139,8 +2119,8 @@ object GraphOps {
           lit(r).as("round")))
         .unionByName(blocked.select(col("u"), col("v"), lit("blocked").as("status"),
           lit(r).as("round")))
-      active = statsReset(active.join(bc(won), Seq("u", "v"), "left_anti")
-        .join(bc(blocked), Seq("u", "v"), "left_anti")
+      active = statsReset(active.join(rg.bc(won), Seq("u", "v"), "left_anti")
+        .join(rg.bc(blocked), Seq("u", "v"), "left_anti")
         .localCheckpoint(true))
     }
     result.unionByName(
@@ -2226,26 +2206,24 @@ object GraphOps {
     * Scale (the lubyMis pattern): per round one max-priority aggregation
     * over the cached dst-partitioned edge set, one colored-neighbor
     * join, and a Σ(deg+1)-row mex explode over READY nodes only;
-    * node-sized frames broadcast under `broadcastNodeLimit`. Expected
+    * node-sized frames broadcast in the small `regime`. Expected
     * O(log n) rounds on random priorities.
     *
     * @param canonFrom when given, MUST be the distinct `u < v`,
     *   non-self-loop pairs `(u, v)` of `g.edges` (`cache:gx_und` for the
     *   union graph; GraphOpsSpec pins that). It is trusted unchecked. */
   def jpColoring(g: KinGraph, rounds: Int,
-                 broadcastNodeLimit: Long = 5000000L,
                  canonFrom: Option[DataFrame] = None): DataFrame = {
     require(rounds >= 1, "rounds >= 1")
     val ud = canonFrom.map(undirectedFromCanon(_, Some(col("dst"))))
       .getOrElse(undirectedEdges(g, Some(col("dst"))))
     val nodes = CacheScope.cached(g.nodes.select(col("key")))
-    val small = nodes.count() <= broadcastNodeLimit
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val rg = regime(nodes)
     val degs = CacheScope.cached(
       ud.groupBy(col("dst").as("key")).agg(count(lit(1)).cast("int").as("deg")))
     val h32 = conv(substring(md5(concat(lit("col_"), col("key"))), 1, 8),
       16, 10).cast("long")
-    var unc = nodes.join(bc(degs), Seq("key"), "left")
+    var unc = nodes.join(rg.bc(degs), Seq("key"), "left")
       .select(col("key"),
         (coalesce(col("deg"), lit(0)).cast("long") * lit(4294967296L) + h32)
           .as("p"))
@@ -2253,16 +2231,16 @@ object GraphOps {
       .filter(lit(false))
     for (r <- 1 to rounds) {
       val pmax = ud
-        .join(bc(unc.select(col("key").as("src"), col("p").as("psrc"))), "src")
-        .join(bc(unc.select(col("key").as("dst"))), "dst")
+        .join(rg.bc(unc.select(col("key").as("src"), col("p").as("psrc"))), "src")
+        .join(rg.bc(unc.select(col("key").as("dst"))), "dst")
         .groupBy(col("dst").as("key")).agg(max(col("psrc")).as("pmax"))
-      val ready = statsReset(unc.join(bc(pmax), Seq("key"), "left")
+      val ready = statsReset(unc.join(rg.bc(pmax), Seq("key"), "left")
         .filter(col("pmax").isNull || col("p") > col("pmax"))
         .select("key").localCheckpoint(true))
-      val used = ud.join(bc(ready.withColumnRenamed("key", "dst")), "dst")
-        .join(bc(colors.select(col("key").as("src"), col("color"))), "src")
+      val used = ud.join(rg.bc(ready.withColumnRenamed("key", "dst")), "dst")
+        .join(rg.bc(colors.select(col("key").as("src"), col("color"))), "src")
         .select(col("dst").as("key"), col("color")).distinct()
-      val mex = ready.join(bc(degs), Seq("key"), "left")
+      val mex = ready.join(rg.bc(degs), Seq("key"), "left")
         .select(col("key"),
           explode(sequence(lit(0), coalesce(col("deg"), lit(0)))).as("c"))
         .join(used.withColumnRenamed("color", "c"), Seq("key", "c"), "left_anti")
@@ -2271,7 +2249,7 @@ object GraphOps {
         .unionByName(mex.withColumn("round", lit(r)))
         .localCheckpoint(true))
       unc = statsReset(
-        unc.join(bc(ready), Seq("key"), "left_anti").localCheckpoint(true))
+        unc.join(rg.bc(ready), Seq("key"), "left_anti").localCheckpoint(true))
     }
     nodes.join(colors, Seq("key"), "left")
       .select(col("key"), col("color"), col("round"))
@@ -2340,50 +2318,39 @@ object GraphOps {
     * the cached undirected edge set against the alive set + one
     * map-side-combinable degree count — no all-pairs, no driver loop over
     * rows. The alive set is referenced TWICE per round (once per
-    * endpoint), so it is materialized every round by default — that keeps
-    * the branched lineage from re-evaluating and hands AQE an exact
-    * (node-bounded, shrinking) size for the semi-join build sides. */
-  def kCore(g: KinGraph, k: Int, rounds: Int,
-            checkpointEvery: Int = 1,
-            broadcastNodeLimit: Long = 5000000L): DataFrame =
+    * endpoint), so it is materialized after every round but the last —
+    * that keeps the branched lineage from re-evaluating and hands AQE an
+    * exact (node-bounded, shrinking) size for the semi-join build sides. */
+  def kCore(g: KinGraph, k: Int, rounds: Int): DataFrame =
     kCorePeel(undirectedEdges(g, Some(col("dst"))),
-      g.nodes.select(col("key")), k, rounds, checkpointEvery, broadcastNodeLimit)
+      g.nodes.select(col("key")), k, rounds)
 
   /** [[kCore]] with DATA-ADAPTIVE k = (min undirected degree + kOffset):
     * a fixed k is the wrong knob across corpus sizes — degrees grow with
     * the data, so one constant either peels nothing or empties the graph.
     * Builds the undirected view once and reuses it for both the degree
     * floor and the peel. */
-  def kCoreAdaptive(g: KinGraph, kOffset: Int, rounds: Int,
-                    checkpointEvery: Int = 1,
-                    broadcastNodeLimit: Long = 5000000L): DataFrame = {
+  def kCoreAdaptive(g: KinGraph, kOffset: Int, rounds: Int): DataFrame = {
     val ud = undirectedEdges(g, Some(col("dst")))
     val minDeg = ud.groupBy(col("dst")).agg(count(lit(1)).as("d"))
       .agg(min(col("d"))).first().getLong(0)
     kCorePeel(ud, g.nodes.select(col("key")),
-      (minDeg + kOffset).toInt, rounds, checkpointEvery, broadcastNodeLimit)
+      (minDeg + kOffset).toInt, rounds)
   }
 
-  private def kCorePeel(ud: DataFrame, nodes0: DataFrame, k: Int, rounds: Int,
-                        checkpointEvery: Int, broadcastNodeLimit: Long): DataFrame = {
+  private def kCorePeel(ud: DataFrame, nodes0: DataFrame, k: Int,
+                        rounds: Int): DataFrame = {
     require(k >= 1, "k >= 1")
-    require(rounds >= 1, "rounds >= 1")
-    var alive = nodes0
-    val small = nodes0.count() <= broadcastNodeLimit
-    for (i <- 1 to rounds) {
+    val rg = regime(nodes0)
+    iterate(nodes0, rounds, 1) { alive =>
       // edges with BOTH endpoints alive, counted per dst — two semi joins
       // against the (broadcast-sized, shrinking) alive set, one count that
       // reuses ud's dst partitioning
-      val aSrc = alive.withColumnRenamed("key", "src")
-      val aDst = alive.withColumnRenamed("key", "dst")
-      val deg = ud
-        .join(if (small) broadcast(aSrc) else aSrc, Seq("src"), "left_semi")
-        .join(if (small) broadcast(aDst) else aDst, Seq("dst"), "left_semi")
+      ud.join(rg.bc(alive.withColumnRenamed("key", "src")), Seq("src"), "left_semi")
+        .join(rg.bc(alive.withColumnRenamed("key", "dst")), Seq("dst"), "left_semi")
         .groupBy(col("dst").as("key")).agg(count(lit(1)).as("deg"))
-      alive = deg.filter(col("deg") >= k).select(col("key"))
-      if (i % checkpointEvery == 0 && i < rounds) alive = alive.localCheckpoint(true)
+        .filter(col("deg") >= k).select(col("key"))
     }
-    alive
   }
 
   /** DuckDB twin of [[kCore]]: CTE fragments (ud, a0..aN) over edge CTE

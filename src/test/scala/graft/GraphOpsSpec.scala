@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops.GraphOps
 
 /** Traversal / weighted-adjacency / skew-safe aggregation operators. */
@@ -13,6 +13,68 @@ class GraphOpsSpec extends SparkSpec {
     Seq("a", "b", "c", "d").toDF("key"),
     Seq(("a", "b", 0), ("b", "c", 0), ("c", "d", 0), ("a", "c", 0))
       .toDF("src", "dst", "etype"))
+
+  // fixtures shared by an op's own test and the regime-agreement table
+  //  x -> y, y -> x, z -> x  (z is a source)
+  lazy val xyz = KinGraph(
+    Seq("x", "y", "z").toDF("key"),
+    Seq(("x", "y", 0), ("y", "x", 0), ("z", "x", 0)).toDF("src", "dst", "etype"))
+  // triangles {a,b,c} and {d,e,f} bridged by c-d
+  lazy val twoTriangles = KinGraph(
+    Seq("a", "b", "c", "d", "e", "f").toDF("key"),
+    Seq(("a", "b", 0), ("b", "c", 0), ("a", "c", 0),
+        ("d", "e", 0), ("e", "f", 0), ("d", "f", 0),
+        ("c", "d", 0)).toDF("src", "dst", "etype"))
+  // hub h points at a1,a2,a3; a1 also points at a2
+  lazy val hubGraph = KinGraph(
+    Seq("h", "a1", "a2", "a3").toDF("key"),
+    Seq(("h", "a1", 0), ("h", "a2", 0), ("h", "a3", 0), ("a1", "a2", 0))
+      .toDF("src", "dst", "etype"))
+  //  s -1-> a -1-> b ;  s -5-> b ;  b -1-> c   (cheapest s→b is 2 via a)
+  lazy val ssspEdges = Seq(("s", "a", 1L), ("a", "b", 1L), ("s", "b", 5L),
+    ("b", "c", 1L)).toDF("src", "dst", "w")
+  lazy val ssspNodes = Seq("s", "a", "b", "c", "iso").toDF("key")
+  // triangle {a,b,c} + pendant d-a + pendant chain e-d: 2-core = triangle
+  lazy val peelGraph = KinGraph(
+    Seq("a", "b", "c", "d", "e").toDF("key"),
+    Seq(("a", "b", 0), ("b", "c", 0), ("a", "c", 0),
+        ("d", "a", 0), ("e", "d", 0)).toDF("src", "dst", "etype"))
+  // a sends 1:3 to b:c, b and c return everything to a
+  lazy val wprEdges = Seq(("a", "b", 1L), ("a", "c", 3L),
+    ("b", "a", 2L), ("c", "a", 2L)).toDF("src", "dst", "w")
+  lazy val wprNodes = Seq("a", "b", "c").toDF("key")
+  // path a-b-c
+  lazy val path3 = KinGraph(
+    Seq("a", "b", "c").toDF("key"),
+    Seq(("a", "b", 0), ("b", "c", 0)).toDF("src", "dst", "etype"))
+  // a->{b,c}->d->e: two parallel shortest paths into d
+  lazy val parallelPaths = KinGraph(
+    Seq("a", "b", "c", "d", "e").toDF("key"),
+    Seq(("a", "b", 0), ("a", "c", 0), ("b", "d", 0), ("c", "d", 0),
+        ("d", "e", 0)).toDF("src", "dst", "etype"))
+  lazy val anfUnd = Seq(("a","b"),("b","c"),("c","d"),("x","y")).toDF("u", "v")
+  // square a-b-c-d-a with diagonal a-c; weights force MST {ab, bc, cd}
+  lazy val mstGraph = KinGraph(
+    Seq("a", "b", "c", "d").toDF("key"),
+    Seq(("a", "b", 0), ("b", "c", 0), ("c", "d", 0), ("d", "a", 0),
+      ("a", "c", 0)).toDF("src", "dst", "etype"))
+  lazy val mstWeights = Seq(("a", "b", 1L), ("b", "c", 2L), ("c", "d", 3L),
+    ("a", "d", 9L), ("a", "c", 8L)).toDF("u", "v", "w")
+  // path a-b-c-d-e plus chord a-c
+  lazy val matchGraph = KinGraph(
+    Seq("a", "b", "c", "d", "e").toDF("key"),
+    Seq(("a", "b", 0), ("b", "c", 0), ("c", "d", 0), ("d", "e", 0),
+      ("a", "c", 0)).toDF("src", "dst", "etype"))
+  // star center x with leaves l1..l4, plus edge l1-l2
+  lazy val starTriangle = KinGraph(
+    Seq("x", "l1", "l2", "l3", "l4").toDF("key"),
+    Seq(("x", "l1", 0), ("x", "l2", 0), ("x", "l3", 0), ("x", "l4", 0),
+      ("l1", "l2", 0)).toDF("src", "dst", "etype"))
+  // 3-spoke star into c
+  lazy val katzStar = KinGraph(
+    Seq("s1", "s2", "s3", "c").toDF("key"),
+    Seq(("s1","c"), ("s2","c"), ("s3","c")).toDF("src", "dst")
+      .withColumn("etype", lit(0)))
 
   test("kHopNeighbors: exact-k frontier") {
     assert(GraphOps.kHopNeighbors(g, "a", 1).as[String].collect().toSet == Set("b", "c"))
@@ -50,12 +112,9 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("fixedPointPageRank replays an exact integer reference loop") {
-    // x -> y, y -> x, z -> x  (z is a source; ranks exactly computable)
-    val pg = KinGraph(
-      Seq("x", "y", "z").toDF("key"),
-      Seq(("x", "y", 0), ("y", "x", 0), ("z", "x", 0)).toDF("src", "dst", "etype"))
+    // xyz: z is a source, so ranks are exactly computable
     val scale = 1000000000L
-    val got = GraphOps.fixedPointPageRank(pg, iters = 5, scale)
+    val got = GraphOps.fixedPointPageRank(xyz, iters = 5, scale)
       .as[(String, Long)].collect().toMap
     // reference loop: same integer arithmetic, driver-side
     val edges = Seq("x" -> "y", "y" -> "x", "z" -> "x")
@@ -73,13 +132,7 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("labelPropagationSync splits two cliques at the bridge; replays a reference loop") {
-    // triangles {a,b,c} and {d,e,f} bridged by c-d
-    val lg = KinGraph(
-      Seq("a", "b", "c", "d", "e", "f").toDF("key"),
-      Seq(("a", "b", 0), ("b", "c", 0), ("a", "c", 0),
-          ("d", "e", 0), ("e", "f", 0), ("d", "f", 0),
-          ("c", "d", 0)).toDF("src", "dst", "etype"))
-    val got = GraphOps.labelPropagationSync(lg, iters = 4)
+    val got = GraphOps.labelPropagationSync(twoTriangles, iters = 4)
       .as[(String, String)].collect().toMap
     // reference loop: same deterministic semantics, driver-side
     val ud = Seq("a" -> "b", "b" -> "c", "a" -> "c", "d" -> "e", "e" -> "f",
@@ -101,12 +154,9 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("personalizedPageRank replays an exact integer reference loop; state stays sparse") {
-    // x -> y, y -> x, z -> x ; source x: z is never reached (no in-path)
-    val pg = KinGraph(
-      Seq("x", "y", "z").toDF("key"),
-      Seq(("x", "y", 0), ("y", "x", 0), ("z", "x", 0)).toDF("src", "dst", "etype"))
+    // xyz with source x: z is never reached (no in-path)
     val scale = 1000000000L
-    val got = GraphOps.personalizedPageRank(pg, "x", 5, scale)
+    val got = GraphOps.personalizedPageRank(xyz, "x", 5, scale)
       .as[(String, Long)].collect().toMap
     // reference loop: same integer arithmetic, sparse state, driver-side
     val edges = Seq("x" -> "y", "y" -> "x", "z" -> "x")
@@ -169,14 +219,9 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("hits replays an exact integer reference loop; hub/authority split") {
-    // hub h points at a1,a2,a3; a1 also points at a2 (h = pure hub,
-    // a2 = strongest authority)
-    val hg = KinGraph(
-      Seq("h", "a1", "a2", "a3").toDF("key"),
-      Seq(("h", "a1", 0), ("h", "a2", 0), ("h", "a3", 0), ("a1", "a2", 0))
-        .toDF("src", "dst", "etype"))
+    // hubGraph: h = pure hub, a2 = strongest authority
     val scale = 1000000L
-    val got = GraphOps.hits(hg, iters = 3, scale)
+    val got = GraphOps.hits(hubGraph, iters = 3, scale)
       .as[(String, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     // reference loop: same integer arithmetic, driver-side
@@ -253,15 +298,11 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("weightedSsspBounded relaxes multi-hop shortcuts; bound limits reach") {
-    //  s -1-> a -1-> b ;  s -5-> b ;  b -1-> c   (cheapest s→b is 2 via a)
-    val edges = Seq(("s", "a", 1L), ("a", "b", 1L), ("s", "b", 5L), ("b", "c", 1L))
-      .toDF("src", "dst", "w")
-    val nodes = Seq("s", "a", "b", "c", "iso").toDF("key")
-    val got = GraphOps.weightedSsspBounded(edges, nodes, "s", 4)
+    val got = GraphOps.weightedSsspBounded(ssspEdges, ssspNodes, "s", 4)
       .as[(String, Long)].collect().toMap
     assert(got == Map("s" -> 0L, "a" -> 1L, "b" -> 2L, "c" -> 3L))
     // one iteration reaches only direct successors, with the direct weight
-    val one = GraphOps.weightedSsspBounded(edges, nodes, "s", 1)
+    val one = GraphOps.weightedSsspBounded(ssspEdges, ssspNodes, "s", 1)
       .as[(String, Long)].collect().toMap
     assert(one == Map("s" -> 0L, "a" -> 1L, "b" -> 5L))
   }
@@ -278,29 +319,20 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("kCore peels to the exact core once rounds converge") {
-    // triangle {a,b,c} + pendant d-a + pendant chain e-d: 2-core = triangle
-    val kg = KinGraph(
-      Seq("a", "b", "c", "d", "e").toDF("key"),
-      Seq(("a", "b", 0), ("b", "c", 0), ("a", "c", 0),
-          ("d", "a", 0), ("e", "d", 0)).toDF("src", "dst", "etype"))
-    val r3 = GraphOps.kCore(kg, k = 2, rounds = 3).as[String].collect().toSet
+    val r3 = GraphOps.kCore(peelGraph, k = 2, rounds = 3).as[String].collect().toSet
     assert(r3 == Set("a", "b", "c"))
     // convergence: one more round changes nothing
-    val r4 = GraphOps.kCore(kg, k = 2, rounds = 4).as[String].collect().toSet
+    val r4 = GraphOps.kCore(peelGraph, k = 2, rounds = 4).as[String].collect().toSet
     assert(r4 == r3)
     // a 3-core does not exist in this graph
-    assert(GraphOps.kCore(kg, k = 3, rounds = 3).count() == 0)
+    assert(GraphOps.kCore(peelGraph, k = 3, rounds = 3).count() == 0)
   }
 
   test("weightedFixedPointPageRank distributes mass weight-proportionally (exact hand check)") {
-    // a sends 1:3 to b:c, b and c return everything to a (w irrelevant
-    // on a single out-edge). One iteration from r0 = 1e9 has a closed
-    // form: inc(b) = (1e9*1) div 4, inc(c) = (1e9*3) div 4, inc(a) = 2e9;
-    // r1 = 15e7 + (85*inc) div 100.
-    val edges = Seq(("a", "b", 1L), ("a", "c", 3L),
-      ("b", "a", 2L), ("c", "a", 2L)).toDF("src", "dst", "w")
-    val nodes = Seq("a", "b", "c").toDF("key")
-    val r1 = GraphOps.weightedFixedPointPageRank(edges, nodes, iters = 1)
+    // wprEdges: w is irrelevant on b's and c's single out-edge. One
+    // iteration from r0 = 1e9 has a closed form: inc(b) = (1e9*1) div 4,
+    // inc(c) = (1e9*3) div 4, inc(a) = 2e9; r1 = 15e7 + (85*inc) div 100.
+    val r1 = GraphOps.weightedFixedPointPageRank(wprEdges, wprNodes, iters = 1)
       .as[(String, Long)].collect().toMap
     assert(r1 == Map(
       "a" -> (150000000L + 85L * 2000000000L / 100L),
@@ -323,12 +355,9 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("landmark closeness: all-landmarks on a path = exact harmonic centrality") {
-    // path a-b-c, undirected; with every node a landmark and enough
-    // rounds, the landmark estimate IS the exact harmonic centrality
-    val pg = KinGraph(
-      Seq("a", "b", "c").toDF("key"),
-      Seq(("a", "b", 0), ("b", "c", 0)).toDF("src", "dst", "etype"))
-    val got = GraphOps.landmarkCloseness(pg, nLandmarks = 3, rounds = 3)
+    // path3 undirected; with every node a landmark and enough rounds,
+    // the landmark estimate IS the exact harmonic centrality
+    val got = GraphOps.landmarkCloseness(path3, nLandmarks = 3, rounds = 3)
       .as[(String, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     // a: d=1 to b, d=2 to c -> 1e6 + 5e5; b: 1e6 + 1e6; c symmetric to a
@@ -336,18 +365,15 @@ class GraphOpsSpec extends SparkSpec {
     assert(got("b") == ((3L, 2000000L)))
     assert(got("c") == ((3L, 1500000L)))
     // bounded rounds truncate honestly: 1 round sees only direct neighbors
-    val r1 = GraphOps.landmarkCloseness(pg, nLandmarks = 3, rounds = 1)
+    val r1 = GraphOps.landmarkCloseness(path3, nLandmarks = 3, rounds = 1)
       .as[(String, Long, Long)].collect().map(r => r._1 -> r._2).toMap
     assert(r1("a") == 2L && r1("b") == 3L)
   }
 
   test("landmark eccentricity: bounded ecc per landmark + diameter lower bound") {
-    // path a-b-c with every node a landmark: ecc(a)=ecc(c)=2, ecc(b)=1,
+    // path3 with every node a landmark: ecc(a)=ecc(c)=2, ecc(b)=1,
     // so the pseudo-diameter lower bound hits the true diameter 2
-    val pg = KinGraph(
-      Seq("a", "b", "c").toDF("key"),
-      Seq(("a", "b", 0), ("b", "c", 0)).toDF("src", "dst", "etype"))
-    val (lm, st) = GraphOps.landmarkBfsState(pg, nLandmarks = 3, rounds = 4)
+    val (lm, st) = GraphOps.landmarkBfsState(path3, nLandmarks = 3, rounds = 4)
     val got = GraphOps.eccentricityFromState(lm, st)
       .as[(String, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -356,7 +382,7 @@ class GraphOpsSpec extends SparkSpec {
     assert(got("c") == ((3L, 2L, 2L)))
     // bounded rounds clip honestly: 1 round reaches only direct
     // neighbors, so every ecc (and the lb) reports 1
-    val (lm1, st1) = GraphOps.landmarkBfsState(pg, nLandmarks = 3, rounds = 1)
+    val (lm1, st1) = GraphOps.landmarkBfsState(path3, nLandmarks = 3, rounds = 1)
     val r1 = GraphOps.eccentricityFromState(lm1, st1)
       .as[(String, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -364,7 +390,7 @@ class GraphOpsSpec extends SparkSpec {
     // closeness from the SAME state frame matches the one-shot API
     val viaState = GraphOps.closenessFromState(st)
       .as[(String, Long, Long)].collect().toSet
-    val direct = GraphOps.landmarkCloseness(pg, nLandmarks = 3, rounds = 4)
+    val direct = GraphOps.landmarkCloseness(path3, nLandmarks = 3, rounds = 4)
       .as[(String, Long, Long)].collect().toSet
     assert(viaState == direct)
   }
@@ -389,11 +415,7 @@ class GraphOpsSpec extends SparkSpec {
       .as[(String, Long)].collect().toMap
     assert(got2.isEmpty, s"shortcut must remove all through-paths: $got2")
     // parallel shortest paths multiply: a->{b,c}->d->e gives d sigma 2
-    val pg = KinGraph(
-      Seq("a", "b", "c", "d", "e").toDF("key"),
-      Seq(("a", "b", 0), ("a", "c", 0), ("b", "d", 0), ("c", "d", 0),
-          ("d", "e", 0)).toDF("src", "dst", "etype"))
-    val got3 = GraphOps.landmarkBetweenness(pg, nLandmarks = 5, rounds = 3)
+    val got3 = GraphOps.landmarkBetweenness(parallelPaths, nLandmarks = 5, rounds = 3)
       .as[(String, Long)].collect().toMap
     // (a,e): sigma(a->d)=2 through d, sigma(d->e)=1 -> d carries 2; plus
     // (a,d) contributes b:1, c:1; (b,e)/(c,e) each put 1 on d
@@ -410,11 +432,12 @@ class GraphOpsSpec extends SparkSpec {
     val gen = GraphOps.landmarkBetweenness(udG, 4, 3, symmetric = false)
       .as[(String, Long)].collect().toMap
     assert(sym == gen, s"symmetric fast path must not change results: $sym vs $gen")
-    // large-graph path: broadcastNodeLimit = 0 forces the shuffle-join
-    // expansion; results are identical (the guard changes the plan only)
-    val noBc = GraphOps.landmarkBetweenness(pg, nLandmarks = 5, rounds = 3,
-        broadcastNodeLimit = 0L)
-      .as[(String, Long)].collect().toMap
+    // large-graph path: broadcast joins switched off force the
+    // shuffle-join expansion; results are identical (the regime changes
+    // the plan only)
+    val noBc = withBroadcastJoinsOff(
+      GraphOps.landmarkBetweenness(parallelPaths, nLandmarks = 5, rounds = 3)
+        .as[(String, Long)].collect().toMap)
     assert(noBc == got3, s"shuffle-path results diverged: $noBc vs $got3")
     // sigma guard: the diamond pushes sigma(a->d) to 2 — a limit of 1
     // must fail loudly instead of risking a silent i64 wrap at depth
@@ -541,36 +564,54 @@ class GraphOpsSpec extends SparkSpec {
     assert(out2.size == 11 && out2.values.forall(_ == 100L), s"got $out2")
   }
 
-  test("hyperAnf broadcast and union-fallback regimes agree bit-for-bit") {
-    val und = Seq(("a","b"),("b","c"),("c","d"),("x","y")).toDF("u", "v")
-    val bcast = GraphOps.hyperAnf(und, rounds = 2)
-      .as[(String, Int, Long, Long)].collect().sortBy(_._1).toSeq
-    val shuffle = GraphOps.hyperAnf(und, rounds = 2, broadcastNodeLimit = 0L)
-      .as[(String, Int, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(bcast == shuffle, s"broadcast=$bcast fallback=$shuffle")
+  test("broadcast and shuffle regimes agree bit-for-bit on every regime op") {
+    // each op on its own fixture, once as-is (the small regime: explicit
+    // broadcasts) and once with broadcast joins switched off, which every
+    // op reads as the shuffle regime (hyperAnf: the union fallback).
+    // Round counts cross each loop's checkpoint cadence.
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "fixedPointPageRank" -> (() => GraphOps.fixedPointPageRank(xyz, iters = 5)),
+      "fixedPointKatz" -> (() => GraphOps.fixedPointKatz(katzStar, iters = 5)),
+      "weightedFixedPointPageRank" -> (() =>
+        GraphOps.weightedFixedPointPageRank(wprEdges, wprNodes, iters = 5)),
+      "labelPropagationSync" -> (() =>
+        GraphOps.labelPropagationSync(twoTriangles, iters = 4)),
+      "weightedSsspBounded" -> (() =>
+        GraphOps.weightedSsspBounded(ssspEdges, ssspNodes, "s", 4)),
+      "personalizedPageRank" -> (() => GraphOps.personalizedPageRank(xyz, "x", 5)),
+      "landmarkBfsState" -> (() =>
+        GraphOps.landmarkBfsState(path3, nLandmarks = 3, rounds = 4)._2),
+      "kCore" -> (() => GraphOps.kCore(peelGraph, k = 2, rounds = 3)),
+      "kCoreAdaptive" -> (() => GraphOps.kCoreAdaptive(peelGraph, kOffset = 1, rounds = 3)),
+      "hits" -> (() => GraphOps.hits(hubGraph, iters = 3)),
+      "landmarkBetweenness" -> (() =>
+        GraphOps.landmarkBetweenness(parallelPaths, nLandmarks = 5, rounds = 3)),
+      "hyperAnf" -> (() => GraphOps.hyperAnf(anfUnd, rounds = 2)),
+      "hyperAnfTrace" -> (() => GraphOps.hyperAnfTrace(anfUnd, rounds = 2)),
+      "lubyMis" -> (() => GraphOps.lubyMis(g, rounds = 4)),
+      "boruvkaForest" -> (() =>
+        GraphOps.boruvkaForest(mstGraph, rounds = 3, weightsFrom = Some(mstWeights))),
+      "greedyMatching" -> (() => GraphOps.greedyMatching(matchGraph, rounds = 4)),
+      "jpColoring" -> (() => GraphOps.jpColoring(starTriangle, rounds = 4)))
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    ops.foreach { case (name, run) =>
+      val bcast = rows(run())
+      val shuffle = withBroadcastJoinsOff(rows(run()))
+      assert(bcast.nonEmpty, s"$name: empty fixture output proves nothing")
+      assert(bcast == shuffle, s"$name: broadcast=$bcast shuffle=$shuffle")
+    }
   }
 
   test("boruvkaForest: hand-weighted graph yields the exact MST") {
-    // square a-b-c-d-a with diagonal a-c; weights force MST {ab, bc, cd}
-    val gb = KinGraph(
-      Seq("a", "b", "c", "d").toDF("key"),
-      Seq(("a", "b", 0), ("b", "c", 0), ("c", "d", 0), ("d", "a", 0),
-        ("a", "c", 0)).toDF("src", "dst", "etype"))
-    val w = Seq(("a", "b", 1L), ("b", "c", 2L), ("c", "d", 3L),
-      ("a", "d", 9L), ("a", "c", 8L)).toDF("u", "v", "w")
-    val forest = GraphOps.boruvkaForest(gb, rounds = 3, weightsFrom = Some(w))
+    val forest = GraphOps.boruvkaForest(mstGraph, rounds = 3,
+        weightsFrom = Some(mstWeights))
       .select("u", "v", "w").as[(String, String, Long)].collect().toSet
     assert(forest == Set(("a", "b", 1L), ("b", "c", 2L), ("c", "d", 3L)),
       s"got $forest")
   }
 
   test("greedyMatching: matched edges disjoint, blocked justified, maximal") {
-    // path a-b-c-d-e plus chord a-c
-    val gm = KinGraph(
-      Seq("a", "b", "c", "d", "e").toDF("key"),
-      Seq(("a", "b", 0), ("b", "c", 0), ("c", "d", 0), ("d", "e", 0),
-        ("a", "c", 0)).toDF("src", "dst", "etype"))
-    val out = GraphOps.greedyMatching(gm, rounds = 4).collect()
+    val out = GraphOps.greedyMatching(matchGraph, rounds = 4).collect()
       .map(r => ((r.getString(0), r.getString(1)), r.getString(2))).toMap
     assert(out.size == 5)
     val matched = out.filter(_._2 == "matched").keySet
@@ -592,14 +633,10 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("jpColoring: proper, within the greedy bound, hubs color early") {
-    // star center x with leaves l1..l4, plus edge l1-l2: x-l1-l2 is a
-    // triangle, so chi = 3 and a proper coloring needs l1, l2 and x
-    // pairwise distinct while l3/l4 only avoid x's color
-    val gs = KinGraph(
-      Seq("x", "l1", "l2", "l3", "l4").toDF("key"),
-      Seq(("x", "l1", 0), ("x", "l2", 0), ("x", "l3", 0), ("x", "l4", 0),
-        ("l1", "l2", 0)).toDF("src", "dst", "etype"))
-    val out = GraphOps.jpColoring(gs, rounds = 4).collect()
+    // starTriangle: x-l1-l2 is a triangle, so chi = 3 and a proper
+    // coloring needs l1, l2 and x pairwise distinct while l3/l4 only
+    // avoid x's color
+    val out = GraphOps.jpColoring(starTriangle, rounds = 4).collect()
       .map(r => (r.getString(0),
         if (r.isNullAt(1)) -1 else r.getInt(1),
         if (r.isNullAt(2)) -1 else r.getInt(2))).toSeq
@@ -613,7 +650,7 @@ class GraphOpsSpec extends SparkSpec {
     // largest-degree-first: the hub is a round-1 local maximum and takes 0
     assert(out.find(_._1 == "x").get == (("x", 0, 1)))
     // deterministic
-    val out2 = GraphOps.jpColoring(gs, rounds = 4).collect()
+    val out2 = GraphOps.jpColoring(starTriangle, rounds = 4).collect()
       .map(r => (r.getString(0),
         if (r.isNullAt(1)) -1 else r.getInt(1),
         if (r.isNullAt(2)) -1 else r.getInt(2))).toSeq
@@ -964,14 +1001,10 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("fixedPointKatz: hand-checked star values, adaptive divisor") {
-    // 3-spoke star into c: dmax = 3 so the divisor is 4; spokes have no
-    // in-edges and stay at β = 1e6 forever, so c fixes at
+    // katzStar: dmax = 3 so the divisor is 4; spokes have no in-edges
+    // and stay at β = 1e6 forever, so c fixes at
     // 1e6 + (3·1e6) div 4 = 1 750 000 from iteration 1 on
-    val kg = KinGraph(
-      Seq("s1", "s2", "s3", "c").toDF("key"),
-      Seq(("s1","c"), ("s2","c"), ("s3","c")).toDF("src", "dst")
-        .withColumn("etype", lit(0)))
-    val out = GraphOps.fixedPointKatz(kg, iters = 5)
+    val out = GraphOps.fixedPointKatz(katzStar, iters = 5)
       .as[(String, Long)].collect().toMap
     assert(out("c") == 1750000L, s"got ${out("c")}")
     assert(out("s1") == 1000000L && out("s2") == 1000000L && out("s3") == 1000000L)

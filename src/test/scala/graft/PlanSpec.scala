@@ -118,9 +118,7 @@ class PlanSpec extends SparkSpec {
     val bg = GraphIO.openBucketed(spark, "planj_bucketed")
     // forbid broadcast so the co-location claim is what's tested (a
     // BroadcastExchange would also hide a lost bucketed distribution)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withBroadcastJoinsOff {
       val joined = bg.edges.join(bg.nodes, bg.edges("src") === bg.nodes("key"))
       val plan = finalPlanString(joined)
       assert(!plan.contains("Exchange"),
@@ -128,7 +126,7 @@ class PlanSpec extends SparkSpec {
           s"count) must join shuffle-free:\n${plan.take(1200)}")
       assert(plan.contains("Bucketed: true"),
         s"join must read the bucketed layout:\n${plan.take(1200)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("sketch probes broadcast the sketch side (never shuffle the stream)") {
@@ -275,14 +273,35 @@ class PlanSpec extends SparkSpec {
       s"repeated tf/cntBi subplans must share their exchanges:\n${plan.take(1200)}")
   }
 
-  test("personalized PageRank broadcasts its sparse state; edges read from cache") {
-    val r = graft.ops.GraphOps.personalizedPageRank(parquetGraph, "S1", 3)
-    val plan = finalPlanString(r)
-    assert(plan.contains("BroadcastHashJoin"),
-      s"sparse rank state must broadcast into the edge join:\n${plan.take(800)}")
-    assert(plan.contains("InMemoryTableScan") || plan.contains("TableCacheQueryStage"),
-      s"edges must come from the per-direction cache:\n${plan.take(800)}")
-    CacheScope.releaseAll()
+  test("loops broadcast their state (shuffle with broadcasts off); edges read from cache") {
+    import graft.ops.GraphOps
+    val g = parquetGraph
+    val we = g.edges.select($"src", $"dst").withColumn("w",
+      pmod(graft.functions.TextFunctions.hash60(
+        concat($"src", lit("|"), $"dst")), lit(100L)) + 1L)
+    val nodes = g.nodes.select($"key")
+    val loops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "personalizedPageRank" -> (() => GraphOps.personalizedPageRank(g, "S1", 3)),
+      "fixedPointPageRank" -> (() => GraphOps.fixedPointPageRank(g, 3)),
+      "fixedPointKatz" -> (() => GraphOps.fixedPointKatz(g, 3)),
+      "weightedFixedPointPageRank" -> (() =>
+        GraphOps.weightedFixedPointPageRank(we, nodes, 3)),
+      "labelPropagationSync" -> (() => GraphOps.labelPropagationSync(g, 3)),
+      "weightedSsspBounded" -> (() => GraphOps.weightedSsspBounded(we, nodes, "S1", 3)))
+    loops.foreach { case (name, run) =>
+      val plan = finalPlanString(run())
+      assert(plan.contains("BroadcastHashJoin"),
+        s"$name: the node-sized state must broadcast into the edge join:\n${plan.take(800)}")
+      assert(plan.contains("InMemoryTableScan") || plan.contains("TableCacheQueryStage"),
+        s"$name: edges must come from the per-direction cache:\n${plan.take(800)}")
+      // caches planned with broadcasts on must not feed the off run, where
+      // the switch is the shuffle regime: no explicit broadcast left
+      CacheScope.releaseAll()
+      val off = withBroadcastJoinsOff(finalPlanString(run()))
+      assert(!off.contains("BroadcastExchange"),
+        s"$name: with broadcast joins off the loop must shuffle:\n${off.take(800)}")
+      CacheScope.releaseAll()
+    }
   }
 
   test("adamic-adar cuts top-k with TakeOrdered, never a global sort") {
@@ -346,9 +365,7 @@ class PlanSpec extends SparkSpec {
     val frontier = Seq((0, "a", 0L, 1L)).toDF("i", "node", "d", "sigma")
     // isolate the explicit hint from the size-based auto broadcast (the
     // test frames are tiny; at scale the frontier's stats are unknown)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withBroadcastJoinsOff {
       val big = planString(
         graft.ops.GraphOps.expandFrontier(edges, frontier, "i", small = false, 1))
       assert(!big.contains("BroadcastExchange"),
@@ -357,7 +374,7 @@ class PlanSpec extends SparkSpec {
         graft.ops.GraphOps.expandFrontier(edges, frontier, "i", small = true, 1))
       assert(sm.contains("BroadcastExchange"),
         s"under the node limit the frontier must broadcast:\n${sm.take(900)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("span dedup stays equi-join only (no product, no position self-join)") {

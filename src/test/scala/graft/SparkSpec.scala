@@ -30,6 +30,16 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.Sf
 
+  /** `body` run with the session's broadcast joins switched off
+    * (`spark.sql.autoBroadcastJoinThreshold` = -1), the setting restored
+    * after. */
+  def withBroadcastJoinsOff[T](body: => T): T = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   /** Spark jobs `body` starts, counted once the listener bus has drained. */
   def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
