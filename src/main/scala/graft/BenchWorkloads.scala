@@ -100,9 +100,9 @@ object BenchWorkloads {
     * re-applying a delta replaces the same triples at the same cost. */
   def bulkEdgeUpsertBucketed(spark: SparkSession): Long = {
     // isolated BENCH_ONLY runs, or a store left by a build without
-    // schema files
+    // bucket-count files (written with, and so implying, the schema file)
     val fs = new org.apache.hadoop.fs.Path(
-      s"$storePath/edges/${graft.io.GraphStore.SchemaFile}")
+      s"$storePath/edges/${graft.io.GraphStore.BucketsFile}")
     val hfs = fs.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!hfs.exists(fs)) bulkEdgeStoreBuild(spark)
     var b = 0

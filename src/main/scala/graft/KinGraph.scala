@@ -21,7 +21,8 @@ import org.apache.spark.storage.StorageLevel
   * Scale notes (100 TB design):
   *  - neighbor/degree queries are single shuffle-free filters or one
   *    map-side-combinable aggregation;
-  *  - point lookups push `key = k` down to the Parquet scan;
+  *  - point lookups push `key = k` down to the Parquet scan, and on a
+  *    graph opened from a store the scan reads only the key's bucket;
   *  - upserts are one window-dedup shuffle keyed by identity, never
   *    per-record control flow;
   *  - hub skew in adjacency aggregation is left to AQE (enabled in the
@@ -30,7 +31,8 @@ import org.apache.spark.storage.StorageLevel
 class KinGraph(val nodes: DataFrame, val edges: DataFrame,
                val hashFunc: Column => Column = KinGraph.DefaultHashFunc,
                val cacheLen: Int = KinConfig.DefaultCacheLen,
-               val maxKeyLen: Int = Int.MaxValue)
+               val maxKeyLen: Int = Int.MaxValue,
+               layout: Option[io.GraphStore.Layout] = None)
     extends Serializable {
   import KinGraph._
   private def spark: SparkSession = nodes.sparkSession
@@ -38,7 +40,8 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
   /** Derived graph carrying the same pluggable key hash (reference's
     * user-supplied hash_func ctor parameter, graph.py:41-43, 82-90),
     * point-lookup cache bound (reference cache_len, graph.py:29) and key
-    * length contract (reference max_key_len, graph.py:23-24). */
+    * length contract (reference max_key_len, graph.py:23-24); not the
+    * store layout, since derived frames are not the stored scans. */
   private def derive(n: DataFrame, e: DataFrame): KinGraph =
     new KinGraph(n, e, hashFunc, cacheLen, maxKeyLen)
 
@@ -83,14 +86,26 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
     * the spec uses this to pin hit/clear behavior). */
   private[graft] def lookupCacheSize: Int = lookupCache.size()
 
+  /** Node rows matching `pred`, which holds only for keys in `keys`: on a
+    * stored graph, read from their buckets alone. */
+  private def nodesAt(keys: Seq[String], pred: Column): DataFrame =
+    layout.fold(nodes.filter(pred))(_.nodesAt(keys, pred))
+
+  /** Edge rows matching `pred`, which holds only for `side` in `keys`: on
+    * a stored graph, read from their buckets alone if the store prunes
+    * that side. */
+  private def edgesAt(side: String, keys: Seq[String], pred: Column): DataFrame =
+    layout.flatMap(_.edgesAt(side, keys, pred)).getOrElse(edges.filter(pred))
+
   /** Point-lookup plan for a node key — the predicate pushes down to the
     * parquet scan (Catalyst `PushedFilters`), the Spark analog of the
     * reference's hash-BST descent (graph.py:435-470). */
-  def nodeLookup(key: String): DataFrame = nodes.filter(col("key") === key)
+  def nodeLookup(key: String): DataFrame = nodesAt(Seq(key), col("key") === key)
 
   /** Point-lookup plan for an edge identity triple. */
   def edgeLookup(src: String, dst: String, etype: Int = 0): DataFrame =
-    edges.filter(col("src") === src && col("dst") === dst && col("etype") === etype)
+    edgesAt("src", Seq(src),
+      col("src") === src && col("dst") === dst && col("etype") === etype)
 
   /** The row behind a lookup-cache entry: the cached one, else one plain
     * `collect` of `lookup` — a single-stage job over the pushed-down scan
@@ -141,7 +156,7 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
     * result is lazy. Distinct because multi-type edges repeat the target. */
   def neighbors(key: String): DataFrame = {
     if (!hasNode(key)) throw new NodeNotFound(key)
-    edges.filter(col("src") === key).select(col("dst").as("key")).distinct()
+    edgesAt("src", Seq(key), col("src") === key).select(col("dst").as("key")).distinct()
   }
 
   /** In-neighbors (reference: graph.py:871-884). */
@@ -153,10 +168,10 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
   /** Eager existence check for a batch of queried keys — the reference's
     * per-key NodeNotFound raise (graph.py:865, hit inside neighbors_from's
     * loop). One single-stage scan: the `key IN (...)` predicate pushes
-    * down to the parquet scan. The collected set is bounded by the
-    * query-key list, never the node table. */
+    * down to the scan of the keys' buckets. The collected set is bounded
+    * by the query-key list, never the node table. */
   private def requireAllExist(keys: Seq[String]): Unit = {
-    val found = nodes.filter(col("key").isin(keys.distinct: _*)).select(col("key"))
+    val found = nodesAt(keys, col("key").isin(keys.distinct: _*)).select(col("key"))
       .collect().map(_.getString(0)).toSet
     keys.find(!found.contains(_)).foreach(k => throw new NodeNotFound(k))
   }
@@ -170,7 +185,8 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
                             name: String): DataFrame = {
     requireAllExist(keys)
     val ks = keys.distinct
-    edges.filter(col(from).isin(ks: _*)).select(col(from).as("key"), col(to).as("v"))
+    edgesAt(from, ks, col(from).isin(ks: _*))
+      .select(col(from).as("key"), col(to).as("v"))
       .union(strDF("key", ks).select(col("key"), lit(null).cast("string").as("v")))
       .groupBy(col("key"))
       .agg(sort_array(collect_set(col("v"))).as(name))
@@ -240,9 +256,13 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
     * cost one single-stage job, and a missing node (node tally 0) stays
     * distinct from a node with no edges (edge tally 0). */
   private def degreeOf(key: String, side: String): Long = {
-    val tagged = nodes.filter(col("key") === key).select(lit(true).as("isNode"))
-      .union(edges.filter(col(side) === key).select(lit(false).as("isNode")))
-    val tallies = tagged.rdd.mapPartitions { rows =>
+    val stored = layout.flatMap(_.edgesAt(side, Seq(key), col(side) === key))
+    val tagged = nodeLookup(key).select(lit(true).as("isNode"))
+      .union(stored.getOrElse(edges.filter(col(side) === key))
+        .select(lit(false).as("isNode")))
+    // a pruned read means both scans read one bucket: one task
+    val parts = if (stored.isDefined) tagged.rdd.coalesce(1) else tagged.rdd
+    val tallies = parts.mapPartitions { rows =>
       var (ns, es) = (0L, 0L)
       rows.foreach(r => if (r.getBoolean(0)) ns += 1 else es += 1)
       Iterator.single((ns, es))
@@ -306,18 +326,11 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
     derive(merged, edges)
   }
 
-  /** Pass-through of the optional explicit batch-order column. */
-  private def seqColOf(df: DataFrame): Seq[String] =
-    if (df.columns.contains(KinGraph.BatchOrderCol)) Seq(KinGraph.BatchOrderCol)
-    else Nil
-
   /** Upsert edges keyed (src, dst, etype); auto-creates missing endpoint
     * nodes exactly like reference graph.py:1446-1453 — but as one distinct
     * + anti-join union, not per-edge lookups. */
   def addEdges(newEdges: DataFrame): KinGraph = {
-    val withType =
-      if (newEdges.columns.contains("etype")) newEdges
-      else newEdges.withColumn("etype", lit(0))
+    val withType = withEtype(newEdges)
     val aligned = alignColumns(withType,
       edges.schema.fieldNames ++ seqColOf(withType),
       keyCols = Seq("src", "dst", "etype"))
@@ -344,8 +357,7 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
 
   /** Batched edge delete: anti-join on the identity triple. */
   def removeEdges(toDelete: DataFrame): KinGraph = {
-    val del = if (toDelete.columns.contains("etype")) toDelete
-              else toDelete.withColumn("etype", lit(0))
+    val del = withEtype(toDelete)
     derive(nodes, edges.join(del.select("src", "dst", "etype"),
       Seq("src", "dst", "etype"), "left_anti"))
   }
@@ -578,31 +590,36 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
 }
 
 object KinGraph {
-  /** Build from raw DataFrames, normalizing required columns. */
   /** Default key hash (the reference's built-in dictionary hash analog). */
   val DefaultHashFunc: Column => Column = c => xxhash64(c)
 
+  /** Build from raw DataFrames, normalizing required columns. */
   def apply(nodes: DataFrame, edges: DataFrame,
             hashFunc: Column => Column = DefaultHashFunc,
             maxKeyLen: Int = Int.MaxValue): KinGraph = {
     require(nodes.columns.contains("key"), "nodes needs a 'key' column")
     require(edges.columns.contains("src") && edges.columns.contains("dst"),
       "edges needs 'src' and 'dst' columns")
-    val e = if (edges.columns.contains("etype")) edges
-            else edges.withColumn("etype", lit(0))
-    new KinGraph(nodes, e, hashFunc, maxKeyLen = maxKeyLen)
+    new KinGraph(nodes, withEtype(edges), hashFunc, maxKeyLen = maxKeyLen)
   }
 
   /** Build a graph from an edge list alone; nodes are derived from distinct
     * endpoints (the common case for the derived testdata graphs). */
   def fromEdges(edges: DataFrame,
                 hashFunc: Column => Column = DefaultHashFunc): KinGraph = {
-    val e = if (edges.columns.contains("etype")) edges
-            else edges.withColumn("etype", lit(0))
+    val e = withEtype(edges)
     val nodes = e.select(col("src").as("key"))
       .union(e.select(col("dst").as("key"))).distinct()
     new KinGraph(nodes, e, hashFunc)
   }
+
+  /** `edges` with an `etype` column: an edge list without one is type 0. */
+  private[graft] def withEtype(edges: DataFrame): DataFrame =
+    if (edges.columns.contains("etype")) edges else edges.withColumn("etype", lit(0))
+
+  /** Pass-through of the optional explicit batch-order column. */
+  private[graft] def seqColOf(df: DataFrame): Seq[String] =
+    df.columns.filter(_ == BatchOrderCol).toSeq
 
   /** Name of the optional caller-supplied sequence column that pins
     * within-batch "last write wins" order (higher = later). Add it BEFORE
@@ -627,16 +644,22 @@ object KinGraph {
                             keys: Seq[String]): DataFrame = {
     val kept = base.join(incoming.select(keys.map(col): _*).distinct(),
       keys, "left_anti")
-    val attrCols = incoming.columns.filterNot(_ == BatchOrderCol).map(col)
+    kept.union(lastWriteWins(incoming, keys)
+      .select(base.schema.fieldNames.map(col): _*))
+  }
+
+  /** [[upsert]]'s within-batch dedup, shared with the store's writes:
+    * one row per identity by the order law above, without [[BatchOrderCol]]. */
+  private[graft] def lastWriteWins(df: DataFrame, keys: Seq[String]): DataFrame = {
+    val attrCols = df.columns.filterNot(_ == BatchOrderCol).map(col)
     val tagged =
-      if (incoming.columns.contains(BatchOrderCol))
-        incoming.withColumn("__ord", col(BatchOrderCol).cast("long"))
-      else incoming.withColumn("__ord", monotonically_increasing_id())
+      if (df.columns.contains(BatchOrderCol))
+        df.withColumn("__ord", col(BatchOrderCol).cast("long"))
+      else df.withColumn("__ord", monotonically_increasing_id())
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("__ord").desc, xxhash64(attrCols: _*).asc)
-    val deduped = tagged.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__ord", "__rn")
-    kept.union(deduped.select(base.schema.fieldNames.map(col): _*))
+    tagged.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__ord", "__rn", BatchOrderCol)
   }
 
   /** Project `df` onto `target` column list, padding absent attribute

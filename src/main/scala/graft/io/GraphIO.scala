@@ -2,19 +2,22 @@ package graft.io
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import graft.{KinConfig, KinGraph, KinbakuError}
+import GraphStore.{edgesPath, nodesPath}
 
-/** Persistence for KinGraph as a parquet table pair — the Spark analog of
-  * the reference's single-file storage with open flags r/w/n
+/** Persistence for KinGraph in the [[GraphStore]] layout — the Spark analog
+  * of the reference's single-file storage with open flags r/w/n
   * (/root/reference/kinbaku/graph.py:67-70, 282-306):
   *   "r" = open existing read-only (error if absent),
   *   "w" = open existing or create empty,
   *   "n" = always start empty (overwrite).
   *
-  * At scale the nodes table is written partitioned-by-bucket on key hash via
-  * the writer's repartition, so point lookups prune files. */
+  * Nodes are partitioned by the bucket of their key and edges by the
+  * bucket of their `src`, so point lookups on an opened graph prune to
+  * one bucket's files. */
 object GraphIO {
-  private def nodesPath(path: String) = s"$path/nodes"
-  private def edgesPath(path: String) = s"$path/edges"
+  /** Bucket count of a saved graph: up to 32 partition directories are
+    * listed on the driver, so `open` runs no Spark job. */
+  private val SaveBuckets = 8
 
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(nodesPath(path))
@@ -36,11 +39,7 @@ object GraphIO {
            maxKeyLen: Int = KinConfig.DefaultMaxKeyLen): KinGraph =
     flag match {
       case "r" | "w" if exists(spark, path) =>
-        KinGraph(
-          spark.read.parquet(nodesPath(path)),
-          spark.read.parquet(edgesPath(path)),
-          hashFunc,
-          maxKeyLen = maxKeyLen)
+        GraphStore.load(spark, path, hashFunc, maxKeyLen)
       case "r" =>
         throw new KinbakuError(s"graph not found at $path (flag=r)")
       case "w" | "n" => empty(spark, hashFunc, maxKeyLen)
@@ -63,9 +62,8 @@ object GraphIO {
       maxKeyLen = maxKeyLen)
   }
 
-  /** Persist a graph snapshot. Output files are size-coalesced: at local
-    * test scale a handful of files; at cluster scale callers pass a larger
-    * target partition count.
+  /** Persist a graph snapshot as a [[GraphStore]] of 8 buckets, one file
+    * per bucket, replacing whatever the directory held.
     *
     * NOTE on key length and round-trips: `maxKeyLen` is NOT persisted (the
     * reference's max_key_len is a ctor parameter, not a header field —
@@ -74,13 +72,11 @@ object GraphIO {
     * keys longer than 15) saves fine but a later `open` will throw
     * KeyTooLong on node()/addNodes/addEdges — reopen such graphs with
     * `maxKeyLen = Int.MaxValue`. */
-  def save(g: KinGraph, path: String, numFiles: Int = 4): Unit = {
-    g.nodes.repartition(numFiles).write.mode(SaveMode.Overwrite).parquet(nodesPath(path))
-    g.edges.repartition(numFiles).write.mode(SaveMode.Overwrite).parquet(edgesPath(path))
-  }
+  def save(g: KinGraph, path: String): Unit =
+    GraphStore.save(g, path, SaveBuckets)
 
   /** Format-parameterized export/import (CSV/JSON interchange alongside the
-    * canonical parquet layout). CSV writes headers; both formats read back
+    * canonical store layout). CSV writes headers; both formats read back
     * with schema inference pinned by the caller-visible column contract. */
   def export(g: KinGraph, path: String, format: String): Unit = {
     val n = g.nodes.write.mode(SaveMode.Overwrite).format(format)
@@ -102,24 +98,4 @@ object GraphIO {
     }
     KinGraph(withOpts.load(nodesPath(path)), withOpts.load(edgesPath(path)))
   }
-
-  /** Persist as BUCKETED catalog tables — the layout for point-lookup-heavy
-    * use (SURVEY §4 technique 1): nodes bucketed+sorted by key, edges
-    * bucketed by src, so a key-equality scan prunes to one bucket
-    * (`SelectedBucketsCount: 1 out of N` in the plan) and src-keyed joins
-    * co-locate without a shuffle. Note: for pure point-read sessions set
-    * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false` — the
-    * planner otherwise falls back to a plain scan (no join/agg to justify
-    * the bucketed distribution) which also forfeits bucket pruning. */
-  def saveBucketed(g: KinGraph, tablePrefix: String, buckets: Int = 8): Unit = {
-    g.nodes.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "key").sortBy("key")
-      .format("parquet").saveAsTable(s"${tablePrefix}_nodes")
-    g.edges.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "src").sortBy("src", "dst")
-      .format("parquet").saveAsTable(s"${tablePrefix}_edges")
-  }
-
-  def openBucketed(spark: SparkSession, tablePrefix: String): KinGraph =
-    KinGraph(spark.table(s"${tablePrefix}_nodes"), spark.table(s"${tablePrefix}_edges"))
 }

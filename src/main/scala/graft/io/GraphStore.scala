@@ -5,23 +5,23 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
-import graft.KinGraph
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import graft.{KinGraph, KinbakuError}
 
-/** Hash-bucket-PARTITIONED persisted graph layout for incremental mutation
-  * at scale — the complement of [[GraphIO.saveBucketed]] (which optimizes
-  * point READS via catalog bucketing but, like any saveAsTable layout, can
-  * only be replaced wholesale).
+/** The persisted graph layout, which [[GraphIO.save]]/[[GraphIO.open]]
+  * write and read: hash-bucket PARTITIONED tables that also support
+  * incremental mutation at scale.
   *
   * Layout: `path/edges/bucket=NN/…` and `path/nodes/bucket=NN/…` with
   * `bucket = pmod(xxhash64(src|key), nBuckets)`, plus each table's data
-  * schema (without `bucket`) as JSON in `path/{edges,nodes}/_schema.json`.
-  * The schema is fixed when the table is written, like kinbaku's header
-  * schema; every read hands it to `spark.read.schema`, so opening a store
-  * or upserting into it runs no parquet schema-inference job. Spark's file
-  * index skips `_`-prefixed paths, so the file is invisible to the scan.
+  * schema (without `bucket`) in `_schema.json` and its bucket count in
+  * `_buckets`. Both are fixed when the table is written, like kinbaku's
+  * header: reads hand the schema to `spark.read.schema`, so no parquet
+  * schema-inference job runs, and writes check their bucket count. A
+  * graph opened from a store carries its [[Layout]], so a key probe reads
+  * one bucket (kinbaku's one index descent). The bucket hash is a layout
+  * constant, not the pluggable `KinGraph.hashFunc`.
   *
   * An incremental upsert (reference `add_edge` semantics — (src,dst,etype)
   * replace + endpoint auto-create, graph.py:1446-1453) rewrites ONLY the
@@ -45,86 +45,145 @@ object GraphStore {
     * invisible to partition discovery. */
   val BucketCol = "bucket"
 
-  /** Per-table schema file. MUST start with '_' (or '.') so Spark's file
-    * index does not take it for data. */
+  /** Per-table schema and bucket-count files. MUST start with '_' (or
+    * '.') so Spark's file index does not take them for data. */
   val SchemaFile = "_schema.json"
+  val BucketsFile = "_buckets"
 
-  private def edgesPath(path: String) = s"$path/edges"
-  private def nodesPath(path: String) = s"$path/nodes"
+  private[io] def edgesPath(path: String) = s"$path/edges"
+  private[io] def nodesPath(path: String) = s"$path/nodes"
 
   private def bucketOf(c: Column, buckets: Int): Column =
     pmod(xxhash64(c), lit(buckets.toLong)).cast("int")
 
-  /** Last-write-wins dedup on `keys` — the same window law as
-    * [[KinGraph.upsert]] (explicit __seq wins, else source row order via
-    * monotonically_increasing_id, ties by full-row hash) so the store's
-    * replace semantics match the in-memory graph's exactly. */
-  private def lastWriteWins(df: DataFrame, keys: Seq[String]): DataFrame = {
-    val attrCols = df.columns.filterNot(_ == KinGraph.BatchOrderCol).map(col)
-    val tagged =
-      if (df.columns.contains(KinGraph.BatchOrderCol))
-        df.withColumn("__ord", col(KinGraph.BatchOrderCol).cast("long"))
-      else df.withColumn("__ord", monotonically_increasing_id())
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__ord").desc, xxhash64(attrCols: _*).asc)
-    tagged.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__ord", "__rn", KinGraph.BatchOrderCol)
-  }
-
-  private def writeBucketed(df: DataFrame, keyCol: String, path: String,
-                            buckets: Int): Unit = {
+  private def withBucket(df: DataFrame, keyCol: String, buckets: Int) =
     df.withColumn(BucketCol, bucketOf(col(keyCol), buckets))
-      .repartition(col(BucketCol)) // one file per touched bucket, not B×tasks
-      .write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(path)
-    // after the write: the overwrite clears the whole table directory
-    val (fs, file) = schemaFile(df.sparkSession, path)
-    val w = fs.create(file, true)
-    try w.write(df.schema.json.getBytes(UTF_8)) finally w.close()
+
+  /** A store's two tables as scanned, with their `bucket` column. Key
+    * reads also filter on the keys' buckets, which the optimizer folds to
+    * constants before partition pruning. */
+  final class Layout private[GraphStore] (
+      private[GraphStore] val nodesScan: DataFrame,
+      private[GraphStore] val edgesScan: DataFrame,
+      buckets: Int) extends Serializable {
+    private[graft] def nodesAt(keys: Seq[String], pred: Column): DataFrame =
+      inBuckets(nodesScan, keys, pred)
+    /** Edges matching `pred`, which holds only for `side` in `keys`, read
+      * from their buckets alone; None for a side the edges are not
+      * bucketed by (only `src` is). */
+    private[graft] def edgesAt(side: String, keys: Seq[String],
+                               pred: Column): Option[DataFrame] =
+      if (side == "src") Some(inBuckets(edgesScan, keys, pred)) else None
+    private def inBuckets(scan: DataFrame, keys: Seq[String], pred: Column) =
+      scan.filter(col(BucketCol).isin(
+        keys.distinct.map(k => bucketOf(lit(k), buckets)): _*) && pred)
+        .drop(BucketCol)
   }
 
-  private def schemaFile(spark: SparkSession,
-                         tablePath: String): (FileSystem, Path) = {
-    val p = new Path(tablePath, SchemaFile)
+  /** Replace the whole table at `path` with `df` bucketed on `keyCol`,
+    * then record its schema and bucket count. One file per bucket, from
+    * one write task per bucket: a fixed partition count, where AQE would
+    * fold a small table into one task. The overwrite is static whatever
+    * the session's mode, so no bucket of an earlier table survives. */
+  private def writeTable(df: DataFrame, keyCol: String, path: String,
+                         buckets: Int): Unit = {
+    withBucket(df, keyCol, buckets).repartition(buckets, col(BucketCol))
+      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "static")
+      .partitionBy(BucketCol).parquet(path)
+    // after the write: the overwrite clears the whole table directory
+    for ((name, text) <- Seq(SchemaFile -> df.schema.json,
+                             BucketsFile -> buckets.toString)) {
+      val (fs, file) = tableFile(df.sparkSession, path, name)
+      val w = fs.create(file, true)
+      try w.write(text.getBytes(UTF_8)) finally w.close()
+    }
+  }
+
+  /** [[GraphIO.save]]'s write: no dedup (a KinGraph is unique on its
+    * identities) and no count check (both tables are replaced). */
+  private[io] def save(g: KinGraph, path: String, buckets: Int): Unit = {
+    writeTable(g.nodes, "key", nodesPath(path), buckets)
+    writeTable(g.edges, "src", edgesPath(path), buckets)
+  }
+
+  private def tableFile(spark: SparkSession, tablePath: String,
+                        name: String): (FileSystem, Path) = {
+    val p = new Path(tablePath, name)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  private def readFile(spark: SparkSession, tablePath: String,
+                       name: String): Option[String] = {
+    val (fs, file) = tableFile(spark, tablePath, name)
+    if (!fs.exists(file)) None
+    else {
+      val r = fs.open(file)
+      try Some(new String(r.readAllBytes(), UTF_8)) finally r.close()
+    }
+  }
+
+  /** A table file's text; a table without it (written by a build that
+    * predates the file) is an error, not a fallback. */
+  private def required(spark: SparkSession, tablePath: String,
+                       name: String): String =
+    readFile(spark, tablePath, name).getOrElse(throw new FileNotFoundException(
+      s"${new Path(tablePath, name)}: GraphStore table has no $name; " +
+        "rewrite it with GraphIO.save or GraphStore.writeEdges/writeNodes"))
+
+  /** Throw unless every count the store at `path` records is `buckets`:
+    * a row written under another count misses its stored copy's bucket. */
+  private def requireBuckets(spark: SparkSession, path: String,
+                             buckets: Int): Unit =
+    for (t <- Seq(nodesPath(path), edgesPath(path));
+         stored <- readFile(spark, t, BucketsFile).map(_.trim.toInt)
+         if stored != buckets)
+      throw new KinbakuError(s"$t is stored with $stored buckets, " +
+        s"not $buckets: a write would misplace its rows")
+
   /** A table as written — data columns in their stored schema plus the
-    * discovered `bucket` partition column — without reading any parquet
-    * footer. A table with no schema file (written by a build that
-    * predates it) is an error, not a fallback to inference. */
-  private def scan(spark: SparkSession, tablePath: String): DataFrame = {
-    val (fs, file) = schemaFile(spark, tablePath)
-    if (!fs.exists(file))
-      throw new FileNotFoundException(s"$file: GraphStore table has no " +
-        "stored schema; rewrite it with GraphStore.write/writeEdges/writeNodes")
-    val r = fs.open(file)
-    val json = try new String(r.readAllBytes(), UTF_8) finally r.close()
-    spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])
-      .parquet(tablePath)
+    * `bucket` partition column — without reading any parquet footer.
+    * `bucket` is in the read schema so that an empty table, which has no
+    * `bucket=NN` directory to discover, still has the column (all null). */
+  private def scan(spark: SparkSession, tablePath: String): DataFrame =
+    spark.read.schema(DataType.fromJson(required(spark, tablePath, SchemaFile))
+      .asInstanceOf[StructType].add(BucketCol, IntegerType)).parquet(tablePath)
+
+  /** Both tables of the store at `path`, whose recorded bucket counts
+    * must agree. Reads no parquet data. */
+  private def layout(spark: SparkSession, path: String): Layout = {
+    val Seq(n, e) = Seq(nodesPath(path), edgesPath(path))
+    val (ns, es) = (scan(spark, n), scan(spark, e))
+    val Seq(nb, eb) = Seq(n, e).map(required(spark, _, BucketsFile).trim.toInt)
+    if (nb != eb)
+      throw new KinbakuError(s"$path: nodes are stored with $nb buckets " +
+        s"but edges with $eb; rewrite the store")
+    new Layout(ns, es, nb)
+  }
+
+  /** The store at `path` as a KinGraph whose key probes read one bucket;
+    * `open` and `GraphIO.open` differ only in the key contract. */
+  private[io] def load(spark: SparkSession, path: String,
+                       hashFunc: Column => Column, maxKeyLen: Int): KinGraph = {
+    val l = layout(spark, path)
+    new KinGraph(l.nodesScan.drop(BucketCol), l.edgesScan.drop(BucketCol),
+      hashFunc, maxKeyLen = maxKeyLen, layout = Some(l))
   }
 
   /** Initial edge-state write: batch dedup (last write wins) + one
     * hash-partitioned write — strictly linear, no full-state window. */
   def writeEdges(spark: SparkSession, path: String, edges: DataFrame,
                  buckets: Int): Unit = {
-    val withType =
-      if (edges.columns.contains("etype")) edges
-      else edges.withColumn("etype", lit(0))
-    writeBucketed(lastWriteWins(withType, Seq("src", "dst", "etype")),
-      "src", edgesPath(path), buckets)
+    requireBuckets(spark, path, buckets)
+    writeTable(KinGraph.lastWriteWins(KinGraph.withEtype(edges),
+      Seq("src", "dst", "etype")), "src", edgesPath(path), buckets)
   }
 
   /** Initial node-state write (key-deduped, replace semantics). */
   def writeNodes(spark: SparkSession, path: String, nodes: DataFrame,
-                 buckets: Int): Unit =
-    writeBucketed(lastWriteWins(nodes, Seq("key")), "key",
+                 buckets: Int): Unit = {
+    requireBuckets(spark, path, buckets)
+    writeTable(KinGraph.lastWriteWins(nodes, Seq("key")), "key",
       nodesPath(path), buckets)
-
-  /** Persist a full graph snapshot into the mutable layout. */
-  def write(g: KinGraph, path: String, buckets: Int = 64): Unit = {
-    writeNodes(g.nodes.sparkSession, path, g.nodes, buckets)
-    writeEdges(g.edges.sparkSession, path, g.edges, buckets)
   }
 
   def readEdges(spark: SparkSession, path: String): DataFrame =
@@ -134,7 +193,7 @@ object GraphStore {
     scan(spark, nodesPath(path)).drop(BucketCol)
 
   def open(spark: SparkSession, path: String): KinGraph =
-    KinGraph(readNodes(spark, path), readEdges(spark, path))
+    load(spark, path, KinGraph.DefaultHashFunc, Int.MaxValue)
 
   /** The distinct values of each int column of `df`, one set per column,
     * in a single no-shuffle pass (one Spark job). Bounded by `buckets`,
@@ -170,29 +229,24 @@ object GraphStore {
     * file modification times). */
   def upsertEdges(spark: SparkSession, path: String, delta: DataFrame,
                   buckets: Int): Unit = {
-    val withType =
-      if (delta.columns.contains("etype")) delta
-      else delta.withColumn("etype", lit(0))
-    val persisted = scan(spark, edgesPath(path))
-    val cols = persisted.columns.filterNot(_ == BucketCol)
+    val stored = layout(spark, path)
+    requireBuckets(spark, path, buckets)
+    val cols = stored.edgesScan.columns.filterNot(_ == BucketCol)
     // align to the persisted schema BEFORE the dedup window — the window's
     // tie-break hashes the aligned column set, matching KinGraph.addEdges'
     // alignColumns-then-upsert order exactly
-    val seqCol =
-      if (withType.columns.contains(KinGraph.BatchOrderCol))
-        Seq(KinGraph.BatchOrderCol) else Nil
-    val padded = cols.foldLeft(withType) { (d, c) =>
-      if (d.columns.contains(c)) d else d.withColumn(c, lit(null))
-    }.select((cols ++ seqCol).map(col): _*)
-    val dd = lastWriteWins(padded, Seq("src", "dst", "etype"))
-      .withColumn(BucketCol, bucketOf(col("src"), buckets))
+    val withType = KinGraph.withEtype(delta)
+    val padded = KinGraph.alignColumns(withType,
+      cols ++ KinGraph.seqColOf(withType), Seq("src", "dst", "etype"))
+    val dd = withBucket(KinGraph.lastWriteWins(padded, Seq("src", "dst", "etype")),
+      "src", buckets)
       .localCheckpoint(true) // read 4×: bucket sets, anti-join, union, endpoints
     // a node's bucket is its key's hash, so the src bucket doubles as the
     // src endpoint's node bucket
     val Seq(touched, dstBuckets) =
       bucketSets(dd, col(BucketCol), bucketOf(col("dst"), buckets))
     if (touched.isEmpty) return
-    val existing = persisted.filter(col(BucketCol).isin(touched: _*))
+    val existing = stored.edgesScan.filter(col(BucketCol).isin(touched: _*))
     // lastWriteWins left dd unique on the triple: no distinct needed
     val kept = existing.join(dd.select("src", "dst", "etype"),
       Seq("src", "dst", "etype"), "left_anti")
@@ -202,22 +256,17 @@ object GraphStore {
     // existence only in the buckets the delta's endpoint keys hash into;
     // skip the node write entirely when nothing is missing
     val touchedN = (touched ++ dstBuckets).distinct
-    val epk = dd.select(col("src").as("key"))
-      .union(dd.select(col("dst").as("key"))).distinct()
-      .withColumn(BucketCol, bucketOf(col("key"), buckets))
-    val existingN = scan(spark, nodesPath(path))
+    val epk = withBucket(dd.select(col("src").as("key"))
+      .union(dd.select(col("dst").as("key"))).distinct(), "key", buckets)
+    val existingN = stored.nodesScan
       .filter(col(BucketCol).isin(touchedN: _*))
     val missing = epk.join(existingN.select("key"), Seq("key"), "left_anti")
       .localCheckpoint(true) // read twice: bucket set + union
     // only buckets that actually gained a node need rewriting
     val Seq(hot) = bucketSets(missing, col(BucketCol))
     if (hot.nonEmpty) {
-      val ncols = existingN.columns
-      val padded = ncols.foldLeft(missing) { (d, c) =>
-        if (d.columns.contains(c)) d else d.withColumn(c, lit(null))
-      }.select(ncols.map(col): _*)
-      overwriteTouched(
-        existingN.filter(col(BucketCol).isin(hot: _*)).unionByName(padded),
+      overwriteTouched(existingN.filter(col(BucketCol).isin(hot: _*))
+        .unionByName(KinGraph.alignColumns(missing, existingN.columns, Seq("key"))),
         nodesPath(path))
     }
   }

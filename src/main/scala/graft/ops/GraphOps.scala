@@ -2332,8 +2332,10 @@ object GraphOps {
     * floor and the peel. */
   def kCoreAdaptive(g: KinGraph, kOffset: Int, rounds: Int): DataFrame = {
     val ud = undirectedEdges(g, Some(col("dst")))
+    // min over an EMPTY degree frame is NULL: on an edgeless graph every
+    // node has degree 0
     val minDeg = ud.groupBy(col("dst")).agg(count(lit(1)).as("d"))
-      .agg(min(col("d"))).first().getLong(0)
+      .agg(coalesce(min(col("d")), lit(0L))).first().getLong(0)
     kCorePeel(ud, g.nodes.select(col("key")),
       (minDeg + kOffset).toInt, rounds)
   }

@@ -780,9 +780,9 @@ object EventStreams {
     * Scale notes: each merge is one keyed full-outer join of target ×
     * batch — the target re-shuffles per batch in this plain-parquet
     * form; a real deployment buckets the target by key so the join is
-    * shuffle-free on the target side (GraphIO.saveBucketed is that
-    * layout), or uses a table format whose MERGE does file-level
-    * skipping. The swap discipline is identical either way. */
+    * shuffle-free on the target side, or uses a table format whose
+    * MERGE does file-level skipping. The swap discipline is identical
+    * either way. */
   /** Recursive delete that CHECKS every unlink: a silently-failed delete
     * of `_old` would make the next swap's rename throw
     * FileAlreadyExistsException one batch later, far from the cause. */

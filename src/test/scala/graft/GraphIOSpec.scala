@@ -19,6 +19,39 @@ class GraphIOSpec extends SparkSpec {
     assert(g2.hasEdge("b", "c", 1))
   }
 
+  test("a plain-parquet graph dir fails to open, naming the missing file") {
+    val dir = Files.createTempDirectory("graft_io_plain").toString
+    Seq("a").toDF("key").write.parquet(s"$dir/nodes")
+    Seq(("a", "a", 0)).toDF("src", "dst", "etype").write.parquet(s"$dir/edges")
+    for (flag <- Seq("r", "w")) {
+      val e = intercept[java.io.FileNotFoundException](GraphIO.open(spark, dir, flag))
+      assert(e.getMessage.contains(s"nodes/${graft.io.GraphStore.SchemaFile}"),
+        e.getMessage)
+    }
+  }
+
+  test("an edgeless and an empty saved graph answer key probes after open") {
+    val dir = Files.createTempDirectory("graft_io_edgeless").toString
+    GraphIO.save(KinGraph(Seq("a", "b").toDF("key"),
+      Seq.empty[(String, String, Int)].toDF("src", "dst", "etype")), dir)
+    val g = GraphIO.open(spark, dir, "r")
+    assert(g.hasNode("a") && !g.hasNode("z"))
+    assert(!g.hasEdge("a", "b"))
+    assert(g.outDegree("a") == 0L && g.inDegree("a") == 0L)
+    assert(g.neighbors("a").count() == 0)
+    assert(g.neighborsFromSeq(Seq("a", "b")) == Seq("a" -> Nil, "b" -> Nil))
+    assertThrows[NodeNotFound](g.outDegree("z"))
+
+    GraphIO.save(GraphIO.empty(spark), dir)
+    val e = GraphIO.open(spark, dir, "r")
+    assert(e.nNodes == 0 && e.nEdges == 0)
+    assert(!e.hasNode("a") && !e.hasEdge("a", "b"))
+    assertThrows[NodeNotFound](e.node("a"))
+    assertThrows[NodeNotFound](e.neighbors("a"))
+    assertThrows[NodeNotFound](e.outDegree("a"))
+    assertThrows[NodeNotFound](e.neighborsFrom(Seq("a")))
+  }
+
   test("open('r') on missing path throws; open('w') creates empty") {
     assertThrows[KinbakuError](GraphIO.open(spark, "/tmp/graft_missing_xyz", "r"))
     val g = GraphIO.open(spark, "/tmp/graft_missing_xyz", "w")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import graft.ops.GraphOps
 
 /** Traversal / weighted-adjacency / skew-safe aggregation operators. */
@@ -564,11 +564,17 @@ class GraphOpsSpec extends SparkSpec {
     assert(out2.size == 11 && out2.values.forall(_ == 100L), s"got $out2")
   }
 
+  /** `run`'s sorted rows in the small regime (explicit broadcasts) and
+    * with broadcast joins switched off, which every regime op reads as the
+    * shuffle regime (hyperAnf: the union fallback). */
+  private def inBothRegimes(run: () => DataFrame): (Seq[Row], Seq[Row]) = {
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    (rows(run()), withBroadcastJoinsOff(rows(run())))
+  }
+
   test("broadcast and shuffle regimes agree bit-for-bit on every regime op") {
-    // each op on its own fixture, once as-is (the small regime: explicit
-    // broadcasts) and once with broadcast joins switched off, which every
-    // op reads as the shuffle regime (hyperAnf: the union fallback).
-    // Round counts cross each loop's checkpoint cadence.
+    // each op on its own fixture, in both regimes. Round counts cross
+    // each loop's checkpoint cadence.
     val ops: Seq[(String, () => DataFrame)] = Seq(
       "fixedPointPageRank" -> (() => GraphOps.fixedPointPageRank(xyz, iters = 5)),
       "fixedPointKatz" -> (() => GraphOps.fixedPointKatz(katzStar, iters = 5)),
@@ -593,13 +599,49 @@ class GraphOpsSpec extends SparkSpec {
         GraphOps.boruvkaForest(mstGraph, rounds = 3, weightsFrom = Some(mstWeights))),
       "greedyMatching" -> (() => GraphOps.greedyMatching(matchGraph, rounds = 4)),
       "jpColoring" -> (() => GraphOps.jpColoring(starTriangle, rounds = 4)))
-    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
     ops.foreach { case (name, run) =>
-      val bcast = rows(run())
-      val shuffle = withBroadcastJoinsOff(rows(run()))
+      val (bcast, shuffle) = inBothRegimes(run)
       assert(bcast.nonEmpty, s"$name: empty fixture output proves nothing")
       assert(bcast == shuffle, s"$name: broadcast=$bcast shuffle=$shuffle")
     }
+  }
+
+  test("every regime op runs on an edgeless graph, alike in both regimes") {
+    // a filtered subgraph can lose every edge: no op may trip on the empty
+    // aggregates (kCoreAdaptive's min degree read a NULL cell)
+    val none = Seq.empty[(String, String, Int)].toDF("src", "dst", "etype")
+    val edgeless = KinGraph(Seq("a", "b", "c").toDF("key"), none)
+    def noEdges(df: DataFrame) = df.filter(lit(false))
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "fixedPointPageRank" -> (() => GraphOps.fixedPointPageRank(edgeless, iters = 5)),
+      "fixedPointKatz" -> (() => GraphOps.fixedPointKatz(edgeless, iters = 5)),
+      "weightedFixedPointPageRank" -> (() =>
+        GraphOps.weightedFixedPointPageRank(noEdges(wprEdges), wprNodes, iters = 5)),
+      "labelPropagationSync" -> (() =>
+        GraphOps.labelPropagationSync(edgeless, iters = 4)),
+      "weightedSsspBounded" -> (() =>
+        GraphOps.weightedSsspBounded(noEdges(ssspEdges), ssspNodes, "s", 4)),
+      "personalizedPageRank" -> (() => GraphOps.personalizedPageRank(edgeless, "a", 5)),
+      "landmarkBfsState" -> (() =>
+        GraphOps.landmarkBfsState(edgeless, nLandmarks = 3, rounds = 4)._2),
+      "kCore" -> (() => GraphOps.kCore(edgeless, k = 2, rounds = 3)),
+      "kCoreAdaptive" -> (() => GraphOps.kCoreAdaptive(edgeless, kOffset = 1, rounds = 3)),
+      "hits" -> (() => GraphOps.hits(edgeless, iters = 3)),
+      "landmarkBetweenness" -> (() =>
+        GraphOps.landmarkBetweenness(edgeless, nLandmarks = 3, rounds = 3)),
+      "hyperAnf" -> (() => GraphOps.hyperAnf(noEdges(anfUnd), rounds = 2)),
+      "hyperAnfTrace" -> (() => GraphOps.hyperAnfTrace(noEdges(anfUnd), rounds = 2)),
+      "lubyMis" -> (() => GraphOps.lubyMis(edgeless, rounds = 4)),
+      "boruvkaForest" -> (() => GraphOps.boruvkaForest(edgeless, rounds = 3,
+        weightsFrom = Some(noEdges(mstWeights)))),
+      "greedyMatching" -> (() => GraphOps.greedyMatching(edgeless, rounds = 4)),
+      "jpColoring" -> (() => GraphOps.jpColoring(edgeless, rounds = 4)))
+    ops.foreach { case (name, run) =>
+      val (bcast, shuffle) = inBothRegimes(run)
+      assert(bcast == shuffle, s"$name: broadcast=$bcast shuffle=$shuffle")
+    }
+    // every node has degree 0 < 0 + kOffset: the adaptive core is empty
+    assert(GraphOps.kCoreAdaptive(edgeless, kOffset = 1, rounds = 3).isEmpty)
   }
 
   test("boruvkaForest: hand-weighted graph yields the exact MST") {

@@ -87,6 +87,23 @@ class GraphStoreSpec extends SparkSpec {
     finally spark.conf.unset(OverwriteMode)
   }
 
+  test("a save or initial write replaces every bucket under a DYNAMIC " +
+    "session overwrite mode") {
+    val dir = freshDir("dynsave")
+    def edges(n: Int) = (0 until n).map(i => (s"s$i", s"t$i", 0)).toDF("src", "dst", "etype")
+    def graph(n: Int) = KinGraph.fromEdges(edges(n))
+    spark.conf.set(OverwriteMode, "DYNAMIC")
+    try {
+      graft.io.GraphIO.save(graph(40), dir)
+      graft.io.GraphIO.save(graph(2), dir) // hits at most 2 of the 8 buckets
+      val g = graft.io.GraphIO.open(spark, dir, "r")
+      assert(g.nEdges == 2 && g.nNodes == 4)
+      GraphStore.writeEdges(spark, dir, edges(40), 8)
+      GraphStore.writeEdges(spark, dir, edges(2), 8)
+      assert(GraphStore.readEdges(spark, dir).count() == 2)
+    } finally spark.conf.unset(OverwriteMode)
+  }
+
   test("untouched buckets keep byte-identical files after an upsert") {
     val dir = freshDir("prune")
     val base = spark.range(2000).select(
@@ -172,6 +189,47 @@ class GraphStoreSpec extends SparkSpec {
     GraphStore.upsertEdges(spark, dir, delta.limit(0), 8)
     assert(fileState(dir + "/edges") == edges)
     assert(fileState(dir + "/nodes") == nodes)
+  }
+
+  test("a write with another bucket count than the store's throws") {
+    val dir = freshDir("buckets")
+    val base = (0 until 20).map(i => (s"n$i", s"m$i", 0, i.toLong))
+      .toDF("src", "dst", "etype", "w")
+    GraphStore.writeEdges(spark, dir, base, 8)
+    GraphStore.writeNodes(spark, dir, base.select(col("src").as("key"))
+      .union(base.select(col("dst").as("key"))), 8)
+    // an existing edge whose src hashes to another bucket under 16
+    val bucketsOf = base.select(col("src"), col("dst"),
+      pmod(xxhash64(col("src")), lit(8L)).as("b8"),
+      pmod(xxhash64(col("src")), lit(16L)).as("b16"))
+    val moved = bucketsOf.filter(col("b8") =!= col("b16")).select("src", "dst")
+      .as[(String, String)].head()
+    val edges = fileState(dir + "/edges")
+    val e = intercept[KinbakuError](GraphStore.upsertEdges(spark, dir,
+      Seq((moved._1, moved._2, 0, 1L)).toDF("src", "dst", "etype", "w"), 16))
+    assert(e.getMessage.contains("with 8 buckets, not 16"), e.getMessage)
+    assert(fileState(dir + "/edges") == edges)
+    assert(GraphStore.readEdges(spark, dir)
+      .filter(col("src") === moved._1 && col("dst") === moved._2).count() == 1)
+    assertThrows[KinbakuError](GraphStore.writeNodes(spark, dir,
+      Seq("n0").toDF("key"), 16))
+    assertThrows[KinbakuError](GraphStore.writeEdges(spark, dir, base, 4))
+    GraphStore.writeEdges(spark, dir, base, 8) // the stored count is fine
+  }
+
+  test("open takes the bucket count from the store and checks the tables " +
+    "agree; a table without the record fails, naming the file") {
+    val (dir, _, _, _) = mergeFixture("record")
+    val nodesRecord = new File(s"$dir/nodes/${GraphStore.BucketsFile}")
+    Files.writeString(nodesRecord.toPath, "16")
+    new File(s"$dir/nodes/.${GraphStore.BucketsFile}.crc").delete()
+    val e = intercept[KinbakuError](GraphStore.open(spark, dir))
+    assert(e.getMessage.contains("nodes are stored with 16 buckets but " +
+      "edges with 8"), e.getMessage)
+    assert(nodesRecord.delete())
+    val missing = intercept[FileNotFoundException](GraphStore.open(spark, dir))
+    assert(missing.getMessage.contains(s"nodes/${GraphStore.BucketsFile}"),
+      missing.getMessage)
   }
 
   test("a table without a schema file fails loudly, naming the file") {

@@ -187,6 +187,11 @@ class KinGraphSpec extends SparkSpec {
       val h = io.GraphIO.open(spark, dir, "r")
       jobsOf { read(h); () }
     }
+    // and each key probe reads one bucket: one file, so one task
+    def coldTasks(read: KinGraph => Any): Int = {
+      val h = io.GraphIO.open(spark, dir, "r")
+      tasksOf { read(h); () }
+    }
     val k = oracle.nodes.toSeq.sorted.head
     val (s, d, t) = oracle.edges.head
     val absent = oracle.nodes.find(x => !oracle.edges.contains((s, x, t))).get
@@ -199,6 +204,11 @@ class KinGraphSpec extends SparkSpec {
     assert(cold(_.inDegree(k)) == 1, "inDegree")
     assert(cold(_.neighborsFrom(oracle.nodes.toSeq.take(16)).collect()) <= 3,
       "neighborsFrom")
+    assert(coldTasks(_.node(k)) == 1, "node tasks")
+    assert(coldTasks(_.hasNode(k)) == 1, "hasNode tasks")
+    assert(coldTasks(_.hasNode("missing_key")) == 1, "hasNode(missing) tasks")
+    assert(coldTasks(_.hasEdge(s, d, t)) == 1, "hasEdge tasks")
+    assert(coldTasks(_.outDegree(k)) == 1, "outDegree tasks")
     val h = io.GraphIO.open(spark, dir, "r")
     assert(h.hasNode(k))
     assert(jobsOf(h.node(k)) == 0, "node after a found hasNode")

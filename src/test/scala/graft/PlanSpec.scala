@@ -89,44 +89,27 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bucketed tables prune to one bucket on key lookups") {
-    val g = KinGraph(
-      Seq("a", "b", "c", "d").toDF("key"),
-      Seq(("a", "b", 0)).toDF("src", "dst", "etype"))
-    spark.sql("DROP TABLE IF EXISTS plan_bucketed_nodes")
-    spark.sql("DROP TABLE IF EXISTS plan_bucketed_edges")
-    GraphIO.saveBucketed(g, "plan_bucketed", buckets = 4)
-    val bg = GraphIO.openBucketed(spark, "plan_bucketed")
-    // autoBucketedScan drops bucketed reads (and with them bucket pruning)
-    // when no join/agg needs the distribution — disable it for point reads
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try {
-      val plan = finalPlanString(bg.nodeLookup("a"))
-      assert(plan.contains("SelectedBucketsCount: 1 out of 4"),
-        s"bucket pruning missing:\n${plan.take(900)}")
-    } finally {
-      spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    // a saved graph's tables are partitioned by the bucket of the node key
+    // and of the edge src; a key probe's scan selects that one directory
+    val helper =
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def partitionsRead(df: org.apache.spark.sql.DataFrame): Seq[Long] = {
+      df.collect()
+      helper.collect(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.metrics("numPartitions").value
+      }
     }
-  }
-
-  test("bucketed graph tables join on the bucket key without any Exchange") {
-    val g = KinGraph(
-      Seq("a", "b", "c", "d").toDF("key"),
-      Seq(("a", "b", 0), ("b", "c", 0), ("c", "d", 0)).toDF("src", "dst", "etype"))
-    spark.sql("DROP TABLE IF EXISTS planj_bucketed_nodes")
-    spark.sql("DROP TABLE IF EXISTS planj_bucketed_edges")
-    GraphIO.saveBucketed(g, "planj_bucketed", buckets = 4)
-    val bg = GraphIO.openBucketed(spark, "planj_bucketed")
-    // forbid broadcast so the co-location claim is what's tested (a
-    // BroadcastExchange would also hide a lost bucketed distribution)
-    withBroadcastJoinsOff {
-      val joined = bg.edges.join(bg.nodes, bg.edges("src") === bg.nodes("key"))
-      val plan = finalPlanString(joined)
-      assert(!plan.contains("Exchange"),
-        s"nodes (bucketed by key) and edges (bucketed by src, same bucket " +
-          s"count) must join shuffle-free:\n${plan.take(1200)}")
-      assert(plan.contains("Bucketed: true"),
-        s"join must read the bucketed layout:\n${plan.take(1200)}")
-    }
+    val g = parquetGraph
+    val e = g.edges.select("src", "dst", "etype").as[(String, String, Int)].head()
+    assert(partitionsRead(g.nodes) == Seq(8L), "a full scan reads every bucket")
+    assert(partitionsRead(g.nodeLookup(e._1)) == Seq(1L), "nodeLookup")
+    assert(partitionsRead(g.nodeLookup("missing_key")) == Seq(1L), "missing key")
+    assert(partitionsRead(g.edgeLookup(e._1, e._2, e._3)) == Seq(1L), "edgeLookup")
+    assert(partitionsRead(g.neighbors(e._1)) == Seq(1L), "neighbors")
+    // a derived graph's frames are no longer the stored scans
+    assert(partitionsRead(g.removeEdge(e._1, e._2, e._3).nodeLookup(e._1)) ==
+      Seq(8L), "derived graph")
   }
 
   test("sketch probes broadcast the sketch side (never shuffle the stream)") {

@@ -2,7 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graftbridge.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,17 +42,25 @@ abstract class SparkSpec extends AnyFunSuite {
   }
 
   /** Spark jobs `body` starts, counted once the listener bus has drained. */
-  def jobsOf(body: => Unit): Int = {
+  def jobsOf(body: => Unit): Int = startsOf(body)._1
+
+  /** Spark tasks `body` starts, counted like [[jobsOf]]. */
+  def tasksOf(body: => Unit): Int = startsOf(body)._2
+
+  private def startsOf(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
+    val (jobs, tasks) = (new AtomicInteger(0), new AtomicInteger(0))
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
       }
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = {
+        tasks.incrementAndGet(); ()
+      }
     }
     ListenerDrain.drain(sc)
     sc.addSparkListener(listener)
-    try { body; ListenerDrain.drain(sc); jobs.get() }
+    try { body; ListenerDrain.drain(sc); (jobs.get(), tasks.get()) }
     finally sc.removeSparkListener(listener)
   }
 }
