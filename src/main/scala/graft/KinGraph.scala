@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Spark-native re-expression of the reference's `Graph` facade
   * (/root/reference/kinbaku/graph.py:18) — a directed property graph where
@@ -21,8 +23,9 @@ import org.apache.spark.storage.StorageLevel
   * Scale notes (100 TB design):
   *  - neighbor/degree queries are single shuffle-free filters or one
   *    map-side-combinable aggregation;
-  *  - point lookups push `key = k` down to the Parquet scan, and on a
-  *    graph opened from a store the scan reads only the key's bucket;
+  *  - point lookups push `key = k` down to the Parquet scan; on a graph
+  *    opened from a store they read the key's whole bucket once, and
+  *    later reads into it are answered on the driver with no job;
   *  - upserts are one window-dedup shuffle keyed by identity, never
   *    per-record control flow;
   *  - hub skew in adjacency aggregation is left to AQE (enabled in the
@@ -32,7 +35,7 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
                val hashFunc: Column => Column = KinGraph.DefaultHashFunc,
                val cacheLen: Int = KinConfig.DefaultCacheLen,
                val maxKeyLen: Int = Int.MaxValue,
-               layout: Option[io.GraphStore.Layout] = None)
+               private[graft] val layout: Option[io.GraphStore.Layout] = None)
     extends Serializable {
   import KinGraph._
   private def spark: SparkSession = nodes.sparkSession
@@ -65,26 +68,50 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
   def edgePairs: DataFrame = edges.select(col("src"), col("dst"))
 
   // ---------------------------------------------------------- point lookups
-  /** Driver-side bounded LRU over point-lookup results — the Spark analog
-    * of the reference's LRU caches (graph.py:100-106, cache_len default
-    * 1e6), cleared by [[emptyCache]] exactly like the reference's
-    * empty_cache (graph.py:383-388). Sound because a KinGraph is an
-    * immutable snapshot (a cached Row can never go stale) and every
-    * mutation derives a NEW graph with a fresh cache. Hits only — a miss
-    * raises like the reference and is re-probed on the next call. */
-  @transient private lazy val lookupCache
-      : java.util.Map[(Char, String, String, Int), Row] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(Char, String, String, Int), Row](
-          64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(Char, String, String, Int), Row]): Boolean =
-          size() > cacheLen
-      })
+  /** Driver-side LRU of point-read results, bounded by `cacheLen` rows —
+    * the Spark analog of the reference's LRU caches (graph.py:100-106,
+    * cache_len default 1e6), cleared by [[emptyCache]] exactly like the
+    * reference's empty_cache (graph.py:383-388). On a graph opened from a
+    * store an entry is a whole store bucket: its node rows and the edges
+    * out of them, loaded by one single-task Spark job on the first read
+    * into it. Every later read into the bucket runs no job, a missing key
+    * included (the bucket holds all its keys, so an absent one is a
+    * definite miss). Eviction drops whole buckets; a bucket of more than
+    * `cacheLen` rows is never kept, and reads into it take the keyed plans.
+    * Those, and every read on a derived graph (which has no buckets), keep
+    * found rows as single entries; a miss there is re-probed. Sound
+    * because a KinGraph is an immutable snapshot and every mutation
+    * derives a NEW graph with a fresh cache. */
+  @transient private lazy val cache = new ReadCache(cacheLen)
 
-  /** Current lookup-cache occupancy (reference exposes cache_len sizing;
-    * the spec uses this to pin hit/clear behavior). */
-  private[graft] def lookupCacheSize: Int = lookupCache.size()
+  /** Rows the LRU holds (reference exposes cache_len sizing; the spec uses
+    * this to pin hit/clear behavior). */
+  private[graft] def cachedRows: Long = cache.rows
+
+  /** This graph with another LRU bound, for tests of the bound. */
+  private[graft] def withCacheLen(n: Int): KinGraph =
+    new KinGraph(nodes, edges, hashFunc, n, maxKeyLen, layout)
+
+  /** The cached store buckets holding `keys`' node rows and out-edges,
+    * loading every cold one in one Spark job; empty on a graph without a
+    * layout, and without the keys whose bucket is too big to keep. */
+  private def bucketsOf(keys: Seq[String]): Map[String, Bucket] =
+    layout.fold(Map.empty[String, Bucket]) { l =>
+      val at = keys.distinct.map(k => k -> l.bucketOf(k))
+      val ids = at.map(_._2).distinct
+      val warm = ids.flatMap(b => cache.bucket(b).map(b -> _)).toMap
+      val cold = ids.filterNot(b => warm.contains(b) || cache.isTooBig(b))
+      val loaded = if (cold.isEmpty) Map.empty[Int, Bucket] else
+        l.read(cold, cacheLen).flatMap {
+          case (b, Some((ns, es))) =>
+            val bk = new Bucket(ns, es, nodes.schema, edges.schema)
+            cache.putBucket(b, bk, ns.length + es.length)
+            Some(b -> bk)
+          case (b, None) => cache.markTooBig(b); None
+        }
+      val all = warm ++ loaded
+      at.flatMap { case (k, b) => all.get(b).map(k -> _) }.toMap
+    }
 
   /** Node rows matching `pred`, which holds only for keys in `keys`: on a
     * stored graph, read from their buckets alone. */
@@ -107,24 +134,25 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
     edgesAt("src", Seq(src),
       col("src") === src && col("dst") === dst && col("etype") === etype)
 
-  /** The row behind a lookup-cache entry: the cached one, else one plain
+  /** The row behind a single-row LRU entry: the cached one, else one plain
     * `collect` of `lookup` — a single-stage job over the pushed-down scan
     * (a `limit(1)` plan runs a second job when the row is not in the first
-    * partition). A found row fills the cache; a miss is not cached and is
-    * re-probed on the next call. */
-  private def probe(ck: (Char, String, String, Int), lookup: => DataFrame)
-      : Option[Row] =
-    Option(lookupCache.get(ck)).orElse {
+    * partition). A found row fills the cache; a miss is not cached. */
+  private def probe(ck: RowKey, lookup: => DataFrame): Option[Row] =
+    cache.row(ck).orElse {
       val row = lookup.collect().headOption
-      row.foreach(lookupCache.put(ck, _))
+      row.foreach(cache.putRow(ck, _))
       row
     }
 
   private def probeNode(key: String): Option[Row] =
-    probe(('n', key, "", 0), nodeLookup(key))
+    bucketsOf(Seq(key)).get(key)
+      .fold(probe(('n', key, "", 0), nodeLookup(key)))(_.nodes.get(key))
 
   private def probeEdge(src: String, dst: String, etype: Int): Option[Row] =
-    probe(('e', src, dst, etype), edgeLookup(src, dst, etype))
+    bucketsOf(Seq(src)).get(src)
+      .fold(probe(('e', src, dst, etype), edgeLookup(src, dst, etype)))(
+        _.edge(src, dst, etype))
 
   /** Point lookup by key; NodeNotFound on miss (reference: graph.py:999-1036
     * — cache probe first, graph.py:1018-1023, then the storage descent). */
@@ -142,9 +170,9 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
     probeEdge(src, dst, etype).getOrElse(throw new EdgeNotFound(src, dst, etype))
 
   /** reference: graph.py:1069-1082. The same probe as [[node]]: a cached
-    * row answers without a job (the reference's cache tier,
-    * graph.py:1018-1023), and a found row fills the cache, so a later
-    * `node` or `neighbors` call on the key runs no probe. */
+    * bucket or row answers without a job (the reference's cache tier,
+    * graph.py:1018-1023), and a probe fills the cache, so a later `node`
+    * or `neighbors` call on the key runs no probe. */
   def hasNode(key: String): Boolean = probeNode(key).isDefined
   /** reference: graph.py:1084-1099 (the same probe as [[edge]]). */
   def hasEdge(src: String, dst: String, etype: Int = 0): Boolean =
@@ -154,10 +182,21 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
   /** Out-neighbors of `key` as a 1-column DataFrame (`key`). Raises
     * NodeNotFound eagerly like the reference (graph.py:865) even though the
     * result is lazy. Distinct because multi-type edges repeat the target. */
-  def neighbors(key: String): DataFrame = {
-    if (!hasNode(key)) throw new NodeNotFound(key)
-    edgesAt("src", Seq(key), col("src") === key).select(col("dst").as("key")).distinct()
-  }
+  def neighbors(key: String): DataFrame =
+    bucketsOf(Seq(key)).get(key) match {
+      case Some(b) =>
+        if (!b.nodes.contains(key)) throw new NodeNotFound(key)
+        local(b.neighbors(key).map(Row(_)),
+          StructType(Seq(edges.schema("dst").copy(name = "key"))))
+      case None =>
+        if (!hasNode(key)) throw new NodeNotFound(key)
+        edgesAt("src", Seq(key), col("src") === key)
+          .select(col("dst").as("key")).distinct()
+    }
+
+  /** A frame of `rows` built on the driver, which runs no Spark job. */
+  private def local(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** In-neighbors (reference: graph.py:871-884). */
   def predecessors(key: String): DataFrame = {
@@ -203,8 +242,18 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
     * Deliberate relational divergence: DUPLICATE queried keys collapse to
     * one row (the reference's loop yields one iterator per occurrence) —
     * a keyed frame, not a positional zip. */
-  def neighborsFrom(keys: Seq[String]): DataFrame =
-    adjacencyFrom(keys, "src", "dst", "neighbors")
+  def neighborsFrom(keys: Seq[String]): DataFrame = {
+    val ks = keys.distinct
+    val bs = bucketsOf(ks)
+    if (ks.exists(k => !bs.contains(k))) adjacencyFrom(keys, "src", "dst", "neighbors")
+    else {
+      ks.find(k => !bs(k).nodes.contains(k)).foreach(k => throw new NodeNotFound(k))
+      local(ks.sorted(Utf8Order).map(k => Row(k, bs(k).neighbors(k))),
+        StructType(Seq(StructField("key", StringType),
+          StructField("neighbors", ArrayType(StringType, containsNull = false),
+            nullable = false))))
+    }
+  }
 
   /** POSITIONAL parity variant of [[neighborsFrom]] (reference
     * graph.py:928-940 yields one iterator PER INPUT OCCURRENCE,
@@ -247,7 +296,13 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
   def inDegrees: DataFrame =
     edges.groupBy(col("dst").as("key")).agg(count(lit(1)).as("in_degree"))
 
-  def outDegree(key: String): Long = degreeOf(key, "src")
+  def outDegree(key: String): Long =
+    bucketsOf(Seq(key)).get(key) match {
+      case Some(b) =>
+        if (!b.nodes.contains(key)) throw new NodeNotFound(key)
+        b.out.get(key).fold(0L)(_.length.toLong)
+      case None => degreeOf(key, "src")
+    }
   def inDegree(key: String): Long = degreeOf(key, "dst")
 
   /** Edges whose `side` end is `key`; NodeNotFound when the node is
@@ -584,12 +639,69 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
     * the driver-side point-lookup LRU (the reference's 4 LRUCache maps)
     * and any persisted node/edge frames (the preload tier). */
   def emptyCache(): KinGraph = {
-    lookupCache.clear()
+    cache.clear()
     nodes.unpersist(); edges.unpersist(); this
   }
 }
 
 object KinGraph {
+  /** A single-row LRU entry's key: kind ('n' node, 'e' edge) and identity. */
+  private type RowKey = (Char, String, String, Int)
+
+  /** UTF-8 byte order, which `sort_array` and `ORDER BY` use on strings
+    * (UTF-16 order differs from it on supplementary-plane characters). */
+  private val Utf8Order: Ordering[String] =
+    (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  /** One store bucket's rows, indexed: node rows by key, edge rows by src. */
+  private final class Bucket(nodeRows: Array[Row], edgeRows: Array[Row],
+                             nodeSchema: StructType, edgeSchema: StructType) {
+    private val Seq(dstAt, etypeAt) = Seq("dst", "etype").map(edgeSchema.fieldIndex)
+    val nodes: Map[String, Row] = {
+      val keyAt = nodeSchema.fieldIndex("key")
+      nodeRows.iterator.map(r => r.getString(keyAt) -> r).toMap
+    }
+    val out: Map[String, Array[Row]] =
+      edgeRows.groupBy(_.getString(edgeSchema.fieldIndex("src")))
+    def edge(src: String, dst: String, etype: Int): Option[Row] =
+      out.get(src).flatMap(_.find(r => r.getString(dstAt) == dst && r.get(etypeAt) == etype))
+    /** Distinct out-neighbors in `sort_array` order. */
+    def neighbors(key: String): Seq[String] =
+      out.get(key).fold(Seq.empty[String])(_.map(_.getString(dstAt)).distinct.toSeq)
+        .sorted(Utf8Order)
+  }
+
+  /** A KinGraph's point-read LRU: store buckets keyed by bucket id and
+    * single rows keyed by [[RowKey]], weighed in rows and evicted eldest
+    * first, plus the ids of buckets too big to keep. */
+  private final class ReadCache(bound: Int) {
+    private val entries =
+      new java.util.LinkedHashMap[Any, (AnyRef, Int)](64, 0.75f, true)
+    private val tooBig = scala.collection.mutable.Set.empty[Int]
+    private var held = 0L
+
+    def rows: Long = synchronized(held)
+    def bucket(b: Int): Option[Bucket] =
+      synchronized(Option(entries.get(b))).map(_._1.asInstanceOf[Bucket])
+    def row(k: RowKey): Option[Row] =
+      synchronized(Option(entries.get(k))).map(_._1.asInstanceOf[Row])
+    def isTooBig(b: Int): Boolean = synchronized(tooBig.contains(b))
+    def markTooBig(b: Int): Unit = synchronized { tooBig += b; () }
+    def putBucket(b: Int, v: Bucket, weight: Int): Unit = put(b, v, weight)
+    def putRow(k: RowKey, v: Row): Unit = put(k, v, 1)
+
+    private def put(k: Any, v: AnyRef, weight: Int): Unit = synchronized {
+      if (weight <= bound) {
+        Option(entries.put(k, (v, weight))).foreach(old => held -= old._2)
+        held += weight
+        val eldest = entries.values.iterator
+        while (held > bound) { held -= eldest.next()._2; eldest.remove() }
+      }
+    }
+
+    def clear(): Unit = synchronized { entries.clear(); tooBig.clear(); held = 0 }
+  }
+
   /** Default key hash (the reference's built-in dictionary hash analog). */
   val DefaultHashFunc: Column => Column = c => xxhash64(c)
 

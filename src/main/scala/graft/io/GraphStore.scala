@@ -4,8 +4,11 @@ import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression,
+  GenericRowWithSchema, Literal, Pmod, XxHash64}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import graft.{KinGraph, KinbakuError}
 
@@ -20,8 +23,9 @@ import graft.{KinGraph, KinbakuError}
   * header: reads hand the schema to `spark.read.schema`, so no parquet
   * schema-inference job runs, and writes check their bucket count. A
   * graph opened from a store carries its [[Layout]], so a key probe reads
-  * one bucket (kinbaku's one index descent). The bucket hash is a layout
-  * constant, not the pluggable `KinGraph.hashFunc`.
+  * one bucket (kinbaku's one index descent), and the graph's point-read
+  * LRU keeps whole buckets. The bucket hash is a layout constant, not the
+  * pluggable `KinGraph.hashFunc`.
   *
   * An incremental upsert (reference `add_edge` semantics — (src,dst,etype)
   * replace + endpoint auto-create, graph.py:1446-1453) rewrites ONLY the
@@ -53,31 +57,84 @@ object GraphStore {
   private[io] def edgesPath(path: String) = s"$path/edges"
   private[io] def nodesPath(path: String) = s"$path/nodes"
 
+  /** The bucket law: `pmod(xxhash64(key), buckets)` as an int. Writes
+    * apply it to a column; reads evaluate it on the driver. */
+  private def bucketExpr(key: Expression, buckets: Int): Expression =
+    Cast(Pmod(new XxHash64(Seq(key)), Literal(buckets.toLong)), IntegerType)
+
   private def bucketOf(c: Column, buckets: Int): Column =
-    pmod(xxhash64(c), lit(buckets.toLong)).cast("int")
+    ColumnBridge.column(bucketExpr(ColumnBridge.expression(c), buckets))
 
   private def withBucket(df: DataFrame, keyCol: String, buckets: Int) =
     df.withColumn(BucketCol, bucketOf(col(keyCol), buckets))
 
-  /** A store's two tables as scanned, with their `bucket` column. Key
-    * reads also filter on the keys' buckets, which the optimizer folds to
-    * constants before partition pruning. */
+  /** A store's two tables as scanned, with their `bucket` column. A
+    * bucket holds the node rows of its keys and the edges out of them
+    * (edges are bucketed by `src`). Key reads filter on the keys' buckets,
+    * computed on the driver, so the scan prunes to them. */
   final class Layout private[GraphStore] (
       private[GraphStore] val nodesScan: DataFrame,
       private[GraphStore] val edgesScan: DataFrame,
       buckets: Int) extends Serializable {
+    /** The bucket holding `key`'s node row and the edges out of `key`. */
+    private[graft] def bucketOf(key: String): Int =
+      bucketExpr(Literal(key), buckets).eval().asInstanceOf[Int]
+
     private[graft] def nodesAt(keys: Seq[String], pred: Column): DataFrame =
-      inBuckets(nodesScan, keys, pred)
+      inBuckets(nodesScan, keys.map(bucketOf), pred)
     /** Edges matching `pred`, which holds only for `side` in `keys`, read
       * from their buckets alone; None for a side the edges are not
       * bucketed by (only `src` is). */
     private[graft] def edgesAt(side: String, keys: Seq[String],
                                pred: Column): Option[DataFrame] =
-      if (side == "src") Some(inBuckets(edgesScan, keys, pred)) else None
-    private def inBuckets(scan: DataFrame, keys: Seq[String], pred: Column) =
-      scan.filter(col(BucketCol).isin(
-        keys.distinct.map(k => bucketOf(lit(k), buckets)): _*) && pred)
-        .drop(BucketCol)
+      if (side == "src") Some(inBuckets(edgesScan, keys.map(bucketOf), pred))
+      else None
+    private def inBuckets(scan: DataFrame, bs: Seq[Int], pred: Column) =
+      scan.filter(col(BucketCol).isin(bs.distinct: _*) && pred).drop(BucketCol)
+
+    /** Buckets `bs` read whole in one single-stage, single-task Spark job:
+      * for each, its node rows and its edge rows, or None when it holds
+      * more than `limit` rows, of which at most `limit + 1` reach the
+      * driver. */
+    private[graft] def read(bs: Seq[Int], limit: Int)
+        : Map[Int, Option[(Array[Row], Array[Row])]] = {
+      val n = bs.size
+      // each row leads with its bucket and carries a node/edge tag
+      def tagged(scan: DataFrame, isNode: Boolean) =
+        scan.filter(col(BucketCol).isin(bs: _*))
+          .select(col(BucketCol) +: dataColumns(scan).map(col): _*)
+          .rdd.map(r => (isNode, r))
+      val got = tagged(nodesScan, isNode = true)
+        .union(tagged(edgesScan, isNode = false)).coalesce(1)
+        .mapPartitions(capped(n, limit)).collect().groupBy(_._2.getInt(0))
+      def rows(scan: DataFrame, all: Array[(Boolean, Row)], isNode: Boolean) = {
+        val schema = scan.drop(BucketCol).schema
+        all.collect { case (`isNode`, r) =>
+          new GenericRowWithSchema(r.toSeq.tail.toArray, schema): Row }
+      }
+      bs.map { b =>
+        val all = got.getOrElse(b, Array.empty[(Boolean, Row)])
+        b -> Option.when(all.length <= limit)(
+          (rows(nodesScan, all, isNode = true), rows(edgesScan, all, isNode = false)))
+      }.toMap
+    }
+  }
+
+  private def dataColumns(scan: DataFrame): Seq[String] =
+    scan.columns.toSeq.filterNot(_ == BucketCol)
+
+  /** The rows of one partition, at most `limit + 1` per bucket (each row's
+    * field 0), read until each of the `n` buckets has passed `limit`. */
+  private def capped(n: Int, limit: Int)(rows: Iterator[(Boolean, Row)])
+      : Iterator[(Boolean, Row)] = {
+    val seen = mutable.Map.empty[Int, Long]
+    var full = 0
+    rows.takeWhile(_ => full < n).filter { case (_, r) =>
+      val c = seen.getOrElse(r.getInt(0), 0L) + 1
+      seen(r.getInt(0)) = c
+      if (c == limit + 1L) full += 1
+      c <= limit + 1L
+    }
   }
 
   /** Replace the whole table at `path` with `df` bucketed on `keyCol`,
@@ -231,7 +288,7 @@ object GraphStore {
                   buckets: Int): Unit = {
     val stored = layout(spark, path)
     requireBuckets(spark, path, buckets)
-    val cols = stored.edgesScan.columns.filterNot(_ == BucketCol)
+    val cols = dataColumns(stored.edgesScan)
     // align to the persisted schema BEFORE the dedup window — the window's
     // tie-break hashes the aligned column set, matching KinGraph.addEdges'
     // alignColumns-then-upsert order exactly

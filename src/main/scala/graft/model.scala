@@ -71,6 +71,9 @@ object KinConfig {
     * are unbounded — but the facade can enforce the contract when asked. */
   val DefaultMaxKeyLen = 15
   val DefaultMaxStrLen = 15
-  /** Point-lookup LRU bound (reference `cache_len` default, graph.py:29). */
+  /** Bound of a KinGraph's point-read LRU, in rows — the analog of the
+    * reference's `cache_len` (graph.py:29), which bounds its LRU maps in
+    * entries. A stored graph's LRU keeps whole buckets of at most this many
+    * node and edge rows together. */
   val DefaultCacheLen = 1000000
 }

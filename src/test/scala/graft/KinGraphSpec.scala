@@ -159,7 +159,7 @@ class KinGraphSpec extends SparkSpec {
         if (now == last && now >= 2) cold = now else last = now
       }
       assert(cold >= 2, "cold lookups must run Spark jobs")
-      assert(tg.lookupCacheSize == 2)
+      assert(tg.cachedRows == 2)
       // warm repeats are served from the LRU — zero new jobs
       assert(tg.node(k) == r1)
       assert(tg.edge(s0, d0, t0) == e1)
@@ -168,7 +168,7 @@ class KinGraphSpec extends SparkSpec {
       assert(jobs.get() == cold, "cached lookups must not launch Spark jobs")
       // emptyCache drops the LRU: the next lookup is cold again
       tg.emptyCache()
-      assert(tg.lookupCacheSize == 0)
+      assert(tg.cachedRows == 0)
       assert(tg.node(k) == r1)
       val t2 = System.currentTimeMillis()
       while (jobs.get() == cold && System.currentTimeMillis() - t2 < 5000)
@@ -202,16 +202,149 @@ class KinGraphSpec extends SparkSpec {
     assert(cold(_.hasEdge(s, absent, t)) == 1, "hasEdge(absent)")
     assert(cold(_.outDegree(k)) == 1, "outDegree")
     assert(cold(_.inDegree(k)) == 1, "inDegree")
-    assert(cold(_.neighborsFrom(oracle.nodes.toSeq.take(16)).collect()) <= 3,
-      "neighborsFrom")
+    val many = oracle.nodes.toSeq.take(16)
+    assert(cold(_.neighborsFrom(many).collect()) == 1, "neighborsFrom")
     assert(coldTasks(_.node(k)) == 1, "node tasks")
     assert(coldTasks(_.hasNode(k)) == 1, "hasNode tasks")
     assert(coldTasks(_.hasNode("missing_key")) == 1, "hasNode(missing) tasks")
     assert(coldTasks(_.hasEdge(s, d, t)) == 1, "hasEdge tasks")
     assert(coldTasks(_.outDegree(k)) == 1, "outDegree tasks")
+    assert(coldTasks(_.neighborsFrom(many).collect()) == 1, "neighborsFrom tasks")
+
+    // a second read into the loaded bucket: another key, a missing key,
+    // neighbors, outDegree and an absent pair all run no job
     val h = io.GraphIO.open(spark, dir, "r")
-    assert(h.hasNode(k))
-    assert(jobsOf(h.node(k)) == 0, "node after a found hasNode")
+    val bucketOf = h.layout.get.bucketOf _
+    assert(h.hasNode(s))
+    val mate = oracle.nodes.find(x => x != s && bucketOf(x) == bucketOf(s)).get
+    val missing = Iterator.from(0).map(i => s"missing_$i")
+      .find(x => bucketOf(x) == bucketOf(s)).get
+    assert(jobsOf(h.node(s)) == 0, "node after a found hasNode")
+    assert(jobsOf(h.node(mate)) == 0, "another key")
+    assert(jobsOf(assert(!h.hasNode(missing))) == 0, "missing key")
+    assert(jobsOf(assertThrows[NodeNotFound](h.neighbors(missing))) == 0,
+      "neighbors(missing)")
+    assert(jobsOf(assert(h.neighbors(s).as[String].collect().toSet ==
+      oracle.neighbors(s))) == 0, "neighbors")
+    assert(jobsOf(assert(h.outDegree(s) == oracle.edges.count(_._1 == s))) == 0,
+      "outDegree")
+    assert(jobsOf(assert(!h.hasEdge(s, absent, t))) == 0, "hasEdge(absent)")
+    // emptyCache drops the bucket: the next read is cold again
+    assert(h.cachedRows > 0)
+    h.emptyCache()
+    assert(h.cachedRows == 0)
+    assert(jobsOf(h.node(mate)) == 1, "node after emptyCache")
+  }
+
+  /** A small saved graph, opened from `dir`: 12 nodes (v10 a sink, v11
+    * without edges) and the 30 edges it returns too. */
+  private def smallStore(dir: String): (KinGraph, Seq[(String, String, Int)]) = {
+    val es = (0 until 30).map(i => (s"v${i % 10}", s"v${(i * 7 + 3) % 11}", i / 20))
+    io.GraphIO.save(KinGraph((0 until 12).map(i => s"v$i").toDF("key"),
+      es.toDF("src", "dst", "etype")), dir)
+    (io.GraphIO.open(spark, dir, "r"), es)
+  }
+
+  test("the bucket LRU holds at most cacheLen rows, evicts whole buckets, " +
+    "and never keeps a bucket bigger than cacheLen") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_kin_lru").toString + "/g"
+    val (h, es) = smallStore(dir)
+    val l = h.layout.get
+    val keys = (0 until 12).map(i => s"v$i")
+    // rows per bucket: its node rows plus the edges out of them
+    val size = keys.groupBy(l.bucketOf).map { case (b, ks) =>
+      b -> (ks.size + es.count(e => ks.contains(e._1))) }
+    val Seq((b1, s1), (b2, s2)) = size.toSeq.sortBy(-_._2).take(2)
+    val Seq(k1, k2) = Seq(b1, b2).map(b => keys.find(l.bucketOf(_) == b).get)
+    // room for either bucket, not both: loading the second evicts the first
+    val lru = h.withCacheLen(s1 + s2 - 1)
+    assert(jobsOf(lru.node(k1)) == 1 && lru.cachedRows == s1)
+    assert(jobsOf(lru.node(k2)) == 1 && lru.cachedRows == s2)
+    assert(jobsOf(lru.hasNode(k2)) == 0)
+    assert(jobsOf(lru.hasNode(k1)) == 1 && lru.cachedRows == s1)
+    // a bucket one row over the bound is read once (at most cacheLen + 1
+    // rows reach the driver), never kept, then served by the keyed probes
+    assert(l.read(Seq(b1), s1)(b1).map { case (n, e) => n.length + e.length } ==
+      Some(s1))
+    assert(l.read(Seq(b1), s1 - 1)(b1).isEmpty)
+    val small = h.withCacheLen(s1 - 1)
+    assert(jobsOf(small.node(k1)) == 2, "failed load, then the keyed probe")
+    assert(small.cachedRows == 1, "the found row, kept as a row entry")
+    assert(jobsOf(small.node(k1)) == 0)
+    val missing = Iterator.from(0).map(i => s"x$i").find(l.bucketOf(_) == b1).get
+    assert(jobsOf(assert(!small.hasNode(missing))) == 1, "keyed probe, no load")
+    assert(jobsOf(small.outDegree(k1)) == 1, "keyed degree pass")
+  }
+
+  test("derived graphs and a reopened store answer from their own frames") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_kin_life").toString + "/g"
+    val (h, _) = smallStore(dir)
+    val before = h.neighbors("v1").as[String].collect().toSet
+    assert(h.hasNode("v2") && h.cachedRows > 0)
+    // derived graphs carry no layout and a fresh cache
+    val added = h.addEdges(Seq(("v1", "fresh", 0)).toDF("src", "dst", "etype"))
+    assert(added.neighbors("v1").as[String].collect().toSet == before + "fresh")
+    assert(added.hasNode("fresh") && !h.hasNode("fresh"))
+    val removed = h.removeNode("v2")
+    assert(!removed.hasNode("v2") && h.hasNode("v2"))
+    assert(!removed.neighbors("v1").as[String].collect().contains("v2"))
+    // an upsert is read by a fresh open: the new edge and its new endpoint
+    io.GraphStore.upsertEdges(spark, dir,
+      Seq(("v1", "fresh", 0)).toDF("src", "dst", "etype"), 8)
+    val reopened = io.GraphStore.open(spark, dir)
+    assert(reopened.hasEdge("v1", "fresh") && reopened.hasNode("fresh"))
+    assert(reopened.neighbors("v1").as[String].collect().toSet == before + "fresh")
+    assert(reopened.outDegree("fresh") == 0L)
+  }
+
+  test("a cached bucket and the keyed fallback give the same rows, order " +
+    "and schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_kin_same").toString + "/g"
+    // "\uFF21" sorts before the supplementary-plane "\uD83D\uDE00" in UTF-8
+    // byte order and after it in UTF-16 order; "sink" has no out-edge; a
+    // to b is a pair of parallel edges of two etypes
+    val (fw, smile) = ("\uFF21", "\uD83D\uDE00")
+    val nodes = Seq(("a", "alpha", 1), ("b", "beta", 2), (fw, "wide", 3),
+      (smile, "smile", 4), ("sink", "", 5)).toDF("key", "name", "rank")
+    val edges = Seq(("a", "b", 0, 0.5), ("a", "b", 1, 1.5), ("a", smile, 0, 2.0),
+      ("a", fw, 0, 3.0), ("a", "sink", 0, 4.0), (smile, fw, 0, 5.0),
+      (smile, "a", 2, 6.0), (fw, "sink", 0, 7.0), ("b", smile, 0, 8.0))
+      .toDF("src", "dst", "etype", "w")
+    io.GraphIO.save(KinGraph(nodes, edges), dir)
+    val cached = io.GraphIO.open(spark, dir, "r")
+    val keyed = cached.withCacheLen(0)
+    val keys = Seq("a", "b", fw, smile, "sink")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      (df.schema, df.collect().toSeq.sortBy(_.getString(0)))
+    for (x <- Seq(cached, keyed)) {
+      assert(x.neighborsFrom(Seq("a", "a", smile, "sink")).collect()
+        .map(r => r.getString(0) -> r.getSeq[String](1)).toMap ==
+        Map("a" -> Seq("b", "sink", fw, smile), smile -> Seq("a", fw), "sink" -> Nil))
+    }
+    for (k <- keys) {
+      assert(cached.node(k) == keyed.node(k), k)
+      assert(cached.node(k).schema == keyed.node(k).schema, k)
+      assert(cached.nodeData(k) == keyed.nodeData(k), k)
+      assert(rowsOf(cached.neighbors(k)) == rowsOf(keyed.neighbors(k)), k)
+      assert(cached.outDegree(k) == keyed.outDegree(k), k)
+    }
+    for (e <- Seq(("a", "b", 0), ("a", "b", 1), (smile, "a", 2), (fw, "sink", 0))) {
+      assert(cached.edge(e._1, e._2, e._3) == keyed.edge(e._1, e._2, e._3), e)
+      assert(cached.edge(e._1, e._2, e._3).schema ==
+        keyed.edge(e._1, e._2, e._3).schema, e)
+    }
+    assert(!cached.hasEdge("a", "b", 2) && !keyed.hasEdge("a", "b", 2))
+    assert(!cached.hasEdge("sink", "a") && !keyed.hasEdge("sink", "a"))
+    val from = Seq("a", "a", smile, "sink", fw)
+    assert(rowsOf(cached.neighborsFrom(from)) == rowsOf(keyed.neighborsFrom(from)))
+    assert(cached.neighborsFromSeq(from) == keyed.neighborsFromSeq(from))
+    for (x <- Seq(cached, keyed)) {
+      assertThrows[NodeNotFound](x.node("zz"))
+      assertThrows[NodeNotFound](x.neighbors("zz"))
+      assertThrows[NodeNotFound](x.outDegree("zz"))
+      assertThrows[NodeNotFound](x.neighborsFrom(Seq("a", "zz")))
+    }
+    assert(keyed.cachedRows == 0)
   }
 
   test("outDegree/inDegree match the oracle for every key; 0L for an " +

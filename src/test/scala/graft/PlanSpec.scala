@@ -106,7 +106,10 @@ class PlanSpec extends SparkSpec {
     assert(partitionsRead(g.nodeLookup(e._1)) == Seq(1L), "nodeLookup")
     assert(partitionsRead(g.nodeLookup("missing_key")) == Seq(1L), "missing key")
     assert(partitionsRead(g.edgeLookup(e._1, e._2, e._3)) == Seq(1L), "edgeLookup")
-    assert(partitionsRead(g.neighbors(e._1)) == Seq(1L), "neighbors")
+    // neighbors is answered from the cached bucket; with a bound below the
+    // bucket's size it takes the keyed plan
+    assert(partitionsRead(g.neighbors(e._1)) == Nil, "cached neighbors")
+    assert(partitionsRead(g.withCacheLen(0).neighbors(e._1)) == Seq(1L), "neighbors")
     // a derived graph's frames are no longer the stored scans
     assert(partitionsRead(g.removeEdge(e._1, e._2, e._3).nodeLookup(e._1)) ==
       Seq(8L), "derived graph")
