@@ -75,14 +75,15 @@ object Bench {
     // attribution drift that polluted d_auc/gx_assort/d_dedup_incr/d_tfidf
     // across rounds 7-9. Skipped under SPARK_GRAFT_BENCH_ONLY unless
     // explicitly named (isolated profiling deliberately measures a query
-    // WITH its cache build).
+    // WITH its cache build). A build returns its entry already
+    // materialized (CacheScope.session), so it is timed as called.
     val cacheResults: Seq[(String, Option[Double])] =
       SparkEntry.cacheBuilds
         .filter { case (name, _) => only.forall(_.contains(s"cache:$name")) }
         .map { case (name, fn) =>
         val t0 = System.nanoTime()
         val timing =
-          try { materialize(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
+          try { fn(spark, sfDir); Some((System.nanoTime() - t0) / 1e9) }
           catch { case e: Throwable =>
             System.err.println(s"BENCH FAIL cache:$name: ${e.getClass.getSimpleName}: ${e.getMessage}")
             None
@@ -186,11 +187,14 @@ object Bench {
           "BENCH_DETAIL_last.json")
         val txt = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(prevPath)), "UTF-8")
-        // only compare runs of the SAME scale: a prev detail from another
-        // sfDir would mis-trigger (or silently disable) the whole tier
+        // only compare runs of the SAME scale and core count: a prev
+        // detail from another sfDir or cpu count would mis-trigger (or
+        // silently disable) the whole tier; a detail without "cpus"
+        // predates the field and counts as a mismatch
         val sfOk = txt.contains("\"sf\":\"" + sfDir + "\"")
+        val cpusOk = txt.contains("\"cpus\":" + cpus + ",")
         val i = txt.indexOf("\"queries\":{")
-        if (!sfOk || i < 0) Map.empty
+        if (!sfOk || !cpusOk || i < 0) Map.empty
         else {
           // the queries map is flat by construction (qsJson below writes
           // it); the first '}' after the opener closes it
@@ -206,7 +210,7 @@ object Bench {
         java.nio.file.Files.exists(java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "BENCH_DETAIL_last.json"))))
       System.err.println("BENCH NOTE tier-3 retime disabled: prev detail " +
-        "file exists but yielded no costs (sf mismatch or format drift)")
+        "file exists but yielded no costs (sf or cpus mismatch, or format drift)")
     val t12Names = tier1Names ++ tier2.map(_._1)
     val tier3: Seq[(String, Double)] =
       if (only.nonEmpty || prevCosts.isEmpty) Seq.empty
@@ -262,7 +266,7 @@ object Bench {
               "excludes nested dependency first-touch cost")
             cacheFns.get(short).map { fn => () =>
               { SparkEntry.dropCacheEntry(short, spark, sfDir)
-                materialize(fn(spark, sfDir)) }
+                fn(spark, sfDir); () }
             }
           } else queryFns.get(name).map(fn => () => materialize(fn(spark, sfDir)))
             .orElse(workloadFns.get(name).map(fn => () => fn(spark)))
@@ -340,7 +344,7 @@ object Bench {
     // The driver captures a 2000-char log tail; the full line is ~3.5 KB and
     // has overflowed it every round (BENCH_r01..r05 all have parsed:null).
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","warmup":${"%.3f".format(warmupSec)},"queries":${qsJson(results, 6)},"retimed":$retimedJson,"ratio_vs_ref":$ratiosJson,$envJson,"rdd_cache_pre":$rddCachePre,"rdd_cache_post":${rddResidencyJson()},"failed":[${failed.mkString(",")}],"sf":"$sfDir","n_queries":${results.size}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","warmup":${"%.3f".format(warmupSec)},"queries":${qsJson(results, 6)},"retimed":$retimedJson,"ratio_vs_ref":$ratiosJson,$envJson,"rdd_cache_pre":$rddCachePre,"rdd_cache_post":${rddResidencyJson()},"failed":[${failed.mkString(",")}],"sf":"$sfDir","cpus":$cpus,"n_queries":${results.size}}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench_out.json")
     // the detail also lands in the repo cwd so the driver's round-end
     // commit captures the full per-query map (the stdout tail holds only

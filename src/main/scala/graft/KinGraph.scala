@@ -510,14 +510,14 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
     * dense-id mapping — the distributed analog of the reference's SciPy CSR
     * (graph.py:1188-1229; `weight` is declared NOT IMPLEMENTED there). */
   def adjacencyCoo: DataFrame = {
-    // ids feeds BOTH the row and col joins: materialize it once (eager
-    // localCheckpoint), or Spark recomputes the global sort + zipWithIndex
-    // per branch and the RDD boundary blocks AQE on both sides. The
-    // checkpointed relation has an exact size, so AQE broadcasts it when
-    // nodes fit. Dedup of multi-etype parallel edges happens AFTER the id
+    // ids feeds BOTH the row and col joins: materialize it once (a
+    // checkpoint), or Spark recomputes the global sort + zipWithIndex per
+    // branch and the RDD boundary blocks AQE on both sides. The
+    // checkpoint reports its stored bytes, so the planner broadcasts it
+    // when nodes fit. Dedup of multi-etype parallel edges happens AFTER the id
     // joins, on compact (long, long) pairs — one narrow shuffle instead of
     // a full-width string shuffle before the joins.
-    val ids = denseIds.localCheckpoint(true)
+    val ids = CacheScope.checkpoint(denseIds)
     edges.select("src", "dst")
       .join(ids.withColumnRenamed("key", "src").withColumnRenamed("id", "row_id"), "src")
       .join(ids.withColumnRenamed("key", "dst").withColumnRenamed("id", "col_id"), "dst")
@@ -626,7 +626,7 @@ class KinGraph(val nodes: DataFrame, val edges: DataFrame,
     * cost O(1) per op. Batched mutation (addEdges with a whole DataFrame)
     * is still the intended fast path and needs no checkpoints. */
   def checkpointed(): KinGraph =
-    derive(nodes.localCheckpoint(true), edges.localCheckpoint(true))
+    derive(CacheScope.checkpoint(nodes), CacheScope.checkpoint(edges))
 
   // --------------------------------------------------------------- caching
   /** reference `preload` ctor flag (graph.py:59-60): warm the cache. */

@@ -3,7 +3,7 @@ package graft.gx
 import org.apache.spark.graphx.{Edge, Graph, VertexId, PartitionStrategy}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.KinGraph
+import graft.{CacheScope, KinGraph}
 
 /** GraphX bridge — the analytics layer the reference points at with its
   * adjacency-matrix export (/root/reference/kinbaku/graph.py:1188-1265) and
@@ -35,7 +35,7 @@ object GraphXBridge {
     // materialize the key set once: for fromEdges-derived graphs the node
     // set is an endpoint-distinct shuffle, and it feeds BOTH the size
     // check and the vertex projection
-    val keys = g.nodes.select(col("key")).localCheckpoint(true)
+    val keys = g.nodes.select(col("key")).transform(CacheScope.checkpoint)
     val graph =
       if (keys.count() <= maxHashNodes) {
         // the graph's pluggable key hash (reference hash_func ctor param)
@@ -57,7 +57,7 @@ object GraphXBridge {
       } else {
         // ids feed the vertex projection AND both edge joins: materialize
         // once (same pattern as KinGraph.adjacencyCoo)
-        val ids = g.denseIds.localCheckpoint(true)
+        val ids = CacheScope.checkpoint(g.denseIds)
         val verts = ids.rdd
           .map(r => (r.getLong(1): VertexId, r.getString(0)))
         val e = g.edges

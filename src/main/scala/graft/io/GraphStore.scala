@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Expression,
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
-import graft.{KinGraph, KinbakuError}
+import graft.{CacheScope, KinGraph, KinbakuError}
 
 /** The persisted graph layout, which [[GraphIO.save]]/[[GraphIO.open]]
   * write and read: hash-bucket PARTITIONED tables that also support
@@ -297,7 +297,7 @@ object GraphStore {
       cols ++ KinGraph.seqColOf(withType), Seq("src", "dst", "etype"))
     val dd = withBucket(KinGraph.lastWriteWins(padded, Seq("src", "dst", "etype")),
       "src", buckets)
-      .localCheckpoint(true) // read 4×: bucket sets, anti-join, union, endpoints
+      .transform(CacheScope.checkpoint) // read 4×: bucket sets, anti-join, union, endpoints
     // a node's bucket is its key's hash, so the src bucket doubles as the
     // src endpoint's node bucket
     val Seq(touched, dstBuckets) =
@@ -318,7 +318,7 @@ object GraphStore {
     val existingN = stored.nodesScan
       .filter(col(BucketCol).isin(touchedN: _*))
     val missing = epk.join(existingN.select("key"), Seq("key"), "left_anti")
-      .localCheckpoint(true) // read twice: bucket set + union
+      .transform(CacheScope.checkpoint) // read twice: bucket set + union
     // only buckets that actually gained a node need rewriting
     val Seq(hot) = bucketSets(missing, col(BucketCol))
     if (hot.nonEmpty) {

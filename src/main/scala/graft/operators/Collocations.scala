@@ -69,7 +69,7 @@ object Collocations {
           .over(Window.partitionBy("doc_id", "grp")), lit(2L)) === 0)
       .withColumn("consumed",
         coalesce(lag(col("take"), 1).over(w), lit(false)))
-      .localCheckpoint(true)
+      .transform(graft.CacheScope.checkpoint)
     val st = taken.filter(!col("consumed"))
       .select(col("doc_id"), col("i").as("oi"),
         when(col("take"), concat(col("t"), lit(" "), col("nxt")))
@@ -98,7 +98,7 @@ object Collocations {
     var r = 1
     var exhausted = false
     while (r <= rounds && !exhausted) {
-      state = state.localCheckpoint(true)
+      state = graft.CacheScope.checkpoint(state)
       val withNext = state.withColumn("nxt", lead("t", 1).over(w))
       val top = withNext.filter(col("nxt").isNotNull)
         .groupBy(col("t").as("a"), col("nxt").as("b"))
@@ -721,7 +721,7 @@ object Collocations {
     val edges = und.select(col("u").as("src"), col("v").as("dst"), col("w"))
       .unionByName(und.select(col("v").as("src"), col("u").as("dst"), col("w")))
     val wdeg = edges.groupBy("src").agg(sum(col("w")).as("wd"))
-    val ew = broadcast(edges.join(wdeg, "src")).cache()
+    val ew = graft.CacheScope.cached(broadcast(edges.join(wdeg, "src")))
     var sc = vocab.withColumn("sc", lit(1000000L))
     for (_ <- 1 to rounds) {
       val contrib = ew.join(broadcast(sc.select(col("t").as("src"), col("sc"))), "src")

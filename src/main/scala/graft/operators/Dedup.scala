@@ -1297,7 +1297,7 @@ object Dedup {
   private[graft] def ccComponentRep(dupPairs: DataFrame): DataFrame = {
     val pairs = dupPairs
       .select(col("a").cast("string").as("src"), col("b").cast("string").as("dst"))
-      .localCheckpoint(true)
+      .transform(graft.CacheScope.checkpoint)
     val dupGraph = graft.KinGraph.fromEdges(pairs.withColumn("etype", lit(0)))
     val comps = graft.gx.GraphXBridge.connectedComponents(
       graft.gx.GraphXBridge.toGraphX(dupGraph))

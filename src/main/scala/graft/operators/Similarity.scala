@@ -824,7 +824,7 @@ object Similarity {
       .filter(col("a") < col("b"))
       .filter(round(cosine(col("va"), col("vb")), 4) >= threshold)
       .select(col("a").cast("string").as("src"), col("b").cast("string").as("dst"))
-      .localCheckpoint(true)
+      .transform(graft.CacheScope.checkpoint)
     val dupGraph = graft.KinGraph.fromEdges(pairs.withColumn("etype", lit(0)))
     val comps = graft.gx.GraphXBridge.connectedComponents(
       graft.gx.GraphXBridge.toGraphX(dupGraph))
@@ -856,7 +856,7 @@ object Similarity {
       .select(col("query_id").as("a"), col("vec_id").as("b"))
     val edges = nn
       .select(col("a").cast("string").as("src"), col("b").cast("string").as("dst"))
-      .localCheckpoint(true)
+      .transform(graft.CacheScope.checkpoint)
     val g = graft.KinGraph.fromEdges(edges.withColumn("etype", lit(0)))
     val comps = graft.gx.GraphXBridge.connectedComponents(
       graft.gx.GraphXBridge.toGraphX(g))
@@ -1335,7 +1335,7 @@ object Similarity {
     }.toDF("i", "j", "p")
     val gram = partials.groupBy(col("i"), col("j"))
       .agg(sum(col("p")).as("g"))
-      .localCheckpoint(true)
+      .transform(graft.CacheScope.checkpoint)
     var v = gram.select(col("j").as("dim")).distinct()
       .withColumn("v", lit(1000000L))
     for (_ <- 1 to rounds) {
@@ -1624,7 +1624,7 @@ object Similarity {
     // dominates the tiny physical work (same discipline as the GraphOps
     // iterative algorithms)
     val edges = prebuiltEdges.getOrElse(lshKnnEdges(corpus, graphK))
-      .localCheckpoint(true)
+      .transform(graft.CacheScope.checkpoint)
     val q = broadcast(queries.select(col("id").as("query_id"),
       col("vec").as("qv"), norm(col("vec")).as("qn")))
     // seeds override the flat entry: [[hnswTopK]]'s descent hands each
@@ -1674,14 +1674,14 @@ object Similarity {
           cosMicroCol(col("qv"), col("qn"), col("vec"), col("cn")).as("cosm"))
     val wBeam = Window.partitionBy(col("query_id"))
       .orderBy(col("cosm").desc, col("vec_id"))
-    var cand = score(seeds).localCheckpoint(true)
+    var cand = score(seeds).transform(graft.CacheScope.checkpoint)
     for (_ <- 1 to rounds) {
       val beam = cand.withColumn("rn", row_number().over(wBeam))
         .filter(col("rn") <= ef).select("query_id", "vec_id")
       val expand = broadcast(beam).join(edges, beam("vec_id") === edges("src"))
         .select(col("query_id"), col("dst").as("vec_id")).distinct()
       val fresh = expand.join(cand, Seq("query_id", "vec_id"), "left_anti")
-      cand = cand.unionByName(score(fresh)).localCheckpoint(true)
+      cand = cand.unionByName(score(fresh)).transform(graft.CacheScope.checkpoint)
     }
     cand
   }
@@ -1740,13 +1740,13 @@ object Similarity {
         val memCor = mem.select(col("id").as("vec_id"), col("vec"),
           norm(col("vec")).as("cn"))
         val edges = prebuiltUpper.map(_(l)).getOrElse(lshKnnEdges(mem, upperK))
-          .localCheckpoint(true)
+          .transform(graft.CacheScope.checkpoint)
         val seedDf = seed.getOrElse(queries.select(col("id").as("query_id"))
           .crossJoin(broadcast(mem.agg(min(col("id")).as("vec_id")))))
         val cand = beamLoop(memCor, edges, q, seedDf, upperEf, upperRounds)
         seed = Some(cand.withColumn("rn", row_number().over(wBeam))
           .filter(col("rn") === 1).select("query_id", "vec_id")
-          .localCheckpoint(true))
+          .transform(graft.CacheScope.checkpoint))
       }
     }
     // the base beam seeds from the descent result PLUS the flat global

@@ -45,12 +45,12 @@ object GraphOps {
     * edge-attribute column (summed across duplicate (src,dst) pairs). */
   def weightedAdjacencyCoo(g: KinGraph, weightCol: String): DataFrame = {
     // Same shape as KinGraph.adjacencyCoo: the id mapping feeds two joins,
-    // so it is materialized once (eager localCheckpoint) — otherwise the
+    // so it is materialized once (a checkpoint) — otherwise the
     // global sort + zipWithIndex re-runs per branch. The weight aggregation
     // runs AFTER the id joins, keyed on compact (long, long) ids: with the
     // checkpointed ids broadcast by AQE, the map side stays narrow and the
     // only wide shuffle moves (long, long, double) rows.
-    val ids = g.denseIds.localCheckpoint(true)
+    val ids = CacheScope.checkpoint(g.denseIds)
     g.edges
       .join(ids.withColumnRenamed("key", "src").withColumnRenamed("id", "row_id"), "src")
       .join(ids.withColumnRenamed("key", "dst").withColumnRenamed("id", "col_id"), "dst")
@@ -85,17 +85,17 @@ object GraphOps {
   }
 
   /** The round driver of the message-passing loops: `rounds` applications
-    * of `step` to the state, which is materialized (eager
-    * `localCheckpoint`) after every `checkpointEvery`-th round except the
-    * last. A state referenced once per round only needs that for plan
-    * depth; one referenced twice needs a short cadence so the branched
-    * lineage is not re-evaluated. */
+    * of `step` to the state, which is checkpointed (`CacheScope.checkpoint`)
+    * after every `checkpointEvery`-th round except the last. A state
+    * referenced once per round only needs that for plan depth; one
+    * referenced twice needs a short cadence so the branched lineage is not
+    * re-evaluated. */
   private def iterate(init: DataFrame, rounds: Int, checkpointEvery: Int)
                      (step: DataFrame => DataFrame): DataFrame = {
     require(rounds >= 1, "rounds >= 1")
     (1 to rounds).foldLeft(init) { (st, i) =>
       val next = step(st)
-      if (i % checkpointEvery == 0 && i < rounds) next.localCheckpoint(true)
+      if (i % checkpointEvery == 0 && i < rounds) CacheScope.checkpoint(next)
       else next
     }
   }
@@ -138,7 +138,7 @@ object GraphOps {
         g.edges.groupBy(col("src").as("key")).agg(count(lit(1)).as("od")),
         Seq("key"), "left"))
     val rg = regime(nodesOd)
-    val e = eagerCached(
+    val e = CacheScope.cached(
       g.edges.select(col("src"), col("dst")).repartition(col("dst")))
     val base = (15L * scale) / 100L
     iterate(nodesOd.withColumn("r", lit(scale)), iters, 4) { r =>
@@ -191,7 +191,7 @@ object GraphOps {
                      scale: Long = 1000000L): DataFrame = {
     val nodes = CacheScope.cached(g.nodes.select(col("key")))
     val rg = regime(nodes)
-    val e = eagerCached(
+    val e = CacheScope.cached(
       g.edges.select(col("src"), col("dst")).repartition(col("dst")))
     // max over an EMPTY degree frame is a NULL cell — an edgeless graph
     // (filtered subgraph, degenerate fixture) must score all-β (inc = 0
@@ -252,7 +252,7 @@ object GraphOps {
         edges.groupBy(col("src").as("key")).agg(sum(col("w")).as("wout")),
         Seq("key"), "left"))
     val rg = regime(nodesW)
-    val e = eagerCached(
+    val e = CacheScope.cached(
       edges.select(col("src"), col("dst"), col("w")).repartition(col("dst")))
     val base = (15L * scale) / 100L
     iterate(nodesW.withColumn("r", lit(scale)), iters, 4) { r =>
@@ -369,7 +369,7 @@ object GraphOps {
     * `nodes` bit-for-bit too. */
   def weightedSsspBounded(edges: DataFrame, nodes: DataFrame,
                           source: String, iters: Int): DataFrame = {
-    val e = eagerCached(
+    val e = CacheScope.cached(
       edges.select(col("src"), col("dst"), col("w")).repartition(col("dst")))
     val nk = CacheScope.cached(nodes.select(col("key")))
     val rg = regime(nk)
@@ -428,7 +428,7 @@ object GraphOps {
                            scale: Long = 1000000000L): DataFrame = {
     val od = CacheScope.cached(
       g.edges.groupBy(col("src").as("key")).agg(count(lit(1)).as("od")))
-    val e = eagerCached(
+    val e = CacheScope.cached(
       g.edges.select(col("src"), col("dst")).repartition(col("dst")))
     val rg = regime(g.nodes)
     val base = (15L * scale) / 100L
@@ -494,13 +494,13 @@ object GraphOps {
     val nodes = CacheScope.cached(g.nodes.select(col("key")))
     val rg = regime(nodes)
     val ePair = g.edges.select(col("src"), col("dst"))
-    val eDst = eagerCached(ePair.repartition(col("dst")))
-    val eSrc = eagerCached(ePair.repartition(col("src")))
+    val eDst = CacheScope.cached(ePair.repartition(col("dst")))
+    val eSrc = CacheScope.cached(ePair.repartition(col("src")))
     def half(e: DataFrame, state: DataFrame, joinKey: String,
              groupKey: String): DataFrame = {
       val raw = e.join(rg.bc(state.withColumnRenamed("key", joinKey)), joinKey)
         .groupBy(col(groupKey).as("key")).agg(sum(col("v")).as("raw"))
-        .localCheckpoint(true)
+        .transform(CacheScope.checkpoint)
       val mx = raw.agg(max(col("raw"))).head.get(0) match {
         case m: java.lang.Long => math.max(m.longValue / scale, 1L)
         case _ => 1L
@@ -582,7 +582,7 @@ object GraphOps {
       cur = cur.join(ranked,
           cur("node") === ranked("src") && ranked("rk") === idx)
         .select(col("start"), col("dst").as("node"))
-        .localCheckpoint(true)
+        .transform(CacheScope.checkpoint)
       paths += cur.withColumn("step", lit(k))
     }
     paths.reduce(_ unionByName _).select(col("start"), col("step"), col("node"))
@@ -621,7 +621,7 @@ object GraphOps {
     var st = cur0.join(ranked,
         cur0("node") === ranked("src") && ranked("rk") === idx1)
       .select(col("start"), cur0("node").as("prev"), col("dst").as("node"))
-      .localCheckpoint(true)
+      .transform(CacheScope.checkpoint)
     paths += st.select(col("start"), lit(1).as("step"), col("node"))
     val e1 = de.select(col("src").as("node"), col("dst").as("x"))
     val adj = de.select(col("src").as("prev"), col("dst").as("x"),
@@ -640,7 +640,7 @@ object GraphOps {
         .withColumn("tot", sum(col("wgt")).over(wAllS))
         .filter(r >= col("cum") - col("wgt") && r < col("cum"))
         .select(col("start"), col("node").as("prev"), col("x").as("node"))
-        .localCheckpoint(true)
+        .transform(CacheScope.checkpoint)
       paths += st.select(col("start"), lit(k).as("step"), col("node"))
     }
     paths.reduce(_ unionByName _)
@@ -869,9 +869,9 @@ object GraphOps {
     val cap = deg.agg(expr(s"percentile(deg, $hubCapPercentile)").as("cap"))
     // the capped graph: every edge whose NEIGHBOR side (the potential
     // middle w) survives the cap — one broadcast 1-row frame, no collect.
-    // eagerCached: keep self-joins on w below — visible partitioning
-    // saves both sides' re-exchange (see eagerCached doc)
-    val keep = eagerCached(
+    // cached (materialized): the self-joins on w below see its hash
+    // partitioning and skip both sides' re-exchange
+    val keep = CacheScope.cached(
       ud.join(deg.crossJoin(broadcast(cap))
           .filter(col("deg") <= col("cap")).select(col("w")),
         ud("src") === col("w"))
@@ -1145,7 +1145,7 @@ object GraphOps {
       var all = frontier
       for (k <- 1 to rounds) {
         frontier = expandFrontier(edges, frontier, tag, small, k)
-          .localCheckpoint(true) // reused by the union AND the next round
+          .transform(CacheScope.checkpoint) // reused by the union AND the next round
         all = all.unionByName(frontier)
       }
       // the arg-min-d state is referenced by the overflow guard AND the
@@ -1155,7 +1155,7 @@ object GraphOps {
         .agg(max(struct((-col("d")).as("nd"), col("sigma"))).as("m"))
         .select(col(tag), col("node"), (-col("m.nd")).as("d"),
           col("m.sigma").as("sigma"))
-        .localCheckpoint(true)
+        .transform(CacheScope.checkpoint)
       // overflow guard: a wrapped sigma would hash-match nothing with a
       // confusing signature — fail loudly instead. One tiny agg over the
       // in-memory checkpoint.
@@ -1240,26 +1240,6 @@ object GraphOps {
     (chains ++ joins).mkString(",\n")
   }
 
-  /** CacheScope.cached + an immediate materializing count (r19): under
-    * AQE an UNmaterialized cached plan reports UnknownPartitioning to its
-    * consumers (the adaptive final stage is not fixed at their planning
-    * time), so every downstream join/aggregation keyed on the cache's
-    * repartition column plans an ENSURE_REQUIREMENTS re-exchange of the
-    * SAME data on the SAME key — gx_adamic's plan carried
-    * hashpartitioning(w,16) directly over the hash(src,16)-cached scan.
-    * Materializing first finalizes the cached plan and makes its hash
-    * partitioning visible (probe-verified on Spark 4.1.2: deg-aggregation
-    * 1→0, wedge self-join 3→1 ENSURE_REQUIREMENTS exchanges). The count
-    * is one job over the just-built cache, work the first consumer action
-    * would have spent building it anyway — while each exchange it removes
-    * is a full pass over the frame per consumer (per ROUND in the
-    * iterative ops). */
-  private def eagerCached(df: DataFrame): DataFrame = {
-    val c = CacheScope.cached(df)
-    c.count()
-    c
-  }
-
   /** Cached undirected edge view (edges + reversed, self-loops dropped),
     * optionally pre-partitioned so downstream per-key aggregations reuse
     * the shuffle. When pre-partitioning, the repartition runs BEFORE the
@@ -1272,7 +1252,7 @@ object GraphOps {
     val e0 = g.edges.select(col("src"), col("dst"))
     val ud = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
-    eagerCached(
+    CacheScope.cached(
       partitionOn.fold(ud.distinct())(p => ud.repartition(p).distinct()))
   }
 
@@ -1285,7 +1265,7 @@ object GraphOps {
                                   partitionOn: Option[Column]): DataFrame = {
     val ud = canon.select(col("u").as("src"), col("v").as("dst"))
       .union(canon.select(col("v").as("src"), col("u").as("dst")))
-    eagerCached(partitionOn.fold(ud)(p => ud.repartition(p)))
+    CacheScope.cached(partitionOn.fold(ud)(p => ud.repartition(p)))
   }
 
   /** One-level Louvain refinement: every node synchronously evaluates
@@ -1380,18 +1360,17 @@ object GraphOps {
   def temporalReachability(tedges: DataFrame, seeds: DataFrame,
                            rounds: Int): DataFrame = {
     require(rounds >= 1)
-    val e = eagerCached(
+    val e = CacheScope.cached(
       tedges.select(col("src"), col("dst"), col("t").cast("long").as("t"))
         .repartition(col("dst")))
     var arr = seeds.select(col("key")).distinct()
       .withColumn("arr", lit(-1L))
     for (_ <- 1 to rounds) {
-      arr = statsReset(arr.unionByName(
+      arr = CacheScope.checkpoint(arr.unionByName(
           e.join(arr.select(col("key").as("src"), col("arr")), "src")
             .filter(col("t") >= col("arr"))
             .select(col("dst").as("key"), col("t").as("arr")))
-        .groupBy("key").agg(min(col("arr")).as("arr"))
-        .localCheckpoint(true))
+        .groupBy("key").agg(min(col("arr")).as("arr")))
     }
     arr
   }
@@ -1530,7 +1509,7 @@ object GraphOps {
       .agg(max(regs.head).as("r0"),
         regs.tail.zipWithIndex.map { case (r, i) =>
           max(r).as(s"r${i + 1}") }: _*)
-    statsReset(agg.localCheckpoint(true))
+    CacheScope.checkpoint(agg)
   }
 
   private def anfPerKey(st: DataFrame, buckets: Int, rankCap: Int): DataFrame = {
@@ -1640,8 +1619,7 @@ object GraphOps {
     * Scale shape: each level is one adjacency-sized contraction shuffle
     * plus a move pass over a graph that SHRINKS to one node per
     * community — levels get strictly cheaper; per-level state is
-    * localCheckpoint'ed + statsReset per the repo's iterative-loop
-    * discipline (the projection joins each level map once). */
+    * checkpointed (the projection joins each level map once). */
   def louvainMultiLevel(labels: DataFrame, und: DataFrame, maxLevels: Int,
                         level1: Option[DataFrame] = None): DataFrame = {
     require(maxLevels >= 1, "maxLevels must be >= 1")
@@ -1649,17 +1627,14 @@ object GraphOps {
     // read the pass output, and an unmaterialized plan would run the full
     // gain pipeline once per consumer (level1 arrives pre-persisted from
     // the session cache when provided)
-    val out1 = level1.getOrElse(statsReset(
+    val out1 = level1.getOrElse(CacheScope.checkpoint(
       louvainOneLevel(labels, und)
-        .select(col("key"), col("label0"), col("label1"))
-        .localCheckpoint(true)))
+        .select(col("key"), col("label0"), col("label1"))))
     var moves = Vector(
       out1.filter(col("label0") =!= col("label1")).count())
-    var acc = statsReset(out1.select(col("key"), col("label1"))
-      .localCheckpoint(true))
-    var g = statsReset(contractWeighted(und.withColumn("w", lit(1L)),
-        acc.select(col("key"), col("label1").as("label")))
-      .localCheckpoint(true))
+    var acc = CacheScope.checkpoint(out1.select(col("key"), col("label1")))
+    var g = CacheScope.checkpoint(contractWeighted(und.withColumn("w", lit(1L)),
+        acc.select(col("key"), col("label1").as("label"))))
     var lastCol = "label1"
     var stopped = false
     for (lvl <- 2 to maxLevels) {
@@ -1674,22 +1649,19 @@ object GraphOps {
         // one materialization per level: the count, the projection join
         // and the next contraction all read this checkpoint — an
         // unmaterialized pass would re-run its gain pipeline per consumer
-        val outK = statsReset(louvainOneLevelWeighted(superLab, g)
-          .select(col("key"), col("label0"), col("label1"))
-          .localCheckpoint(true))
+        val outK = CacheScope.checkpoint(louvainOneLevelWeighted(superLab, g)
+          .select(col("key"), col("label0"), col("label1")))
         val movedK = outK.filter(col("label0") =!= col("label1")).count()
         moves :+= movedK
         if (movedK == 0L) {
           stopped = true
           acc = acc.withColumn(cname, col(lastCol))
         } else {
-          acc = statsReset(acc
+          acc = CacheScope.checkpoint(acc
             .join(outK.select(col("key").as(lastCol),
-              col("label1").as(cname)), lastCol)
-            .localCheckpoint(true))
-          g = statsReset(contractWeighted(g,
-              outK.select(col("key"), col("label1").as("label")))
-            .localCheckpoint(true))
+              col("label1").as(cname)), lastCol))
+          g = CacheScope.checkpoint(contractWeighted(g,
+              outK.select(col("key"), col("label1").as("label"))))
           lastCol = cname
         }
       }
@@ -1851,9 +1823,9 @@ object GraphOps {
         .join(rg.bc(active.select(col("key").as("dst"))), "dst")
       val minNb = ae.groupBy(col("dst").as("key")).agg(min(col("psrc")).as("pmin"))
       // checkpointed: each round's winners feed the result AND the removal
-      val mis = statsReset(active.join(rg.bc(minNb), Seq("key"), "left")
+      val mis = CacheScope.checkpoint(active.join(rg.bc(minNb), Seq("key"), "left")
         .filter(col("pmin").isNull || col("p") < col("pmin"))
-        .select("key").localCheckpoint(true))
+        .select("key"))
       // referenced twice (result + anti-join): under the broadcast regime
       // both references re-evaluate two broadcast joins over CACHED
       // inputs — cheaper than a blocking localCheckpoint job per round;
@@ -1861,7 +1833,7 @@ object GraphOps {
       val removedRaw = ae.join(rg.bc(mis.withColumnRenamed("key", "src")), "src")
         .select(col("dst").as("key")).distinct()
       val removed =
-        if (rg.small) removedRaw else statsReset(removedRaw.localCheckpoint(true))
+        if (rg.small) removedRaw else CacheScope.checkpoint(removedRaw)
       result = result
         .unionByName(mis.select(col("key"), lit("mis").as("status"),
           lit(r).as("round")))
@@ -1869,7 +1841,7 @@ object GraphOps {
           lit(r).as("round")))
       active = active.join(rg.bc(mis), Seq("key"), "left_anti")
         .join(rg.bc(removed), Seq("key"), "left_anti")
-      if (r < rounds) active = statsReset(active.localCheckpoint(true))
+      if (r < rounds) active = CacheScope.checkpoint(active)
     }
     result.unionByName(
       active.select(col("key"), lit("active").as("status"), lit(0).as("round")))
@@ -1967,8 +1939,7 @@ object GraphOps {
         .groupBy("c").agg(min(col("m")).as("m"))
         .select(col("c"), col("m.w").as("w"), col("m.u").as("u"),
           col("m.v").as("v"), col("m.cu").as("ecu"), col("m.cv").as("ecv"))
-        .localCheckpoint(true)
-        .transform(statsReset)
+        .transform(CacheScope.checkpoint)
       forest = forest.unionByName(
         picks.select(col("u"), col("v"), col("w")).distinct()
           .withColumn("round", lit(r)))
@@ -1981,9 +1952,8 @@ object GraphOps {
         .select(col("comp").as("node"), coalesce(col("succ0"), col("comp")).as("succ"))
       val relabel = pointerDoublingLabels(pg)
         .select(col("node").as("comp"), col("cycle_rep"))
-      labels = statsReset(labels.join(rg.bc(relabel), "comp")
-        .select(col("key"), col("cycle_rep").as("comp"))
-        .localCheckpoint(true))
+      labels = CacheScope.checkpoint(labels.join(rg.bc(relabel), "comp")
+        .select(col("key"), col("cycle_rep").as("comp")))
     }
     forest
   }
@@ -2101,27 +2071,24 @@ object GraphOps {
           Seq("u", "p"), "left_anti")
         .join(rg.bc(dupAt.select(col("n").as("v"), col("p"))),
           Seq("v", "p"), "left_anti")
-        .select("u", "v").localCheckpoint(true)
-        .transform(statsReset)
-      val matchedNodes = statsReset(
+        .select("u", "v").transform(CacheScope.checkpoint)
+      val matchedNodes = CacheScope.checkpoint(
         won.select(explode(array(col("u"), col("v"))).as("n"))
-          .distinct().localCheckpoint(true))
+          .distinct())
       val blocked = active.join(won, Seq("u", "v"), "left_anti")
         .join(rg.bc(matchedNodes.withColumnRenamed("n", "u")), Seq("u"), "left_semi")
         .select("u", "v")
         .unionByName(active.join(won, Seq("u", "v"), "left_anti")
           .join(rg.bc(matchedNodes.withColumnRenamed("n", "v")), Seq("v"), "left_semi")
           .select("u", "v"))
-        .distinct().localCheckpoint(true)
-        .transform(statsReset)
+        .distinct().transform(CacheScope.checkpoint)
       result = result
         .unionByName(won.select(col("u"), col("v"), lit("matched").as("status"),
           lit(r).as("round")))
         .unionByName(blocked.select(col("u"), col("v"), lit("blocked").as("status"),
           lit(r).as("round")))
-      active = statsReset(active.join(rg.bc(won), Seq("u", "v"), "left_anti")
-        .join(rg.bc(blocked), Seq("u", "v"), "left_anti")
-        .localCheckpoint(true))
+      active = CacheScope.checkpoint(active.join(rg.bc(won), Seq("u", "v"), "left_anti")
+        .join(rg.bc(blocked), Seq("u", "v"), "left_anti"))
     }
     result.unionByName(
       active.select(col("u"), col("v"), lit("open").as("status"),
@@ -2234,9 +2201,9 @@ object GraphOps {
         .join(rg.bc(unc.select(col("key").as("src"), col("p").as("psrc"))), "src")
         .join(rg.bc(unc.select(col("key").as("dst"))), "dst")
         .groupBy(col("dst").as("key")).agg(max(col("psrc")).as("pmax"))
-      val ready = statsReset(unc.join(rg.bc(pmax), Seq("key"), "left")
+      val ready = CacheScope.checkpoint(unc.join(rg.bc(pmax), Seq("key"), "left")
         .filter(col("pmax").isNull || col("p") > col("pmax"))
-        .select("key").localCheckpoint(true))
+        .select("key"))
       val used = ud.join(rg.bc(ready.withColumnRenamed("key", "dst")), "dst")
         .join(rg.bc(colors.select(col("key").as("src"), col("color"))), "src")
         .select(col("dst").as("key"), col("color")).distinct()
@@ -2245,11 +2212,10 @@ object GraphOps {
           explode(sequence(lit(0), coalesce(col("deg"), lit(0)))).as("c"))
         .join(used.withColumnRenamed("color", "c"), Seq("key", "c"), "left_anti")
         .groupBy("key").agg(min(col("c")).as("color"))
-      colors = statsReset(colors
-        .unionByName(mex.withColumn("round", lit(r)))
-        .localCheckpoint(true))
-      unc = statsReset(
-        unc.join(rg.bc(ready), Seq("key"), "left_anti").localCheckpoint(true))
+      colors = CacheScope.checkpoint(colors
+        .unionByName(mex.withColumn("round", lit(r))))
+      unc = CacheScope.checkpoint(
+        unc.join(rg.bc(ready), Seq("key"), "left_anti"))
     }
     nodes.join(colors, Seq("key"), "left")
       .select(col("key"), col("color"), col("round"))
@@ -2467,8 +2433,7 @@ object GraphOps {
     * form), then a support-sized final aggregate. No corpus-sized frame is
     * ever joined unkeyed. */
   def edgeSupportHist(und: DataFrame): DataFrame = {
-    val eo = degreeOriented(und.select(col("u"), col("v")))
-      .localCheckpoint(true)
+    val eo = CacheScope.checkpoint(degreeOriented(und.select(col("u"), col("v"))))
     val wc = eo.select(col("a").as("x3"), col("b").as("z3"))
     val tri = orientedWedgesOf(eo)
       .join(wc, col("x") === col("x3") && col("z") === col("z3"))
@@ -2529,15 +2494,15 @@ object GraphOps {
     val lex = g.edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct().localCheckpoint(true)
-    var e = degreeOriented(lex).localCheckpoint(true)
+      .distinct().transform(CacheScope.checkpoint)
+    var e = degreeOriented(lex).transform(CacheScope.checkpoint)
     // No fixpoint early-exit here (unlike [[bitruss]]): the gate runs 2
     // rounds on a graph whose peel keeps cascading, so a per-round
     // convergence count is pure overhead — measured slower in r18.
     for (_ <- 1 to rounds) {
       e = e.join(support(e), Seq("a", "b"), "left")
         .filter(coalesce(col("supp"), lit(0L)) >= k - 2)
-        .select("a", "b").localCheckpoint(true)
+        .select("a", "b").transform(CacheScope.checkpoint)
     }
     e.join(support(e), Seq("a", "b"), "left")
       .select(least(col("a"), col("b")).as("u"),
@@ -2607,19 +2572,6 @@ object GraphOps {
     lbl.withColumn("basin_size", count(lit(1)).over(wB))
   }
 
-  /** Drop a checkpointed frame's inherited size estimate by re-wrapping
-    * its (already materialized) RDD in a fresh LogicalRDD. localCheckpoint
-    * PRESERVES the origin plan's sizeInBytes, and a self-joining loop
-    * SQUARES that BigInt every iteration — one doubling chain reaches
-    * ~10⁶-bit integers (tolerable), but a loop that checkpoints a
-    * doubling RESULT and doubles again grows double-exponentially and
-    * the stats visitor's BigInt products take minutes of driver CPU
-    * (measured: boruvkaForest hung planning round 2 on a 4-node graph).
-    * The reset costs nothing at runtime: the RDD is the checkpointed one;
-    * only the statistics become the flat default again. */
-  private[graft] def statsReset(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.rdd, df.schema)
-
   /** The shared doubling loop: final state (node, jump = f^(2^rounds),
     * mn = min over the nodes 1..2^rounds steps ahead).
     *
@@ -2653,22 +2605,21 @@ object GraphOps {
     // ~√n-length cycles) pass probeFrom >= rounds
     def probesAt(r: Int): Boolean = r % 4 == 0 && r >= probeFrom && r < rounds
     val probing = (1 until rounds).exists(probesAt)
-    var t = statsReset(succ.select(col("node"), col("succ").as("jump"),
-      col("succ").as("mn")).localCheckpoint(true))
+    var t = CacheScope.checkpoint(succ.select(col("node"), col("succ").as("jump"),
+      col("succ").as("mn")))
     var stable = false
     var r = 0
     while (r < rounds && !stable) {
       val o = t.select(col("node").as("n2"), col("jump").as("j2"),
         col("mn").as("m2"))
       val base = t.join(o, t("jump") === o("n2"))
-      val nxt = statsReset((
+      val nxt = CacheScope.checkpoint(
         if (probing)
           base.select(t("node"), col("j2").as("jump"),
             least(col("mn"), col("m2")).as("mn"), t("jump").as("__jprev"))
         else
           base.select(t("node"), col("j2").as("jump"),
-            least(col("mn"), col("m2")).as("mn"))
-        ).localCheckpoint(true))
+            least(col("mn"), col("m2")).as("mn")))
       r += 1
       if (probesAt(r))
         stable = nxt.filter(col("jump") =!= col("__jprev")).isEmpty
@@ -2767,9 +2718,9 @@ object GraphOps {
     * a seed frame (`key`): after each of `rounds` frontier expansions,
     * the size of the reached set — (round, n_reached) rows. Each round
     * is one adjacency semi-join + distinct, state is the reached set
-    * only (sparse-state discipline), localCheckpoint + statsReset per
-    * round. The counting frames read the checkpointed states, so the
-    * curve costs one action over materialized RDDs. */
+    * only (sparse-state discipline), checkpointed per round. The
+    * counting frames read the checkpointed states, so the curve costs
+    * one action over materialized RDDs. */
   def bfsReachCurve(und: DataFrame, seeds: DataFrame,
                     rounds: Int): DataFrame =
     bfsReachCurveTagged(und.withColumn("variant", lit("_")),
@@ -2793,11 +2744,11 @@ object GraphOps {
     var reached = seedsTagged.select(col("variant"), col("key")).distinct()
     var out: DataFrame = null
     for (r <- 1 to rounds) {
-      reached = statsReset(reached.unionByName(
+      reached = CacheScope.checkpoint(reached.unionByName(
           adj.join(reached.withColumnRenamed("key", "a"),
               Seq("variant", "a"))
             .select(col("variant"), col("b").as("key")))
-        .distinct().localCheckpoint(true))
+        .distinct())
       val c = reached.groupBy("variant")
         .agg(count(lit(1)).as("n_reached"))
         .select(col("variant"), lit(r).as("round"), col("n_reached"))
@@ -2976,9 +2927,9 @@ object GraphOps {
     * Scale shape: two directed BFS frontiers (forward + backward) expand
     * as ONE tagged loop over a variant-keyed adjacency cache — per round
     * one keyed equi-join + distinct on the SPARSE reached set (the
-    * gx_attack discipline), checkpoint + statsReset per the iterative-op
-    * rules; the final classification is two reached-set-sized left joins
-    * against the node frame. Nothing node² anywhere. */
+    * gx_attack discipline), checkpointed per round; the final
+    * classification is two reached-set-sized left joins against the node
+    * frame. Nothing node² anywhere. */
   def bowtieCensus(edges: DataFrame, seeds: DataFrame,
                    rounds: Int): DataFrame = {
     require(rounds >= 1)
@@ -2993,11 +2944,11 @@ object GraphOps {
       .withColumn("variant", explode(array(lit("f"), lit("b"))))
       .select(col("variant"), col("key")).distinct()
     for (_ <- 1 to rounds) {
-      reached = statsReset(reached.unionByName(
+      reached = CacheScope.checkpoint(reached.unionByName(
           adj.join(reached.withColumnRenamed("key", "a"),
               Seq("variant", "a"))
             .select(col("variant"), col("b").as("key")))
-        .distinct().localCheckpoint(true))
+        .distinct())
     }
     val nodes = e.select(col("src").as("key"))
       .unionByName(e.select(col("dst").as("key"))).distinct()
@@ -3057,9 +3008,8 @@ object GraphOps {
     * round is one adjacency join + one sorted per-node aggregation
     * (map-side combinable up to the sort), labels are md5-derived i64
     * ([[graft.functions.TextFunctions.hash60]]) so the DuckDB
-    * string_agg twin replays bit-for-bit; per-round localCheckpoint +
-    * statsReset per the iterative-op discipline. Returns
-    * (key, l0..lR). */
+    * string_agg twin replays bit-for-bit; state checkpointed per round.
+    * Returns (key, l0..lR). */
   def wlRefine(und: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1)
     val adj = CacheScope.cached(
@@ -3074,14 +3024,13 @@ object GraphOps {
         .join(labels.select(col("key").as("b"), col(prev).as("nl")), "b")
         .groupBy(col("a"))
         .agg(sort_array(collect_list(col("nl"))).as("nls"))
-      labels = statsReset(labels
+      labels = CacheScope.checkpoint(labels
         .join(nb, labels("key") === nb("a")).drop("a")
         .withColumn(s"l$r", graft.functions.TextFunctions.hash60(
           concat(col(prev).cast("string"), lit("|"),
             array_join(expr("transform(nls, x -> cast(x as string))"),
               ","))))
-        .drop("nls")
-        .localCheckpoint(true))
+        .drop("nls"))
     }
     labels
   }
@@ -3226,14 +3175,14 @@ object GraphOps {
     * enumerate only from the left side with hub-capped degrees (cap
     * applied ONCE on the input, like kTruss's one-time orientation;
     * degrees only shrink under peeling), support aggregates are
-    * pair-keyed sums, and each round's state checkpoints + statsResets
-    * (the iterative-loop discipline — support() references e twice). */
+    * pair-keyed sums, and each round's state is checkpointed (support()
+    * references e twice). */
   def bitruss(edges: DataFrame, rounds: Int = 3,
               maxDeg: Long = 64, q: Double = 0.25): DataFrame = {
     val e0 = edges.select(col("src"), col("dst")).distinct()
     val keep = e0.groupBy("src").agg(count(lit(1)).as("d"))
       .filter(col("d") <= maxDeg).select("src")
-    var e = e0.join(keep, Seq("src"), "left_semi").localCheckpoint(true)
+    var e = e0.join(keep, Seq("src"), "left_semi").transform(CacheScope.checkpoint)
     def support(ed: DataFrame): DataFrame = {
       val w = ed.select(col("src"), col("dst").as("u"))
         .join(ed.select(col("src"), col("dst").as("v")), Seq("src"))
@@ -3272,9 +3221,9 @@ object GraphOps {
     for (r <- 1 to rounds if !converged) {
       val sup = if (r == 1) s0 else CacheScope.cached(support(e))
       lastSup = sup
-      e = statsReset(e.join(sup, Seq("src", "dst"), "left")
+      e = CacheScope.checkpoint(e.join(sup, Seq("src", "dst"), "left")
         .filter(coalesce(col("supp"), lit(0L)) >= k)
-        .select("src", "dst").localCheckpoint(true))
+        .select("src", "dst"))
       val c = e.count()
       if (c == prevCnt) converged = true else prevCnt = c
     }

@@ -68,10 +68,9 @@ object GxQueries {
                                            n: Int = 50): DataFrame = {
     // the fp score table is referenced twice (the top-n cut AND the
     // tie-class score lookup joined under the float side) — materialize
-    // once; statsReset frees the checkpoint's inherited plan stats
-    val fpAll = GraphOps.statsReset(
-      GraphOps.fixedPointPageRank(unionGraph(s, dir), iters = 5)
-        .localCheckpoint(true))
+    // once
+    val fpAll = CacheScope.checkpoint(
+      GraphOps.fixedPointPageRank(unionGraph(s, dir), iters = 5))
     val fp = fpAll.orderBy(col("r").desc, col("key")).limit(n)
       .select(col("key"), col("r").as("rank_fp"))
     val gxr = GraphXBridge.pageRank(unionGx(s, dir), iters = 5)
@@ -112,42 +111,41 @@ object GxQueries {
 
   /** Session-shared round-1 WL structural classes — the partition both
     * agreement grades (gx_ari, gx_nmi) compare against LPA; the
-    * adjacency join + checkpoint runs once per session. statsReset per
-    * the checkpoint discipline (two consumers join it). */
+    * adjacency join + checkpoint runs once per session (two consumers
+    * join it). */
   private def sharedWl1(s: SparkSession, dir: String): DataFrame =
-    GraphOps.statsReset(CacheScope.session("wl1", s, dir)(
-      GraphOps.wlRefine(sharedUnd(s, dir), rounds = 1)))
+    CacheScope.session("wl1", s, dir)(
+      GraphOps.wlRefine(sharedUnd(s, dir), rounds = 1))
 
   /** Session-shared one-level Louvain refinement — gx_louvain1 emits it,
     * gx_louvain_q audits it, gx_louvain2 contracts on it; the gain
-    * pipeline builds once per session (the lpa5 pattern). statsReset on
-    * the way out: the persisted plan's sizeInBytes is a product over the
-    * whole gain join tree, and consumers that join this frame twice
-    * (louvain2's contraction) square it into the documented
-    * BigInt-planning hang (270s observed, execution itself ~1s). */
+    * pipeline builds once per session (the lpa5 pattern). Checkpointed
+    * inside the build: a session frame's analyzed plan is its whole build
+    * plan, and louvain2 joins this one twice and again in its weighted
+    * pass, so the gain tree (with lpa5's rounds under it) would be
+    * deduplicated per self-join until the driver runs out of heap. */
   private def sharedLouvain1(s: SparkSession, dir: String): DataFrame =
-    GraphOps.statsReset(CacheScope.session("louvain1", s, dir)(
+    CacheScope.session("louvain1", s, dir)(CacheScope.checkpoint(
       GraphOps.louvainOneLevel(sharedLpa(s, dir), sharedUnd(s, dir))))
 
   /** Session-shared 3-level Louvain loop output — gx_louvain_n emits it,
     * gx_louvain_nq grades its modularity payoff; the loop (driver-count
-    * actions + per-level checkpoints) runs once per session. statsReset
-    * for the same reason as louvain1. */
+    * actions + per-level checkpoints) runs once per session. */
   private def sharedLouvainN(s: SparkSession, dir: String): DataFrame =
-    GraphOps.statsReset(CacheScope.session("louvain_n", s, dir)(
+    CacheScope.session("louvain_n", s, dir)(
       GraphOps.louvainMultiLevel(sharedLpa(s, dir), sharedUnd(s, dir),
-        maxLevels = 3, level1 = Some(sharedLouvain1(s, dir)))))
+        maxLevels = 3, level1 = Some(sharedLouvain1(s, dir))))
 
   /** Session-shared node2vec walks (S-starts, 4 steps) — gx_walks_n2v
     * emits them, gx_walk_pairs turns them into skip-gram rows; the
-    * 4-step iterative pass runs once per session. statsReset: the pair
-    * query SELF-JOINS this frame (the checkpoint-squaring discipline). */
+    * 4-step iterative pass runs once per session; the pair query
+    * self-joins it. */
   private def sharedWalks(s: SparkSession, dir: String): DataFrame =
-    GraphOps.statsReset(CacheScope.session("n2v_walks", s, dir) {
+    CacheScope.session("n2v_walks", s, dir) {
       val g = unionGraph(s, dir)
       GraphOps.node2vecWalks(g.edges.select(col("src"), col("dst")),
         g.nodes.filter(col("key").startsWith("S")).select(col("key")), 4)
-    })
+    }
 
   /** Session-shared LPA labels (5 sync iterations) — gx_labelprop emits
     * them directly and gx_modularity grades their community quality; the
@@ -163,20 +161,19 @@ object GxQueries {
     * iterative pass gx_closeness, gx_diameter, gx_bipartite and
     * gx_hopdist all read. The landmark keys are a deterministic hash
     * sample recomputed per call (a tiny driver probe); only the BFS state
-    * frame is cached. The node-sized state is localCheckpoint'ed (then
-    * statsReset per the checkpoint discipline — gx_bipartite joins it
-    * twice) INSIDE the cached build, so a later eviction of the persisted
-    * blocks recomputes a trivial RDD scan, never the whole 4-round
-    * iterative pass — the round-14 mechanism behind gx_bipartite's
-    * unexplained 8.4 s (2.4× its own plan cost with zero code changes). */
+    * frame is cached. The node-sized state is checkpointed INSIDE the
+    * cached build (gx_bipartite joins it twice), so a later eviction of
+    * the persisted blocks recomputes a trivial RDD scan, never the whole
+    * 4-round iterative pass — the round-14 mechanism behind
+    * gx_bipartite's unexplained 8.4 s (2.4× its own plan cost with zero
+    * code changes). */
   private def sharedLmBfs(s: SparkSession, dir: String)
       : (Array[String], org.apache.spark.sql.DataFrame) = {
     val g = unionGraph(s, dir)
     val lm = GraphOps.landmarkKeys(g, 4)
-    (lm, CacheScope.session("lm_bfs_4x4", s, dir)(GraphOps.statsReset(
+    (lm, CacheScope.session("lm_bfs_4x4", s, dir)(CacheScope.checkpoint(
       GraphOps.landmarkBfsState(g, nLandmarks = 4, rounds = 4,
-          canonFrom = Some(sharedUnd(s, dir)))._2
-        .localCheckpoint(true))))
+          canonFrom = Some(sharedUnd(s, dir)))._2)))
   }
 
   /** Forces the session-shared GraphX graph cache (vertex + edge RDDs) and
@@ -966,7 +963,7 @@ object GxQueries {
       val und = e.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v")).distinct()
-        .localCheckpoint(true)
+        .transform(CacheScope.checkpoint)
       val deg = und.select(col("u").as("n"))
         .unionByName(und.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("d"))
@@ -1008,7 +1005,7 @@ object GxQueries {
       val und = e.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v")).distinct()
-        .localCheckpoint(true)
+        .transform(CacheScope.checkpoint)
       val a = und.select(col("u").as("x"), col("v").as("y"))
       val b = und.select(col("u").as("y2"), col("v").as("z"))
       val c = und.select(col("u").as("x3"), col("v").as("z3"))

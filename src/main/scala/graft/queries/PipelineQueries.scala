@@ -367,7 +367,7 @@ object PipelineQueries {
         .select(d.as("media_id"),
           unhex(plantedTexturedBmpHex(d, pert = 0)).as("content"))
       Multimodal.phashBandPieces(Multimodal.dhash64(base).toDF())
-        .localCheckpoint(true)
+        .transform(CacheScope.checkpoint)
     }
 
   /** The planted DELTA media of the incremental phash gates: one copy
@@ -1201,7 +1201,7 @@ object PipelineQueries {
       val pairs = sharedMinhashCands(s, dir).filter(col("est_sim") >= 0.5)
         .select(col("a").cast("string").as("src"),
           col("b").cast("string").as("dst"))
-        .localCheckpoint(true)
+        .transform(CacheScope.checkpoint)
       val comps = graft.gx.GraphXBridge.connectedComponents(
         graft.gx.GraphXBridge.toGraphX(
           graft.KinGraph.fromEdges(pairs.withColumn("etype", lit(0)))))
@@ -1226,7 +1226,7 @@ object PipelineQueries {
       val pairs = sharedMinhashCands(s, dir).filter(col("est_sim") >= 0.5)
         .select(col("a").cast("string").as("src"),
           col("b").cast("string").as("dst"))
-        .localCheckpoint(true)
+        .transform(CacheScope.checkpoint)
       val comps = graft.gx.GraphXBridge.connectedComponents(
         graft.gx.GraphXBridge.toGraphX(
           graft.KinGraph.fromEdges(pairs.withColumn("etype", lit(0)))))
@@ -1446,8 +1446,7 @@ object PipelineQueries {
     // key equi join, ONE update-mode count aggregation, zero-window
     // docs reattach post-drain. Shares d_span_dup_frac's oracle
     "s_stream_span_frac" -> ((s, dir) => {
-      val dupKeys = Dedup.dupSpanKeySetFrom(sharedSpanRows(s, dir))
-        .localCheckpoint(true)
+      val dupKeys = CacheScope.checkpoint(Dedup.dupSpanKeySetFrom(sharedSpanRows(s, dir)))
       val stream = graft.streaming.EventStreams.readDocuments(s, dir)
       val agg = graft.streaming.EventStreams.spanDupFractionStream(
         stream, dupKeys, "doc_id", "text")
@@ -3702,7 +3701,7 @@ object PipelineQueries {
       def sideSigs(cond: Column) = Dedup.minhashSignaturesFrom(
         sharedShingles(s, dir).filter(cond))
       val bandIdx = Dedup.minhashBandIndex(sideSigs(col("doc_id") < cutoff))
-        .localCheckpoint(true)
+        .transform(CacheScope.checkpoint)
       val stream = graft.streaming.EventStreams.readDocuments(s, dir)
         .filter(col("doc_id") >= cutoff)
       val hits = graft.streaming.EventStreams.minhashHitsStream(
@@ -3741,7 +3740,7 @@ object PipelineQueries {
       // re-plans per micro-batch, and without the checkpoint each batch
       // re-runs the full corpus df aggregation (7.7s -> plan-sized)
       val dropSet = Dedup.boilerplateDropSet(plant(docs(s, dir)),
-        "doc_id", "source", "text").localCheckpoint(true)
+        "doc_id", "source", "text").transform(CacheScope.checkpoint)
       val stream = plant(graft.streaming.EventStreams.readDocuments(s, dir))
       val cleaned = graft.streaming.EventStreams
         .boilerplateStripStream(stream, dropSet, "doc_id", "source", "text")
@@ -3766,7 +3765,7 @@ object PipelineQueries {
     "s_stream_clean" -> ((s, dir) => {
       val planted = cleanPlant(docs(s, dir))
       val dropSets = Dedup.boilerplateDropSets(planted,
-        "doc_id", "source", "text").localCheckpoint(true)
+        "doc_id", "source", "text").transform(CacheScope.checkpoint)
       // batch replay of the stateless prefix (the cleanPipeline stage
       // chain, shared — not a second copy) derives the corpus statics
       val (bWithN, cutFrame) =
@@ -3779,9 +3778,8 @@ object PipelineQueries {
         else lit(cutRow.getDouble(0))
       val bSurv = bWithN.filter(col("n_tok") >= cut)
         .select("doc_id", "text")
-      val survIds = bSurv.select("doc_id").localCheckpoint(true)
-      val dupKeys = Dedup.dupSpanKeySet(bSurv, "doc_id", "text")
-        .localCheckpoint(true)
+      val survIds = bSurv.select("doc_id").transform(CacheScope.checkpoint)
+      val dupKeys = CacheScope.checkpoint(Dedup.dupSpanKeySet(bSurv, "doc_id", "text"))
       // the stream: four stateless stages, then the one stateful span agg
       val stream0 = cleanPlant(
         graft.streaming.EventStreams.readDocuments(s, dir))
@@ -3880,11 +3878,11 @@ object PipelineQueries {
         tokenCount(col("text")).as("n_tokens"))
       val assign = Sampling.seqPack(withLen, "doc_id", "n_tokens",
           ctxLen = 512, groups = 8)
-        .select("doc_id", "pack_id").localCheckpoint(true)
+        .select("doc_id", "pack_id").transform(CacheScope.checkpoint)
       val bins = assign.select("pack_id").distinct()
       val pos = Sampling.epochOrder(bins, "pack_id", 1, "pos_e1")
         .join(Sampling.epochOrder(bins, "pack_id", 2, "pos_e2"), "pack_id")
-        .localCheckpoint(true)
+        .transform(CacheScope.checkpoint)
       val stream = graft.streaming.EventStreams.readDocuments(s, dir)
         .select(col("doc_id"), tokenCount(col("text")).as("n_tokens"))
         .join(assign, "doc_id")

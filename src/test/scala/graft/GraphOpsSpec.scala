@@ -644,6 +644,38 @@ class GraphOpsSpec extends SparkSpec {
     assert(GraphOps.kCoreAdaptive(edgeless, kOffset = 1, rounds = 3).isEmpty)
   }
 
+  test("every checkpointing op outside the regime table runs on an empty edge frame") {
+    // each of these checkpoints loop state that an empty edge frame
+    // leaves with zero rows; a zero-row checkpoint must plan and run
+    val none = Seq.empty[(String, String)].toDF("src", "dst")
+    val noneUnd = none.toDF("u", "v")
+    val edgeless = KinGraph(Seq("a", "b", "c").toDF("key"), none.withColumn("etype", lit(0)))
+    val seeds = Seq("a").toDF("key")
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "hashWalks" -> (() => GraphOps.hashWalks(none, seeds, 3)),
+      "node2vecWalks" -> (() => GraphOps.node2vecWalks(none, seeds, 2)),
+      "jaccardPairs" -> (() => GraphOps.jaccardPairs(edgeless, 10)),
+      "temporalReachability" -> (() => GraphOps.temporalReachability(
+        none.withColumn("t", lit(0L)), seeds, 3)),
+      "louvainMultiLevel" -> (() => GraphOps.louvainMultiLevel(
+        Seq("a" -> "C0", "b" -> "C1").toDF("key", "label"), noneUnd, maxLevels = 2)),
+      "edgeSupportHist" -> (() => GraphOps.edgeSupportHist(noneUnd)),
+      "kTruss" -> (() => GraphOps.kTruss(edgeless, k = 3, rounds = 2)),
+      "bitruss" -> (() => GraphOps.bitruss(
+        Seq.empty[(Long, Long)].toDF("src", "dst"), rounds = 2)),
+      "pointerDoublingLabels" -> (() => GraphOps.pointerDoublingLabels(
+        Seq.empty[(Long, Long)].toDF("node", "succ"), rounds = 3)),
+      "bfsReachCurveTagged" -> (() => GraphOps.bfsReachCurveTagged(
+        noneUnd.withColumn("variant", lit("x")),
+        seeds.withColumn("variant", lit("x")), 3)),
+      "bowtieCensus" -> (() => GraphOps.bowtieCensus(none, seeds, rounds = 2)),
+      "wlRefine" -> (() => GraphOps.wlRefine(noneUnd, rounds = 2)))
+    val failed = ops.flatMap { case (name, run) =>
+      scala.util.Try(run().collect()).failed.toOption.map(e => s"$name: $e")
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
   test("boruvkaForest: hand-weighted graph yields the exact MST") {
     val forest = GraphOps.boruvkaForest(mstGraph, rounds = 3,
         weightsFrom = Some(mstWeights))

@@ -737,4 +737,64 @@ class PlanSpec extends SparkSpec {
     assert(hashUserExchanges == 1,
       s"exactly one user_id exchange expected:\n${plan.take(1200)}")
   }
+
+  test("a checkpoint reports its own size: flat over a self-join loop, broadcast when small") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    // the same 500 rows each round: a checkpoint that kept the origin
+    // plan's estimate would square it per round, one with no estimate
+    // would report Long.MaxValue
+    var st = CacheScope.checkpoint(spark.range(0, 2000)
+      .groupBy(($"id" % 500).as("k")).agg(max($"id").as("v")))
+    val sizes = (1 to 5).map { _ =>
+      st = CacheScope.checkpoint(st.as("a").join(st.as("b"), "k")
+        .select($"k", $"a.v".as("v")))
+      st.queryExecution.optimizedPlan.stats.sizeInBytes
+    }
+    assert(sizes.distinct.size == 1 && sizes.head < Long.MaxValue,
+      s"checkpoint size per round: $sizes")
+    val big = spark.range(0, 200000).select(($"id" % 500).as("k"), $"id".as("w"))
+    val join = big.join(st, "k").queryExecution.sparkPlan.collectFirst {
+      case j: BroadcastHashJoinExec => j
+    }.getOrElse(fail("no broadcast join planned"))
+    val built = join.buildSide match {
+      case BuildLeft => join.left
+      case BuildRight => join.right
+    }
+    assert(built.collectFirst { case r: RDDScanExec => r }.nonEmpty,
+      s"the small checkpoint must be the broadcast side:\n$join")
+  }
+
+  test("a materialized cache's repartition key needs no re-exchange: cached and a fresh session entry") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+    val helper =
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    // a distinct plan per scope, so the session entry is not served from
+    // the query-scope cache of the same plan
+    def frame(m: Int) = spark.range(0, 5000).select(($"id" % m).as("k"), $"id".as("v"))
+      .repartition($"k")
+    // the first groupBy(k) over the cache, as planned before it runs: the
+    // plan must read the cached partitioning, not re-shuffle the same rows
+    // on the same key (an unmaterialized cache reports none)
+    def reExchanges(cache: org.apache.spark.sql.DataFrame): Seq[ShuffleExchangeExec] = {
+      val plan = cache.groupBy("k").agg(sum("v")).queryExecution.executedPlan
+      assert(helper.collect(plan) { case s: InMemoryTableScanExec => s }.nonEmpty,
+        s"the query must read the cache:\n$plan")
+      helper.collect(plan) {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == ENSURE_REQUIREMENTS &&
+          e.outputPartitioning.toString.contains("k#") => e
+      }
+    }
+    try {
+      assert(reExchanges(CacheScope.cached(frame(97))).isEmpty, "query-scope cache")
+      CacheScope.drop("plan_repartition_k", spark, "plan")
+      assert(reExchanges(CacheScope.session("plan_repartition_k", spark, "plan")(frame(89))).isEmpty,
+        "session-scope cache")
+    } finally {
+      CacheScope.releaseAll()
+      CacheScope.drop("plan_repartition_k", spark, "plan")
+    }
+  }
 }
